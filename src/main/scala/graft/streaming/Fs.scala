@@ -36,6 +36,12 @@ object Fs {
     if (fs.exists(p)) fs.delete(p, true)
   }
 
+  /** Recursive delete of every path matching the glob `pattern`. */
+  def deleteGlob(spark: SparkSession, pattern: String): Unit = {
+    val (fs, p) = fsOf(pattern, conf(spark))
+    Option(fs.globStatus(p)).toSeq.flatten.foreach(st => fs.delete(st.getPath, true))
+  }
+
   def mkdirs(spark: SparkSession, path: String): Unit = {
     val (fs, p) = fsOf(path, conf(spark)); fs.mkdirs(p)
   }

@@ -1,6 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions.{col, lit, row_number}
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.Schemas
@@ -231,43 +233,74 @@ object PipelineMain {
       publishResults(spark, workDir)
     }
 
-  /** REDUCE + PUBLISH: the flagship per segment over the INGESTED
-    * tables (staged schema: uuid keys, *_time columns — the
+  /** The REDUCE: the flagship's top 50 per market segment over the
+    * INGESTED tables (staged schema: uuid keys, *_time columns — the
     * reference's reduce reads the same processed form,
-    * pipeline/reduce.py:43-74). Each segment's top-50 is computed to a
-    * STAGING path first and only then swapped into the served location
-    * (retire + rename), so the window where a result directory holds a
-    * HALF-written generation never exists — a concurrently-running
-    * [[Serve]] sees the old committed generation, a beat of
-    * absent-directory (its cache covers that), then the new one:
-    * read-your-republish, never a torn read. Idempotent — a republish
-    * overwrites its own staging and swaps again. Caller holds the
-    * pipeline lock (or is [[runLive]]'s generator loop, which takes
-    * it). */
-  def publishResults(spark: SparkSession, workDir: String): Unit = {
-    val tables = s"$workDir/tables"
-    val results = s"$workDir/results"
-    import org.apache.spark.sql.functions._
+    * pipeline/reduce.py:43-74), all segments in one pass: each table is
+    * scanned once, joined once, and `row_number() <= 50` per segment
+    * plans as a partial `WindowGroupLimit` before the segment exchange,
+    * so a map task ships at most 50 rows per segment and no row-sized
+    * relation funnels through one task. Columns: `c_mktsegment`,
+    * `l_orderkey`, `o_order_time`, `revenue`; within a segment, rank
+    * order is `revenue desc, l_orderkey`. */
+  private[graft] def segmentTop50(spark: SparkSession, tables: String): DataFrame = {
     val li = spark.read.parquet(s"$tables/lineitem")
     val ord = spark.read.parquet(s"$tables/orders")
     val cust = spark.read.parquet(s"$tables/customer")
     val cutoff = lit(Synthesize.OrdTgtHi).cast("timestamp")
+    val rank = Seq(col("revenue").desc, col("l_orderkey"))
+    ord.filter(col("o_order_time") < cutoff)
+      .join(cust.filter(col("c_mktsegment").isin(Segments: _*)), col("o_custkey") === col("c_custkey"))
+      .join(li.filter(col("l_ship_time") > cutoff), col("o_orderkey") === col("l_orderkey"))
+      .groupBy("c_mktsegment", "l_orderkey", "o_order_time")
+      .agg(graft.functions.Exact.exactSum(
+        col("l_extendedprice") * (lit(1) - col("l_discount")), 4).as("revenue"))
+      .withColumn("rn", row_number().over(Window.partitionBy("c_mktsegment").orderBy(rank: _*)))
+      .filter(col("rn") <= 50)
+      .drop("rn")
+      .repartition(col("c_mktsegment"))
+      .sortWithinPartitions(col("c_mktsegment") +: rank: _*)
+  }
+
+  /** REDUCE + PUBLISH: one Spark job computes every segment's top 50
+    * ([[segmentTop50]]) into ONE staging dir, `results/.stage`,
+    * partitioned by segment (one file per segment, rows in rank order,
+    * the segment column dropped so each file keeps the served schema),
+    * and only then swaps each `.stage/c_mktsegment=<SEG>` into the
+    * served `results/<SEG>` (retire + rename). The window where a result
+    * directory holds a HALF-written generation therefore never exists —
+    * a concurrently-running [[Serve]] sees the old committed generation,
+    * a beat of absent-directory (its cache covers that), then the new
+    * one: read-your-republish, never a torn read. A segment with no
+    * qualifying rows gets no partition dir from the write, so it is
+    * staged as one zero-row file of the same schema and still serves.
+    *
+    * Crash story: a death during the write leaves only `.stage`; a death
+    * mid-swap leaves some segments on the new generation, the rest on
+    * the old one (or absent for the one being swapped) plus the unswapped
+    * remainder under `.stage`. No staging dir is ever served, and the
+    * next publish first deletes every `results/.stage*` (also the
+    * per-segment `.stage_<SEG>` dirs of the older layout) and rebuilds
+    * all segments from the tables — idempotent. Caller holds the
+    * pipeline lock (or is [[runLive]]'s generator loop, which takes
+    * it). */
+  def publishResults(spark: SparkSession, workDir: String): Unit = {
+    val results = s"$workDir/results"
+    val stage = s"$results/.stage"
+    Fs.deleteGlob(spark, s"$results/.stage*")
+    val top = segmentTop50(spark, s"$workDir/tables")
+    top.write.partitionBy("c_mktsegment")
+      .option("compression", "snappy").parquet(stage)
     for (seg <- Segments) {
-      val top = ord.filter(col("o_order_time") < cutoff)
-        .join(cust.filter(col("c_mktsegment") === seg), col("o_custkey") === col("c_custkey"))
-        .join(li.filter(col("l_ship_time") > cutoff), col("o_orderkey") === col("l_orderkey"))
-        .groupBy("l_orderkey", "o_order_time")
-        .agg(graft.functions.Exact.exactSum(
-          col("l_extendedprice") * (lit(1) - col("l_discount")), 4).as("revenue"))
-        .orderBy(col("revenue").desc, col("l_orderkey"))
-        .limit(50)
-      val stage = s"$results/.stage_$seg"
-      top.coalesce(1).write.mode("overwrite")
-        .option("compression", "snappy").parquet(stage)
+      val staged = s"$stage/c_mktsegment=$seg"
+      if (!Fs.exists(spark, staged))
+        spark.createDataFrame(java.util.List.of[Row](), top.drop("c_mktsegment").schema)
+          .write.option("compression", "snappy").parquet(staged)
       Fs.deleteRec(spark, s"$results/$seg")
-      Fs.renameOrFail(spark, stage, s"$results/$seg")
-      println(s"[pipeline] served $seg: ${spark.read.parquet(s"$results/$seg").count()} rows")
+      Fs.renameOrFail(spark, staged, s"$results/$seg")
     }
+    Fs.deleteRec(spark, stage)
+    println(s"[pipeline] published ${Segments.size} segments to $results")
   }
 
   /** Long-lived wall-clock mode (the deployment form of the reference's

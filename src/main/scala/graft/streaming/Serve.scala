@@ -136,8 +136,11 @@ final class Serve private (spark: SparkSession, resultsDir: String,
 
   private def segDir(seg: String) = s"$resultsDir/$seg"
 
-  private def ready: Seq[String] =
-    segments.filter(s => Fs.listFiles(spark, segDir(s), _.endsWith(".parquet")).nonEmpty)
+  /** The parquet files of a segment's served generation. */
+  private def segFiles(seg: String): Seq[(String, Long)] =
+    Fs.listFiles(spark, segDir(seg), _.endsWith(".parquet"))
+
+  private def ready: Seq[String] = segments.filter(s => segFiles(s).nonEmpty)
 
   /** JSON string-escape for request-derived text interpolated into
     * response bodies (quotes/backslashes/control chars), so a segment
@@ -165,19 +168,19 @@ final class Serve private (spark: SparkSession, resultsDir: String,
       case c => c.toString
     }
 
-  /** Fingerprint of a segment's current result generation: the reduce
-    * republishes with fresh UUID part names, so the (path, size) set
-    * changes on every republish. */
-  private def generation(seg: String): Long =
-    Fs.listFiles(spark, segDir(seg), _.endsWith(".parquet"))
-      .map { case (p, len) => p.hashCode.toLong ^ len }.sum
+  /** Fingerprint of a segment's current result generation, from its
+    * [[segFiles]]: the reduce republishes with fresh UUID part names, so
+    * the (path, size) set changes on every republish. */
+  private def generation(files: Seq[(String, Long)]): Long =
+    files.map { case (p, len) => p.hashCode.toLong ^ len }.sum
 
   /** Rows of one segment as a JSON array string, cache keyed by the
-    * result generation; mid-republish (no committed files, or a read
-    * that fails because the old generation just vanished) serves the
-    * cached last generation rather than a torn read. */
-  private def rowsJson(seg: String, limit: Int): String = {
-    val gen = generation(seg)
+    * result generation of `files` (the segment's listing); mid-republish
+    * (no committed files, or a read that fails because the old
+    * generation just vanished) serves the cached last generation rather
+    * than a torn read. */
+  private def rowsJson(seg: String, files: Seq[(String, Long)], limit: Int): String = {
+    val gen = generation(files)
     val cached = Option(cache.get(seg))
     cached match {
       case Some((g, json)) if g == gen && limit == 50 => json
@@ -292,11 +295,14 @@ final class Serve private (spark: SparkSession, resultsDir: String,
         }).flatMap(_.toIntOption).filter(_ > 0).getOrElse(50)
       if (!segments.contains(path))
         respond(x, 404, s"""{"error":"unknown segment","segment":"${esc(path)}"}""")
-      else if (!ready.contains(path) && !cache.containsKey(path))
-        respond(x, 503, s"""{"status":"waiting","segment":"${esc(path)}"}""")
       else
-        try respond(x, 200, rowsJson(path, limit))
-        catch {
+        try {
+          // this segment's dir only: /health is the all-segments probe
+          val files = segFiles(path)
+          if (files.isEmpty && !cache.containsKey(path))
+            respond(x, 503, s"""{"status":"waiting","segment":"${esc(path)}"}""")
+          else respond(x, 200, rowsJson(path, files, limit))
+        } catch {
           case NonFatal(e) =>
             respond(x, 500, s"""{"error":"${esc(String.valueOf(e.getMessage).take(100))}"}""")
         }

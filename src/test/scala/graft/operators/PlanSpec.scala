@@ -376,6 +376,43 @@ class PlanSpec extends SparkSpec {
       "column pruning failed: unneeded lineitem columns in scan")
   }
 
+  test("one-pass reduce: one scan per table, partial WindowGroupLimit below the segment exchange") {
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.window.{Final, Partial, WindowGroupLimitExec}
+    val root = "/root/repo/target/test-plan/one-pass"
+    graft.streaming.Compact.deleteRecPublic(spark, root)
+    graft.streaming.PipelineMain.runCycles(spark, sf, root, Seq(0), nBatches = 1,
+      compactEvery = Int.MaxValue)
+    val df = graft.streaming.PipelineMain.segmentTop50(spark, s"$root/tables")
+    df.collect() // the AQE-final plan
+    val aqe = new AdaptiveSparkPlanHelper {}
+    val plan = df.queryExecution.executedPlan
+    val scans = aqe.collect(plan) { case s: FileSourceScanExec =>
+      s.relation.location.rootPaths.map(_.getName).mkString(",") }
+    assert(scans.sorted == Seq("customer", "lineitem", "orders"),
+      s"expected exactly one scan per table, got $scans:\n$plan")
+    def isSegmentExchange(p: SparkPlan) = p match {
+      case e: ShuffleExchangeExec => e.outputPartitioning match {
+        case HashPartitioning(Seq(a: Attribute), _) => a.name == "c_mktsegment"
+        case _ => false
+      }
+      case _ => false
+    }
+    val segExchanges = aqe.collect(plan) { case e if isSegmentExchange(e) => e }
+    assert(segExchanges.size == 1, s"expected one segment exchange:\n$plan")
+    assert(aqe.find(segExchanges.head) {
+      case w: WindowGroupLimitExec => w.mode == Partial
+      case _ => false
+    }.nonEmpty, s"no partial WindowGroupLimit below the segment exchange:\n$plan")
+    val finals = aqe.collect(plan) { case w: WindowGroupLimitExec if w.mode == Final => w }
+    assert(finals.size == 1 && aqe.find(finals.head.child)(isSegmentExchange).nonEmpty,
+      s"the final WindowGroupLimit must sit above the segment exchange:\n$plan")
+  }
+
   test("join hints switch the physical strategy without changing results") {
     import org.apache.spark.sql.functions._
     val ord = graft.sources.Tables.orders(spark, sf).select("o_orderkey", "o_custkey")

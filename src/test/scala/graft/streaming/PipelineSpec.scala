@@ -3,6 +3,7 @@ package graft.streaming
 import java.nio.file.{Files, Path, Paths}
 import java.util.Comparator
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -134,6 +135,125 @@ class PipelineSpec extends SparkSpec {
     // the ingested fact tables hold the full fixture after both cycles
     assert(spark.read.parquet(s"$root/tables/orders").count() ==
       graft.sources.Tables.orders(spark, sf).count())
+  }
+
+  private val segments = Seq("AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD", "MACHINERY")
+
+  /** One segment's top 50 computed on its own, the per-segment form of
+    * the reduce: the reference the one-pass publish must reproduce row
+    * for row and in order. */
+  private def perSegmentTop50(tables: String, seg: String): Seq[String] = {
+    val li = spark.read.parquet(s"$tables/lineitem")
+    val ord = spark.read.parquet(s"$tables/orders")
+    val cust = spark.read.parquet(s"$tables/customer")
+    val cutoff = lit(Synthesize.OrdTgtHi).cast("timestamp")
+    ord.filter(col("o_order_time") < cutoff)
+      .join(cust.filter(col("c_mktsegment") === seg), col("o_custkey") === col("c_custkey"))
+      .join(li.filter(col("l_ship_time") > cutoff), col("o_orderkey") === col("l_orderkey"))
+      .groupBy("l_orderkey", "o_order_time")
+      .agg(graft.functions.Exact.exactSum(
+        col("l_extendedprice") * (lit(1) - col("l_discount")), 4).as("revenue"))
+      .orderBy(col("revenue").desc, col("l_orderkey"))
+      .limit(50)
+      .toJSON.collect().toSeq
+  }
+
+  /** A segment's served rows in file order; asserts the served layout
+    * (one data file, the three result columns). */
+  private def served(results: String, seg: String): Seq[String] = {
+    val df = spark.read.parquet(s"$results/$seg")
+    assert(df.inputFiles.length == 1, s"$seg: expected one data file, got ${df.inputFiles.toSeq}")
+    assert(df.columns.toSeq == Seq("l_orderkey", "o_order_time", "revenue"), s"$seg: ${df.columns.toSeq}")
+    df.toJSON.collect().toSeq
+  }
+
+  private def assertServesReference(root: String): Unit =
+    segments.foreach { seg =>
+      assert(served(s"$root/results", seg) == perSegmentTop50(s"$root/tables", seg),
+        s"$seg: served rows differ from the per-segment reduce")
+    }
+
+  private def stageDirs(results: String): Seq[String] =
+    Option(new java.io.File(results).list()).toSeq.flatten.filter(_.startsWith(".stage"))
+
+  /** Two ingested batches of the fixture, copied out as plain parquet
+    * tables that a test may edit before publishing over them. */
+  private lazy val ingestedSrc: String = {
+    val root = s"$base/publish-src"
+    wipe(root)
+    PipelineMain.runCycles(spark, sf, root, Seq(0, 1), nBatches = 2, compactEvery = Int.MaxValue)
+    s"$root/tables"
+  }
+
+  private def copyTables(root: String, customer: DataFrame => DataFrame = identity): Unit =
+    Seq("orders", "lineitem", "customer").foreach { t =>
+      val df = spark.read.parquet(s"$ingestedSrc/$t")
+      (if (t == "customer") customer(df) else df).write.parquet(s"$root/tables/$t")
+    }
+
+  private def httpGet(port: Int, path: String): (Int, String) = {
+    val r = java.net.http.HttpClient.newHttpClient().send(
+      java.net.http.HttpRequest.newBuilder(
+        java.net.URI.create(s"http://127.0.0.1:$port$path")).GET().build(),
+      java.net.http.HttpResponse.BodyHandlers.ofString())
+    (r.statusCode(), r.body())
+  }
+
+  test("one-pass publish serves each segment's per-segment top 50, in order, at two batch points") {
+    val root = s"$base/one-pass"
+    wipe(root)
+    PipelineMain.runCycles(spark, sf, root, Seq(0), nBatches = 2, compactEvery = Int.MaxValue)
+    PipelineMain.publishResults(spark, root)
+    assertServesReference(root)
+    val firstGen = segments.map(served(s"$root/results", _))
+    PipelineMain.runCycles(spark, sf, root, Seq(1), nBatches = 2, compactEvery = Int.MaxValue)
+    PipelineMain.publishResults(spark, root)
+    assertServesReference(root)
+    assert(segments.map(served(s"$root/results", _)) != firstGen, "second batch changed no result")
+    segments.foreach(seg => assert(served(s"$root/results", seg).size == 50))
+    assert(stageDirs(s"$root/results").isEmpty, "publish left a staging dir behind")
+  }
+
+  test("publish: a segment with no qualifying rows serves one zero-row file, and health stays ok") {
+    val root = s"$base/publish-empty"
+    wipe(root)
+    copyTables(root, customer = _.filter(col("c_mktsegment") =!= "AUTOMOBILE"))
+    PipelineMain.publishResults(spark, root)
+    assert(served(s"$root/results", "AUTOMOBILE").isEmpty)
+    assertServesReference(root)
+    val srv = Serve.start(spark, s"$root/results", segments)
+    try {
+      assert(httpGet(srv.port, "/health")._1 == 200)
+      assert(httpGet(srv.port, "/results/AUTOMOBILE") == ((200, "[]")))
+      assert(httpGet(srv.port, "/results/BUILDING")._2.count(_ == '{') == 50)
+    } finally srv.stop()
+  }
+
+  test("publish after a crash: stale .stage and legacy .stage_<SEG> dirs are never served and are cleared") {
+    val root = s"$base/publish-crash"
+    wipe(root)
+    copyTables(root)
+    val results = s"$root/results"
+    // an interrupted publish: AUTOMOBILE swapped, BUILDING retired but
+    // not yet renamed, its rows still under .stage; plus the older
+    // layout's per-segment staging dir
+    val junk = Tables.orders(spark, sf).select("o_orderkey").limit(3)
+    junk.write.parquet(s"$results/.stage/c_mktsegment=BUILDING")
+    junk.write.parquet(s"$results/.stage_FURNITURE")
+    junk.write.parquet(s"$results/AUTOMOBILE")
+    val srv = Serve.start(spark, results, segments)
+    try {
+      assert(httpGet(srv.port, "/results/BUILDING")._1 == 503, "a staging dir was served")
+      assert(httpGet(srv.port, "/results/FURNITURE")._1 == 503, "a legacy staging dir was served")
+      PipelineMain.publishResults(spark, root)
+      assertServesReference(root)
+      assert(stageDirs(results).isEmpty, s"staging leftovers survived: ${stageDirs(results)}")
+      assert(httpGet(srv.port, "/health")._1 == 200)
+      segments.foreach { seg =>
+        val (code, body) = httpGet(srv.port, s"/results/$seg")
+        assert(code == 200 && body.count(_ == '{') == 50, s"$seg -> $code")
+      }
+    } finally srv.stop()
   }
 
   test("serve: health flips 503->200 when all segments land; results serve as JSON; republish is picked up without restart") {

@@ -94,6 +94,12 @@ for t in ("orders", "lineitem", "customer"):
     if a != b:
         fails.append(f"{t}: row count {a} != control {b}")
 
+# every publish swaps its staging dir away; one surviving a clean
+# finish means a publish failed or skipped its cleanup
+for base in (work, ctrl):
+    for p in glob.glob(f"{base}/results/.stage*"):
+        fails.append(f"{p}: staging dir survived the clean finish")
+
 segs = sorted(os.path.basename(p) for p in glob.glob(f"{ctrl}/results/*"))
 if not segs:
     fails.append("control published no results")
