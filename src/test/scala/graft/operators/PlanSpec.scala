@@ -383,7 +383,7 @@ class PlanSpec extends SparkSpec {
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import org.apache.spark.sql.execution.window.{Final, Partial, WindowGroupLimitExec}
-    val root = "/root/repo/target/test-plan/one-pass"
+    val root = "target/test-plan/one-pass"
     graft.streaming.Compact.deleteRecPublic(spark, root)
     graft.streaming.PipelineMain.runCycles(spark, sf, root, Seq(0), nBatches = 1,
       compactEvery = Int.MaxValue)
