@@ -336,8 +336,8 @@ object Curation {
     * summary (target/source/updated/inserted/result counts and the
     * exact post-merge total) rather than the merged table, so the
     * oracle compare stays O(1). Where the transactional variant of this
-    * lives: [[graft.streaming.Manifest]] gives the same swap a commit
-    * protocol (pipe_txn_compact).
+    * lives: [[graft.streaming.DeltaLog.merge]] gives the same upsert a
+    * commit protocol (pipe_scd2_delta).
     *
     * Shape at scale: one shuffle per side on the join key (or fewer if
     * the snapshot is bucketed), then partial-aggregated counts; the

@@ -494,12 +494,12 @@ object Similarity {
     * (r8 advice: the docstring claimed only CC recall, but the row's
     * advertised output is the pair list itself). The second-decade
     * harness forced the cap: the x100 fixture's duplicate-copy clusters
-    * grow per-bucket occupancy 35 → 187 (MpDiag: per-vector candidate
-    * density 9.7 → 39 even SINGLE-probe — corpus truth, not an
-    * algorithm artifact), and all-pairs inside such clusters is
-    * Θ(c²) for work the cluster step collapses anyway. Cap 64 leaves
-    * every verification fixture's result bit-identical (max occupancy
-    * 18 at sf0.01, 35 at x10). */
+    * grow per-bucket occupancy 35 → 187 (per-vector candidate density
+    * 9.7 → 39 even SINGLE-probe, by a one-off candidate count — corpus
+    * truth, not an algorithm artifact), and all-pairs inside such
+    * clusters is Θ(c²) for work the cluster step collapses anyway.
+    * Cap 64 leaves every verification fixture's result bit-identical
+    * (max occupancy 18 at sf0.01, 35 at x10). */
   private[operators] val MpHotBucketCap = 64L
 
   private[operators] def mpCandidates(e: DataFrame): DataFrame =

@@ -29,9 +29,9 @@ import org.apache.spark.sql.SparkSession
   * checkpoint + sink log, exactly like the reference's cadence where
   * compaction runs between ingest cycles under a shared lock (T4;
   * reference pipeline/settings.py:37-40). For compaction that must
-  * interleave with live appends, see [[Manifest]] (a minimal
-  * manifest-commit protocol) — Delta/Iceberg being the production
-  * answer (SURVEY §7 — no such jars offline).
+  * interleave with live appends, see [[DeltaLog.optimize]] (the public
+  * Delta log protocol, written and replayed here because no Delta jars
+  * exist offline — SURVEY §7).
   *
   * Scale: the rewrite is one distributed `repartition(k)` pass —
   * shuffle-bounded, no driver data movement; vacuum is a driver-side

@@ -9,12 +9,13 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * directly (the reference writes/compacts/vacuums real Delta tables —
   * reference pipeline/preprocess.py:41-44, 74-75; no delta jars exist
   * offline, but the log protocol itself is documented public JSON:
-  * delta-io/delta PROTOCOL.md). [[Manifest]] carries this repo's
-  * transactional SEMANTICS (rebase, txn markers, stats pruning); this
-  * object carries the interchange FORMAT, so a real engine (Spark with
-  * delta jars, DuckDB's delta extension, Trino) can read tables this
-  * pipeline writes, and this pipeline can read a minimal table such an
-  * engine wrote. Kept to the core actions every reader understands:
+  * delta-io/delta PROTOCOL.md). It is this repo's one transactional
+  * table protocol — commit rebase, txn-idempotent appends, stats
+  * pruning, time travel, compaction under live appends and vacuum — in
+  * the interchange FORMAT, so a real engine (Spark with delta jars,
+  * DuckDB's delta extension, Trino) can read tables this pipeline
+  * writes, and this pipeline can read a minimal table such an engine
+  * wrote. Kept to the core actions every reader understands:
   *
   *  - `<table>/_delta_log/<v padded to 20>.json`, one commit per
   *    version, each file newline-delimited JSON actions;
@@ -34,9 +35,9 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * intent (append = union; overwrite = recompute removes against the
   * new latest), and retries.
   *
-  * Scale: like [[Manifest]], the log is file-count-sized metadata; data
-  * moves only through executor-side parquet jobs. CHECKPOINTS are
-  * emitted and consumed in the documented classic form — a single
+  * Scale: the log is file-count-sized metadata; data moves only
+  * through executor-side parquet jobs. CHECKPOINTS are emitted and
+  * consumed in the documented classic form — a single
   * `<v>.checkpoint.parquet` holding the complete replayed state (one
   * action per row, nullable top-level `txn`/`add`/`remove`/`metaData`/
   * `protocol` struct columns) plus the `_last_checkpoint` hint file —
@@ -397,11 +398,11 @@ object DeltaLog {
 
   /** Delta data skipping over add-action `stats`: the latest live paths
     * whose per-file [minValues, maxValues] intersect EVERY queried
-    * range, keyed BY COLUMN NAME (Delta's stats are named, so — unlike
-    * [[Manifest]]'s positional pairs — a caller cannot misalign query
-    * ranges with append-time column order). Files without stats, or
-    * missing a queried column, are kept conservatively. Returns
-    * (kept paths, total live file count). */
+    * range, keyed BY COLUMN NAME (Delta's stats are named, so a caller
+    * cannot misalign query ranges with append-time column order).
+    * Files without stats (e.g. OPTIMIZE's rewrites), or missing a
+    * queried column, are kept conservatively. Returns (kept paths,
+    * total live file count). */
   def pruneFiles(spark: SparkSession, table: String,
                  ranges: Map[String, (Long, Long)]): (Seq[String], Int) = {
     val (_, adds, _) = liveAdds(spark, table)
@@ -692,13 +693,15 @@ object DeltaLog {
   }
 
   /** Per-part-file Delta `stats` JSON (numRecords + named
-    * minValues/maxValues/nullCount over `statsCols`), keyed by source
-    * part file name — one metadata-sized aggregation job, file-count
-    * rows to the driver (the same division of labor as
-    * [[Manifest.append]]'s stats, but NAMED per column, which is what
-    * makes Delta skipping robust to query-order mistakes). */
+    * minValues/maxValues/nullCount over `statsCols`), keyed by the part
+    * file's path under `scratch` (its `partDepth` partition dirs plus
+    * its name: a partitioned write names its files per task, so one
+    * name recurs in every partition dir that task wrote) — one
+    * metadata-sized aggregation job, file-count rows to the driver.
+    * Stats are NAMED per column, which is what makes Delta skipping
+    * robust to query-order mistakes. */
   private def partStats(spark: SparkSession, scratch: String,
-                        statsCols: Seq[String]): Map[String, String] =
+                        statsCols: Seq[String], partDepth: Int): Map[String, String] =
     if (statsCols.isEmpty) Map.empty
     else {
       import org.apache.spark.sql.functions.{col, count, input_file_name, lit, max, min, sum}
@@ -721,7 +724,8 @@ object DeltaLog {
             if (!r.isNullAt(3 + 3 * i)) mxO.put(c, r.getLong(3 + 3 * i))
             nuO.put(c, r.getLong(4 + 3 * i))
           }
-          (new org.apache.hadoop.fs.Path(r.getString(0)).getName, M.writeValueAsString(st))
+          (new java.net.URI(r.getString(0)).getPath.split('/').takeRight(partDepth + 1).mkString("/"),
+            M.writeValueAsString(st))
         }.toMap
     }
 
@@ -772,7 +776,8 @@ object DeltaLog {
   /** Adopt a `partitionBy` scratch write preserving its Hive-style
     * `col=value/` directory layout under the table root; each leaf
     * file's partition values parse from its directory segments.
-    * Returns (relative path, size, partitionValues, source part name). */
+    * Returns (relative path, size, partitionValues, source path under
+    * `scratch`). */
   private def adoptPartsHive(spark: SparkSession, table: String, scratch: String,
                              partCols: Seq[String]): Seq[(String, Long, Seq[(String, Option[String])], String)] = {
     Fs.mkdirs(spark, table)
@@ -795,15 +800,16 @@ object DeltaLog {
       Fs.mkdirs(spark, s"$table/$dir")
       val r = s"$dir/" + f"part-$i%05d-$uid.parquet"
       require(Fs.rename(spark, src, s"$table/$r"), s"adopting $src failed")
-      (r, len, vals.toSeq, new org.apache.hadoop.fs.Path(src).getName)
+      (r, len, vals.toSeq, relSrc)
     }
     Fs.deleteRec(spark, scratch)
     adopted
   }
 
-  /** Same stalled-commit guard as [[Manifest]]: a create-exclusive
-    * failure with no competing commit advancing the version is an
-    * environmental failure, not a race — abort instead of spinning. */
+  /** Stalled-commit guard: a create-exclusive failure with no competing
+    * commit advancing the version is an environmental failure (Hadoop
+    * reports a failed rename/link as `false`, exactly like a lost race),
+    * not a race — abort instead of spinning. */
   private val MaxStalledCommitAttempts = 8
 
   private def commit(spark: SparkSession, table: String,
@@ -877,7 +883,7 @@ object DeltaLog {
     (if (partitionBy.isEmpty) w else w.partitionBy(partitionBy: _*)).parquet(scratch)
     Fs.deleteIfExists(spark, s"$scratch/_SUCCESS")
     val schema = df.schema
-    val stats = partStats(spark, scratch, statsCols)
+    val stats = partStats(spark, scratch, statsCols, partitionBy.size)
     if (partitionBy.isEmpty) {
       val mine = adoptParts(spark, table, scratch)
       commit(spark, table, parent => {
@@ -1092,21 +1098,27 @@ object DeltaLog {
     * foreachBatch redelivery after crash/restart) is detected against
     * the LATEST log inside the commit loop and skipped, so duplicate
     * delivery cannot double-append even when the replay races other
-    * writers. Returns true iff this call committed the batch. The
-    * [[Manifest.appendBatch]] semantics, emitted as Delta's own
-    * idempotent-writer protocol so foreign readers see them too.
+    * writers. Returns true iff this call committed the batch — Delta's
+    * own idempotent-writer protocol, so foreign readers see it too.
     * Every `checkpointEvery` commits the sink also writes a parquet
     * checkpoint (Delta's default 10; 0 disables) — without it the Nth
     * micro-batch's watermark read replays N JSON commits and the sink
-    * degrades quadratically over its own history. */
+    * degrades quadratically over its own history.
+    *
+    * `beforeCommit` is a test seam between file adoption and the log
+    * commit — the crash window where a dead writer leaves
+    * adopted-but-uncommitted orphans that [[vacuum]] reclaims
+    * (PipelineSpec's crash-injection test). */
   def appendBatch(spark: SparkSession, table: String, appId: String,
-                  batchId: Long, df: DataFrame, checkpointEvery: Int = 10): Boolean = {
+                  batchId: Long, df: DataFrame, checkpointEvery: Int = 10,
+                  beforeCommit: () => Unit = () => ()): Boolean = {
     if (lastTxnVersion(spark, table, appId) >= batchId) return false
     val scratch = s"$table/.scratch_${java.util.UUID.randomUUID().toString.take(8)}"
     df.write.mode("overwrite").parquet(scratch)
     Fs.deleteIfExists(spark, s"$scratch/_SUCCESS")
     val schema = df.schema
     val mine = adoptParts(spark, table, scratch)
+    beforeCommit()
     try {
       commit(spark, table, parent => {
         if (lastTxnVersion(spark, table, appId) >= batchId)
@@ -1117,19 +1129,12 @@ object DeltaLog {
       if (checkpointEvery > 0) maybeCheckpoint(spark, table, checkpointEvery)
       true
     } catch {
-      // our adopted files are orphans outside every commit; a vacuum
-      // equivalent (not emitted here) would reclaim them, exactly as
-      // Manifest's retention sweep does
+      // our adopted files are orphans outside every commit; vacuum's
+      // retention sweep reclaims them
       case _: AlreadyCommitted => false
     }
   }
 
-  /** Overwrite: one commit that removes every currently-live file and
-    * adds `df`'s files — Delta's `mode("overwrite")`. The remove set is
-    * recomputed against the LATEST snapshot inside the commit loop, so
-    * an overwrite racing an append retires the raced files too (last-
-    * writer-wins table semantics, same contract as [[Manifest.replace]]).
-    * Returns the committed version. */
   /** OPTIMIZE (bin-packing compaction): rewrite the current live files
     * into `targetFiles` and commit remove+add with `dataChange=false` —
     * the protocol's marker that the commit rearranges bytes without
@@ -1139,9 +1144,11 @@ object DeltaLog {
     * the commit-loop rebase publishes after it); a racing OVERWRITE or
     * second optimize that retired one of our input files aborts this
     * compaction cleanly (content wins over layout) and the whole
-    * operation retries against the new state. Returns
-    * (files before, files after). */
-  def optimize(spark: SparkSession, table: String, targetFiles: Int = 1): (Int, Int) = {
+    * operation retries against the new state. `beforeCommit` is a test
+    * seam between the rewrite's adoption and its commit, for
+    * deterministic interleaving. Returns (files before, files after). */
+  def optimize(spark: SparkSession, table: String, targetFiles: Int = 1,
+               beforeCommit: () => Unit = () => ()): (Int, Int) = {
     var attempts = 0
     while (true) {
       attempts += 1
@@ -1154,6 +1161,7 @@ object DeltaLog {
         .repartition(targetFiles).write.mode("overwrite").parquet(scratch)
       Fs.deleteIfExists(spark, s"$scratch/_SUCCESS")
       val mine = adoptParts(spark, table, scratch)
+      beforeCommit()
       try {
         commit(spark, table, parent => {
           val (_, nowLive, _) = snapshot(spark, table, parent)
@@ -1218,6 +1226,14 @@ object DeltaLog {
     victims.size
   }
 
+  /** Overwrite: one commit that removes every currently-live file and
+    * adds `df`'s files — Delta's `mode("overwrite")`. The remove set is
+    * recomputed against the LATEST snapshot inside the commit loop, so
+    * an overwrite racing an append retires the raced files too (last-
+    * writer-wins table semantics). Prior versions stay readable by time
+    * travel until [[vacuum]], and `txn` watermarks are not files, so a
+    * streaming writer's replayed batch still skips after an overwrite.
+    * Returns the committed version. */
   def overwrite(spark: SparkSession, table: String, df: DataFrame): Long = {
     require(latestVersion(spark, table) < 0 ||
         replay(spark, table, -1L).partitionColumns.isEmpty,

@@ -70,10 +70,11 @@ object Fs {
     * reason log stores specialize per scheme: HDFS `rename` refuses an
     * existing destination atomically, but LOCAL rename maps to POSIX
     * rename(2), which silently OVERWRITES — two racing committers would
-    * both "succeed" and one commit would vanish (observed in the
-    * ManifestSpec thread race). On local paths this therefore uses a
-    * hard link (POSIX link(2) is atomic create-exclusive) and unlinks
-    * the source; everywhere else, the filesystem's rename contract. */
+    * both "succeed" and one commit would vanish (observed in a
+    * concurrent-append thread race, which DeltaLogSpec pins). On local
+    * paths this therefore uses a hard link (POSIX link(2) is atomic
+    * create-exclusive) and unlinks the source; everywhere else, the
+    * filesystem's rename contract. */
   def commitFile(spark: SparkSession, src: String, dst: String): Boolean = {
     val (fs, s) = fsOf(src, conf(spark))
     val d = new Path(dst)

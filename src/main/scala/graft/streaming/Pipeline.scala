@@ -48,26 +48,26 @@ object Pipeline {
   private def sfName(sfDir: String): String =
     Paths.get(sfDir).getFileName.toString
 
-  /** Run several [[Manifest.append]]s CONCURRENTLY (r15, guide §5:
+  /** Run several [[DeltaLog.append]]s CONCURRENTLY (r15, guide §5:
     * the driver should coordinate, not serialize). Each append is an
-    * independent write + stats job plus one manifest commit, and the
-    * manifest's optimistic commit loop exists precisely so concurrent
-    * appenders can rebase-and-retry — a slab-per-file layout pass was
-    * paying N serial job latencies for work with no cross-slab
-    * dependency. The committed STATE is order-independent (a manifest
-    * is a SET of files; every consumer below reads counts/contents,
-    * never version numbers), so overlapping the appends cannot change
-    * any output. NOT used where a caller pins a returned version
-    * (pipe_time_travel needs v0 = first slice by construction). */
+    * independent write + stats job plus one log commit, and the log's
+    * optimistic commit loop exists precisely so concurrent appenders
+    * can rebase-and-retry — a slab-per-file layout pass was paying N
+    * serial job latencies for work with no cross-slab dependency. The
+    * committed STATE is order-independent (the live set is a SET of
+    * files; every consumer below reads counts/contents, never version
+    * numbers), so overlapping the appends cannot change any output.
+    * NOT used where a caller pins a returned version (pipe_time_travel
+    * needs v0 = first slice by construction). */
   private def appendConcurrently(spark: SparkSession, tbl: String,
                                  slices: Seq[DataFrame],
                                  statsCols: Seq[String] = Seq.empty): Unit =
     concurrently(slices.map(df =>
-      () => { Manifest.append(spark, tbl, df, statsCols); () }))
+      () => { DeltaLog.append(spark, tbl, df, statsCols); () }))
 
   /** Run independent driver-coordinated jobs concurrently (each is a
-    * self-contained Spark write + commit); used by the Manifest/Delta
-    * staging passes above and below. */
+    * self-contained Spark write + commit); used by the Delta staging
+    * passes above and below. */
   private def concurrently(jobs: Seq[() => Unit]): Unit = {
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
@@ -181,14 +181,14 @@ object Pipeline {
        |FROM orders""".stripMargin
 
   /** Transactional compaction under a racing append, end-to-end as an
-    * oracle-verified query ([[Manifest]]): three slices of `orders` are
-    * appended, the third landing BETWEEN the compaction's rewrite and
-    * its commit; the compaction must lose the version race, rebase, and
-    * preserve the raced append. The oracle pins full-table content
-    * (nothing lost), the post-compaction file count (2 compacted + 1
-    * raced append), the version history length (2 appends + raced
-    * append + compaction = v3), and the vacuum count (the 8 rewritten
-    * input files). */
+    * oracle-verified query ([[DeltaLog.optimize]]): three slices of
+    * `orders` are appended, the third landing BETWEEN the compaction's
+    * rewrite and its commit; the compaction must lose the version race,
+    * rebase, and preserve the raced append. The oracle pins full-table
+    * content (nothing lost), the post-compaction file count (2
+    * compacted + 1 raced append), the version history length (2
+    * appends + raced append + compaction = v3), and the vacuum count
+    * (the 8 rewritten input files). */
   def pipeTxnCompact(spark: SparkSession, sfDir: String): DataFrame = {
     val base = s"$scratchBase/txn_${sfName(sfDir)}"
     wipe(spark, base)
@@ -198,12 +198,13 @@ object Pipeline {
     // raced append + compaction = v3), not which slice took v0
     appendConcurrently(spark, tbl, (0 until 2).map(i =>
       ord.filter(col("o_orderkey") % 3 === i).repartition(4)))
-    val version = Manifest.compact(spark, tbl, targetFiles = 2, beforeCommit = () => {
-      Manifest.append(spark, tbl, ord.filter(col("o_orderkey") % 3 === 2).repartition(1)); ()
+    DeltaLog.optimize(spark, tbl, targetFiles = 2, beforeCommit = () => {
+      DeltaLog.append(spark, tbl, ord.filter(col("o_orderkey") % 3 === 2).repartition(1)); ()
     })
-    val vacuumed = Manifest.vacuum(spark, tbl, retentionMs = 0)
-    val (_, files) = Manifest.snapshot(spark, tbl)
-    Manifest.read(spark, tbl)
+    val version = DeltaLog.latestVersion(spark, tbl)
+    val vacuumed = DeltaLog.vacuum(spark, tbl, retentionMs = 0)
+    val (_, files, _) = DeltaLog.snapshot(spark, tbl)
+    DeltaLog.read(spark, tbl)
       .agg(count(lit(1)).as("n_rows"),
         sum(expr(s"o_orderkey % $P")).as("key_check"),
         sum(expr(s"cast(round(o_totalprice * 100) as bigint) % $P")).as("price_check"))
@@ -318,10 +319,10 @@ object Pipeline {
       |GROUP BY l_returnflag, l_linestatus
       |ORDER BY l_returnflag, l_linestatus""".stripMargin
 
-  /** Snapshot-isolated time travel over [[Manifest]] versions, as an
+  /** Snapshot-isolated time travel over [[DeltaLog]] versions, as an
     * oracle-verified query: two appends create versions 0 and 1; reading
     * version 0 AFTER version 1 exists must see exactly the first
-    * append's rows (a reader pinned to a manifest version never sees
+    * append's rows (a reader pinned to a log version never sees
     * later commits), while the latest read sees both. The oracle pins
     * both versions' row counts and checksums from the fixture. */
   def pipeTimeTravel(spark: SparkSession, sfDir: String): DataFrame = {
@@ -329,16 +330,15 @@ object Pipeline {
     wipe(spark, base)
     val tbl = s"$base/orders"
     val ord = Tables.orders(spark, sfDir)
-    val v0 = Manifest.append(spark, tbl, ord.filter(col("o_orderkey") % 2 === 0).repartition(2))
-    Manifest.append(spark, tbl, ord.filter(col("o_orderkey") % 2 === 1).repartition(2))
+    val v0 = DeltaLog.append(spark, tbl, ord.filter(col("o_orderkey") % 2 === 0).repartition(2))
+    DeltaLog.append(spark, tbl, ord.filter(col("o_orderkey") % 2 === 1).repartition(2))
     def summary(v: Long): DataFrame =
-      // filesAt returns table-relative paths (same resolution Manifest.read does)
-      spark.read.parquet(Manifest.filesAt(spark, tbl, v).map(f => s"$tbl/$f"): _*)
+      DeltaLog.read(spark, tbl, v)
         .agg(count(lit(1)).as("n_rows"),
           sum(expr(s"o_orderkey % $P")).as("key_check"),
           sum(expr(s"cast(round(o_totalprice * 100) as bigint) % $P")).as("price_check"))
         .select(lit(v).as("version"), col("n_rows"), col("key_check"), col("price_check"))
-    summary(v0).unionAll(summary(Manifest.latestVersion(spark, tbl))).orderBy("version")
+    summary(v0).unionAll(summary(DeltaLog.latestVersion(spark, tbl))).orderBy("version")
   }
 
   private val pipeTimeTravelSql: String =
@@ -353,8 +353,8 @@ object Pipeline {
        |FROM orders
        |ORDER BY version""".stripMargin
 
-  /** Row-level CHANGE DATA CAPTURE between two [[Manifest]] versions:
-    * v0 commits the orders fixture; a copy-on-write [[Manifest.replace]]
+  /** Row-level CHANGE DATA CAPTURE between two [[DeltaLog]] versions:
+    * v0 commits the orders fixture; a copy-on-write [[DeltaLog.overwrite]]
     * then applies one MERGE-generation of changes (delete keys ≡0 mod 7,
     * reprice +1.00 for surviving keys ≡0 mod 5, insert copies of keys
     * ≡0 mod 11 into a disjoint key space) as v1. The diff reads BOTH
@@ -364,23 +364,22 @@ object Pipeline {
     * all derivable from the fixture by the oracle.
     *
     * Scale: one equi-join on the table key between two snapshots plus a
-    * 3-group aggregate; both sides are manifest-pinned parquet scans, so
+    * 3-group aggregate; both sides are version-pinned parquet scans, so
     * the join is shuffle-partitioned on the key with no driver data. */
   def pipeCdcDiff(spark: SparkSession, sfDir: String): DataFrame = {
     val base = s"$scratchBase/cdc_${sfName(sfDir)}"
     wipe(spark, base)
     val tbl = s"$base/orders"
     val ord = Tables.orders(spark, sfDir)
-    val v0 = Manifest.append(spark, tbl, ord.repartition(2))
+    val v0 = DeltaLog.append(spark, tbl, ord.repartition(2))
     val survivors = ord.filter(col("o_orderkey") % 7 =!= 0)
       .withColumn("o_totalprice",
         when(col("o_orderkey") % 5 === 0, col("o_totalprice") + lit(1.0))
           .otherwise(col("o_totalprice")))
     val inserts = ord.filter(col("o_orderkey") % 11 === 0)
       .withColumn("o_orderkey", col("o_orderkey") + lit(1000000000L))
-    val v1 = Manifest.replace(spark, tbl, survivors.unionAll(inserts).repartition(2))
-    def at(v: Long): DataFrame =
-      spark.read.parquet(Manifest.filesAt(spark, tbl, v).map(f => s"$tbl/$f"): _*)
+    val v1 = DeltaLog.overwrite(spark, tbl, survivors.unionAll(inserts).repartition(2))
+    def at(v: Long): DataFrame = DeltaLog.read(spark, tbl, v)
     val prev = at(v0).select(col("o_orderkey").as("k0"), col("o_totalprice").as("p0"))
     val curr = at(v1).select(col("o_orderkey").as("k1"), col("o_totalprice").as("p1"))
     prev.join(curr, col("k0") === col("k1"), "full_outer")
@@ -426,21 +425,21 @@ object Pipeline {
   /** EXACTLY-ONCE STREAMING INGESTION INTO A TRANSACTIONAL TABLE — the
     * semantics the parquet streaming sink can't give (its
     * `_spark_metadata` log owns the directory, forcing quiesced
-    * compaction): micro-batches land via [[Manifest.appendBatch]],
-    * which publishes each batch's files AND its (streamId, batchId)
-    * txn marker in one atomic manifest commit — Delta's
-    * txnAppId/txnVersion idempotence. The entry proves it the hard
-    * way: the SAME stream is run TWICE (second run from a fresh
-    * checkpoint, so foreachBatch redelivers every batch with replayed
-    * ids) and then compacted; the replay must commit nothing, the
-    * compaction must preserve the watermark marker, and the final
-    * aggregate must equal the fixture's — no dupes, no loss.
+    * compaction): micro-batches land via [[DeltaLog.appendBatch]],
+    * which publishes each batch's files AND its (appId, batchId) `txn`
+    * action in one atomic log commit — Delta's txnAppId/txnVersion
+    * idempotence. The entry proves it the hard way: the SAME stream is
+    * run TWICE (second run from a fresh checkpoint, so foreachBatch
+    * redelivers every batch with replayed ids) and then compacted; the
+    * replay must commit nothing, the compaction must preserve the
+    * watermark, and the final aggregate must equal the fixture's — no
+    * dupes, no loss.
     *
-    * Scale: per batch this is one executor-side parquet job + one
-    * manifest commit; replay detection is a driver-side read of the
-    * latest manifest. Compaction can now run WHILE a stream appends
-    * (the manifest rebase covers both) — closing the quiesce
-    * limitation the parquet-sink pipeline documents. */
+    * Scale: per batch this is one executor-side parquet job + one log
+    * commit; replay detection is a driver-side read of the replayed
+    * log. Compaction can run WHILE a stream appends (the commit rebase
+    * covers both) — closing the quiesce limitation the parquet-sink
+    * pipeline documents. */
   def pipeStreamTxnSink(spark: SparkSession, sfDir: String): DataFrame = {
     val base = s"$scratchBase/stxn_${sfName(sfDir)}"
     wipe(spark, base)
@@ -458,7 +457,7 @@ object Pipeline {
         .option("maxFilesPerTrigger", "1").parquet(src)
         .writeStream
         .foreachBatch { (batch: DataFrame, id: Long) =>
-          Manifest.appendBatch(spark, tbl, "ingest", id, batch); ()
+          DeltaLog.appendBatch(spark, tbl, "ingest", id, batch); ()
         }
         .option("checkpointLocation", ckpt)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
@@ -466,16 +465,16 @@ object Pipeline {
       q.awaitTermination()
     }
     runStream(s"$base/ckpt1")
-    runStream(s"$base/ckpt2") // full redelivery: txn markers must skip every batch
-    Manifest.compact(spark, tbl, targetFiles = 2)
-    val nFiles = Manifest.snapshot(spark, tbl)._2.count(!_.startsWith("#txn|"))
-    Manifest.read(spark, tbl)
+    runStream(s"$base/ckpt2") // full redelivery: the txn watermark must skip every batch
+    DeltaLog.optimize(spark, tbl, targetFiles = 2)
+    val nFiles = DeltaLog.snapshot(spark, tbl)._2.size
+    DeltaLog.read(spark, tbl)
       .agg(count(lit(1)).as("n_rows"),
         sum(expr(s"o_orderkey % $P")).as("key_check"),
         sum(expr(s"cast(round(o_totalprice * 100) as bigint) % $P")).as("price_check"))
       .select(col("n_rows"), col("key_check"), col("price_check"),
         lit(nFiles.toLong).as("n_files"),
-        lit(Manifest.lastCommittedBatch(spark, tbl, "ingest")).as("last_batch"))
+        lit(DeltaLog.lastTxnVersion(spark, tbl, "ingest")).as("last_batch"))
   }
 
   private val pipeStreamTxnSinkSql: String =
@@ -485,19 +484,19 @@ object Pipeline {
        |  2::BIGINT AS n_files, 2::BIGINT AS last_batch
        |FROM orders""".stripMargin
 
-  /** MANIFEST-LEVEL DATA SKIPPING, proven as an oracle query: four
+  /** LOG-LEVEL DATA SKIPPING, proven as an oracle query: four
     * range-disjoint one-file appends record per-file o_orderkey
-    * min/max in their manifest entries ([[Manifest.append]]'s
-    * `statsCol`); a range read then selects files via
-    * [[Manifest.pruneFiles]] — touching 1 of 4 files — and the
+    * min/max in their add actions' stats ([[DeltaLog.append]]'s
+    * `statsCols`); a range read then selects files via
+    * [[DeltaLog.pruneFiles]] — touching 1 of 4 files — and the
     * aggregate over the pruned scan must equal the oracle's aggregate
     * over the full table under the same predicate. This is the
-    * table-format half of data skipping (Delta/Iceberg manifest
+    * table-format half of data skipping (Delta/Iceberg file
     * stats); `op_zorder_key`/`ZorderSpec` prove the layout half.
     *
     * Scale: stats are file-count-sized metadata collected by one
     * aggregation job per commit; selection is a driver-side filter of
-    * the manifest list — exactly how log-structured formats plan
+    * the live add list — exactly how log-structured formats plan
     * scans, and at 100 TB the scan cost drops by the pruned fraction
     * with zero data-path change. */
   def pipeStatsPrune(spark: SparkSession, sfDir: String): DataFrame = {
@@ -513,8 +512,8 @@ object Pipeline {
           ord.filter(col("o_orderkey") > lo && col("o_orderkey") <= hi).repartition(1)
         },
       statsCols = Seq("o_orderkey"))
-    val (kept, total) = Manifest.pruneFiles(spark, tbl, q + 1, 2 * q)
-    spark.read.parquet(kept.map(f => s"$tbl/$f"): _*)
+    val (kept, total) = DeltaLog.pruneFiles(spark, tbl, Map("o_orderkey" -> (q + 1, 2 * q)))
+    spark.read.parquet(kept.map(DeltaLog.resolvedPath(tbl, _)): _*)
       .filter(col("o_orderkey") > q && col("o_orderkey") <= 2 * q)
       .agg(count(lit(1)).as("n_rows"), sum(expr(s"o_orderkey % $P")).as("key_check"))
       .select(col("n_rows"), col("key_check"),
@@ -528,16 +527,16 @@ object Pipeline {
        |  4::BIGINT AS n_files_total, 1::BIGINT AS n_files_scanned
        |FROM orders, m WHERE o_orderkey > q AND o_orderkey <= 2 * q""".stripMargin
 
-  /** Z-ORDER LAYOUT × MANIFEST STATS-PRUNING, composed (the two halves
+  /** Z-ORDER LAYOUT × LOG STATS-PRUNING, composed (the two halves
     * exist separately as `op_zorder_key` and `pipe_stats_prune`; this is
     * what they are FOR): orders rows are laid out by fixed-width slabs
     * of their 16-bit Morton key over (o_custkey, order date) —
     * [[graft.operators.Relational.withZval]], the same bit math the
     * oracle recomputes — one file per non-empty slab, each committed
     * with per-file min/max stats on BOTH dimensions
-    * ([[Manifest.append]]'s multi-column `statsCols`). A 2-D range read
+    * ([[DeltaLog.append]]'s multi-column `statsCols`). A 2-D range read
     * (the middle half of each dimension) then plans its scan via
-    * [[Manifest.pruneFilesND]]: because z-ordering gives every slab a
+    * [[DeltaLog.pruneFiles]]: because z-ordering gives every slab a
     * tight bounding box in both dimensions, the query box intersects
     * only a fraction of the files — which the oracle DERIVES (not
     * pins): DuckDB recomputes the z-key, the slab assignment, each
@@ -570,8 +569,9 @@ object Pipeline {
     val (cl, ch, dl, dh) = (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))
     val (ckLo, ckHi) = (cl + (ch - cl) / 4, cl + (ch - cl) * 3 / 4)
     val (dLo, dHi) = (dl + (dh - dl) / 4, dl + (dh - dl) * 3 / 4)
-    val (kept, total) = Manifest.pruneFilesND(spark, tbl, Seq((ckLo, ckHi), (dLo, dHi)))
-    spark.read.parquet(kept.map(f => s"$tbl/$f"): _*)
+    val (kept, total) = DeltaLog.pruneFiles(spark, tbl,
+      Map("o_custkey" -> (ckLo, ckHi), "d" -> (dLo, dHi)))
+    spark.read.parquet(kept.map(DeltaLog.resolvedPath(tbl, _)): _*)
       .filter(col("o_custkey").between(ckLo, ckHi) && col("d").between(dLo, dHi))
       .agg(count(lit(1)).as("n_rows"),
         sum(expr(s"o_orderkey % $P")).as("key_check"),
@@ -624,10 +624,10 @@ object Pipeline {
     * (missed remove, wrong version order, schema not honored) shifts a
     * checksum and fails the hash.
     *
-    * Scale: identical division of labor to [[Manifest]] — the log is
-    * file-count metadata replayed driver-side; every data byte moves
-    * through executor parquet jobs. The format is the PUBLIC one, so
-    * engines with delta support read these tables directly. */
+    * Scale: the log is file-count metadata replayed driver-side; every
+    * data byte moves through executor parquet jobs. The format is the
+    * PUBLIC one, so engines with delta support read these tables
+    * directly. */
   def pipeDeltaLog(spark: SparkSession, sfDir: String): DataFrame = {
     val base = s"$scratchBase/delta_${sfName(sfDir)}"
     wipe(spark, base)
@@ -1669,7 +1669,7 @@ object Pipeline {
     * Scale: compaction reads/writes data through executor parquet jobs
     * sized by `targetFiles`; vacuum is a driver-side listing diff
     * (file-count metadata), deleting without reading — same division
-    * of labor as [[Compact]]/[[Manifest]], emitted as public Delta. */
+    * of labor as [[Compact]], emitted as public Delta. */
   def pipeDeltaOptimize(spark: SparkSession, sfDir: String): DataFrame = {
     val base = s"$scratchBase/delta_opt_${sfName(sfDir)}"
     wipe(spark, base)

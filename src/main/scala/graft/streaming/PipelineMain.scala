@@ -98,30 +98,33 @@ object PipelineMain {
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val servePort = sys.env.getOrElse("GRAFT_SERVE_PORT", "8080").toInt
-    val live = args.contains("--live")
-    val wantServe = args.contains("--serve")
-    val srv =
-      if (live)
-        // in live mode the service is up DURING ingestion, republishing
-        // every compactEvery batches — the resident deployment form
-        runLive(spark, sfDir, workDir, nBatches = nCycles,
-          cadenceMs = 2000L, processingTimeMs = 500L,
-          serve = wantServe, publishEvery = compactEvery, servePort = servePort)
-      else {
-        runPipeline(spark, sfDir, workDir, nCycles, compactEvery)
-        if (wantServe)
-          Some(Serve.start(spark, s"$workDir/results", Segments, port = servePort,
-            watchdogMs = 1000L))
-        else None
+    // stop on failure too: Spark's non-daemon threads would otherwise keep
+    // the JVM alive after main throws, hanging a caller that waits on it
+    try {
+      spark.sparkContext.setLogLevel("WARN")
+      val servePort = sys.env.getOrElse("GRAFT_SERVE_PORT", "8080").toInt
+      val live = args.contains("--live")
+      val wantServe = args.contains("--serve")
+      val srv =
+        if (live)
+          // in live mode the service is up DURING ingestion, republishing
+          // every compactEvery batches — the resident deployment form
+          runLive(spark, sfDir, workDir, nBatches = nCycles,
+            cadenceMs = 2000L, processingTimeMs = 500L,
+            serve = wantServe, publishEvery = compactEvery, servePort = servePort)
+        else {
+          runPipeline(spark, sfDir, workDir, nCycles, compactEvery)
+          if (wantServe)
+            Some(Serve.start(spark, s"$workDir/results", Segments, port = servePort,
+              watchdogMs = 1000L))
+          else None
+        }
+      srv.foreach { s =>
+        println(s"[pipeline] serving results on port ${s.port} (GET /health, " +
+          s"/segments, /results/<segment>); Ctrl-C to stop")
+        Thread.currentThread().join()
       }
-    srv.foreach { s =>
-      println(s"[pipeline] serving results on port ${s.port} (GET /health, " +
-        s"/segments, /results/<segment>); Ctrl-C to stop")
-      Thread.currentThread().join()
-    }
-    spark.stop()
+    } finally spark.stop()
   }
 
   /** Crash repair (run under the lock before any cycle): a previous run
@@ -131,13 +134,28 @@ object PipelineMain {
     * silently skip batches against the stale log). Finishing the
     * compaction retires the log and returns the table to plain-parquet
     * listing; every other crash point is already consistent (see
-    * compact()'s ordering note). */
-  private def repair(spark: SparkSession, tables: String, ckpt: String): Unit =
+    * compact()'s ordering note).
+    *
+    * A sink log with no batch file is the other stranded form: a drain
+    * killed after its sink created the log dir but before its query
+    * checkpointed a batch. It committed
+    * nothing and no batch ran, so no sink file exists in the table; the
+    * plain files are the whole table, and a read through the empty log
+    * would see none of them. The repair deletes that log. */
+  private[streaming] def repair(spark: SparkSession, tables: String, ckpt: String): Unit =
     for (t <- schemas.keys) {
-      if (Fs.exists(spark, s"$tables/$t/_spark_metadata") &&
-          !Fs.exists(spark, s"$ckpt/$t")) {
-        val (b, a) = Compact.compactTable(spark, s"$tables/$t")
-        println(s"[pipeline] crash-repaired $t via compaction: $b -> $a files")
+      val log = s"$tables/$t/_spark_metadata"
+      if (Fs.exists(spark, log) && !Fs.exists(spark, s"$ckpt/$t")) {
+        // batch files are named `<id>` or `<id>.compact`
+        val committed = Fs.listFiles(spark, log, { n =>
+          val id = n.takeWhile(_ != '.'); id.nonEmpty && id.forall(_.isDigit) })
+        if (committed.isEmpty) {
+          Fs.deleteRec(spark, log)
+          println(s"[pipeline] crash-repaired $t: retired an empty sink log")
+        } else {
+          val (b, a) = Compact.compactTable(spark, s"$tables/$t")
+          println(s"[pipeline] crash-repaired $t via compaction: $b -> $a files")
+        }
       }
     }
 
@@ -221,7 +239,7 @@ object PipelineMain {
     * the next drain pinned to a stale checkpoint lineage). Compaction
     * is idempotent on an already-compacted table, so the unconditional
     * finish-time pass costs one small rewrite at most.
-    * ([[Manifest]] is the compaction-under-append form.) Idempotent:
+    * ([[DeltaLog.optimize]] is the compaction-under-append form.) Idempotent:
     * a second invocation re-compacts a plain parquet dir and
     * re-overwrites the served results. */
   def finishAndServe(spark: SparkSession, sfDir: String, workDir: String): Unit =

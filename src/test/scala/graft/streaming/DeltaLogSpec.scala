@@ -1,9 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{Column, Row}
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.sources.Tables
 
 /** [[DeltaLog]] — the public `_delta_log` interchange format.
   *
@@ -376,6 +377,52 @@ class DeltaLogSpec extends SparkSpec {
     assert(st.get("numRecords").asLong == 10 &&
       st.get("minValues").has("k") && st.get("maxValues").has("k") &&
       st.get("nullCount").get("k").asLong == 0)
+    // OPTIMIZE rewrites to stats-less files: pruning keeps them all and
+    // the ranged read stays exact through the residual predicate
+    DeltaLog.optimize(spark, tbl, targetFiles = 1)
+    val (kept3, total3) = DeltaLog.pruneFiles(spark, tbl, Map("k" -> (12L, 17L)))
+    assert(total3 == 1 && kept3.size == 1, "stats-less files must never be pruned")
+    assert(spark.read.parquet(kept3.map(f => s"$tbl/$f"): _*)
+      .filter($"k".between(12, 17)).count() == 6)
+
+    // an all-NULL stats column records no min/max: its file is kept
+    val nt = freshDir("stats-null")
+    DeltaLog.append(spark, nt, Seq((1L, "a"), (2L, "b")).toDF("k", "v")
+      .withColumn("n", lit(null).cast("long")).coalesce(1), statsCols = Seq("n"))
+    assert(DeltaLog.pruneFiles(spark, nt, Map("n" -> (0L, 1L)))._1.size == 1)
+
+    // 2-D named stats: the same orders rows, one file per slab, laid out
+    // by a z-order slab over (o_custkey, order day) and by an orderkey
+    // hash. Z-ordered files have tight boxes in BOTH dimensions, so a box
+    // read prunes; hash files each span both full ranges, so none prunes
+    val z = graft.operators.Relational.withZval(Tables.orders(spark, sf))
+      .withColumn("d", datediff(col("o_orderdate"), lit("1970-01-01")).cast("long"))
+      .select("o_orderkey", "o_custkey", "d", "zval")
+    def layout(tag: String, slab: Column): String = {
+      val t = freshDir(tag)
+      DeltaLog.append(spark, t, z.withColumn("slab", slab).drop("zval").repartition(col("slab")),
+        statsCols = Seq("o_custkey", "d"), partitionBy = Seq("slab"))
+      t
+    }
+    val ztbl = layout("stats-z", expr("zval div 8192"))
+    val htbl = layout("stats-hash", col("o_orderkey") % 8)
+    val r = z.agg(min(col("o_custkey")), max(col("o_custkey")),
+      min(col("d")), max(col("d"))).first()
+    val (cl, ch, dl, dh) = (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))
+    val box = Map(
+      "o_custkey" -> (cl + (ch - cl) / 4, cl + (ch - cl) * 3 / 4),
+      "d" -> (dl + (dh - dl) / 4, dl + (dh - dl) * 3 / 4))
+    val (keptZ, totZ) = DeltaLog.pruneFiles(spark, ztbl, box)
+    val (keptH, totH) = DeltaLog.pruneFiles(spark, htbl, box)
+    assert(totH == 8 && keptH.size == totH,
+      s"uncorrelated layout should keep every file, kept ${keptH.size}/$totH")
+    assert(keptZ.size < totZ, s"z-order layout must prune, kept ${keptZ.size}/$totZ")
+    // the pruned read is still exact
+    val inBox = (df: org.apache.spark.sql.DataFrame) => df.filter(
+      col("o_custkey").between(box("o_custkey")._1, box("o_custkey")._2) &&
+        col("d").between(box("d")._1, box("d")._2))
+    assert(inBox(spark.read.parquet(keptZ.map(DeltaLog.resolvedPath(ztbl, _)): _*)).count() ==
+      inBox(z).count())
   }
 
   test("checkpoint round-trip: checkpoint+tail replay equals pure JSON replay; cleanup keeps the table readable") {
@@ -555,6 +602,23 @@ class DeltaLogSpec extends SparkSpec {
     ow.join()
     assert(DeltaLog.read(spark, tbl).collect().toSeq == Seq(Row(100L, "z")),
       "optimize resurrected overwritten content")
+
+    // an APPEND landing between optimize's rewrite and its commit is no
+    // conflict: the commit rebases past it, the raced file survives, and
+    // every version stays complete and readable
+    val atbl = freshDir("optimize-append-race")
+    (0 until 4).foreach { i =>
+      DeltaLog.append(spark, atbl, Seq((i.toLong, s"v$i")).toDF("k", "v").coalesce(1))
+    }
+    val (nIn, nOut) = DeltaLog.optimize(spark, atbl, targetFiles = 1, beforeCommit = () => {
+      DeltaLog.append(spark, atbl, Seq((4L, "v4")).toDF("k", "v").coalesce(1)); ()
+    })
+    assert((nIn, nOut) == ((4, 1)))
+    assert(DeltaLog.latestVersion(spark, atbl) == 5, "4 appends, the raced append, then optimize")
+    assert(DeltaLog.snapshot(spark, atbl)._2.size == 2, "1 compacted + 1 raced-append file")
+    assert((0L to 5L).map(v => DeltaLog.read(spark, atbl, v).count()) == Seq(1L, 2L, 3L, 4L, 5L, 5L))
+    assert(DeltaLog.vacuum(spark, atbl, retentionMs = 0L) == 4)
+    assert(DeltaLog.read(spark, atbl).select("k").as[Long].collect().sorted.toSeq == (0L to 4L))
   }
 
   test("overwrite racing an append retires the raced files (rebase inside commit loop)") {
@@ -569,6 +633,32 @@ class DeltaLogSpec extends SparkSpec {
     // every prior version stays readable (time travel over the log)
     assert(DeltaLog.read(spark, tbl, 1L).select("k").collect().map(_.getLong(0)).sorted
       .sameElements(Array(1L, 2L)))
+    // a txn watermark is not a file: it rides through an overwrite, so a
+    // redelivered batch still skips while the replaced version stays readable
+    assert(DeltaLog.appendBatch(spark, tbl, "s", 0L, Seq((4L, "d")).toDF("k", "v").coalesce(1)))
+    DeltaLog.overwrite(spark, tbl, Seq((5L, "e")).toDF("k", "v").coalesce(1))
+    assert(!DeltaLog.appendBatch(spark, tbl, "s", 0L, Seq((4L, "d")).toDF("k", "v").coalesce(1)))
+    assert(DeltaLog.read(spark, tbl).collect().toSeq == Seq(Row(5L, "e")))
+    assert(DeltaLog.read(spark, tbl, 3L).select("k").as[Long].collect().sorted.toSeq == Seq(3L, 4L))
+
+    // N writers appending at once each win one version: every loser of a
+    // version race rebases onto the winner, so the versions run densely
+    // 0..N-1 and every row survives
+    val par = freshDir("append-threads")
+    val n = 8
+    val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val threads = (0 until n).map { i =>
+      new Thread(() => {
+        try DeltaLog.append(spark, par, Seq((i.toLong, s"t$i")).toDF("k", "v").coalesce(1))
+        catch { case e: Throwable => errs.add(e) }
+      })
+    }
+    threads.foreach(_.start()); threads.foreach(_.join())
+    assert(errs.isEmpty, s"append thread failed: ${Option(errs.peek())}")
+    val commits = Fs.listFiles(spark, s"$par/_delta_log", _.endsWith(".json"))
+      .map(f => new org.apache.hadoop.fs.Path(f._1).getName).sorted
+    assert(commits == (0 until n).map(v => f"$v%020d.json"))
+    assert(DeltaLog.read(spark, par).select("k").as[Long].collect().sorted.toSeq == (0L until n.toLong))
   }
 
   test("partitioned append: Hive layout on disk, partitionValues in the log, pruning shrinks the file list") {

@@ -14,7 +14,7 @@ import graft.SparkSpec
   * the path's scheme ([[Fs]]) exercises its real multi-scheme route.
   * (The reference's pipeline config points its data dirs at `s3://`
   * URLs — pipeline/config.yml:1-3 — so this is the semantics our
-  * Manifest/DeltaLog commit paths must survive, by refusal if not by
+  * DeltaLog commit path must survive, by refusal if not by
   * support.) */
 class MockS3FileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
   import org.apache.hadoop.fs.FileStatus
@@ -90,26 +90,13 @@ class ObjectStoreFsSpec extends SparkSpec {
     // both renames to the SAME commit name return true — the second
     // silently vanishes the first committer's "published" version;
     // on local FS Fs.commitFile's hard-link protocol makes the loser
-    // observe false instead (ManifestSpec pins that)
-    assert(Fs.rename(spark, s"$dir/a.tmp", s"$dir/00000001.manifest"))
-    assert(Fs.rename(spark, s"$dir/b.tmp", s"$dir/00000001.manifest"))
-    val in = new Path(s"$dir/00000001.manifest")
-      .getFileSystem(Fs.conf(spark)).open(new Path(s"$dir/00000001.manifest"))
+    // observe false instead (DeltaLogSpec's thread race pins that)
+    assert(Fs.rename(spark, s"$dir/a.tmp", s"$dir/00000000000000000001.json"))
+    assert(Fs.rename(spark, s"$dir/b.tmp", s"$dir/00000000000000000001.json"))
+    val in = new Path(s"$dir/00000000000000000001.json")
+      .getFileSystem(Fs.conf(spark)).open(new Path(s"$dir/00000000000000000001.json"))
     val winner = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
     assert(winner == "committer B") // A's commit is gone
-  }
-
-  test("Manifest commit path refuses the scheme loudly and publishes no version") {
-    import spark.implicits._
-    val tbl = freshDir("manifest")
-    val ex = intercept[UnsupportedOperationException] {
-      Manifest.append(spark, tbl, Seq((1L, "a"), (2L, "b")).toDF("k", "v"))
-    }
-    assert(ex.getMessage.contains("scheme 'mocks3'"))
-    assert(ex.getMessage.contains("transactional table format"))
-    // nothing was published: the manifest dir holds no version file, so
-    // a later reader sees an empty table, not a half-commit
-    assert(Fs.listFiles(spark, s"$tbl/_manifest", _ => true).isEmpty)
   }
 
   test("DeltaLog commit path refuses the scheme loudly and publishes no version") {
@@ -119,6 +106,8 @@ class ObjectStoreFsSpec extends SparkSpec {
       DeltaLog.append(spark, tbl, Seq((1L, "a")).toDF("k", "v"))
     }
     assert(ex.getMessage.contains("scheme 'mocks3'"))
+    assert(ex.getMessage.contains("transactional table format"))
+    // nothing was published, so a later reader sees no table, not a half-commit
     assert(Fs.listFiles(spark, s"$tbl/_delta_log", _.endsWith(".json")).isEmpty)
     assert(DeltaLog.latestVersion(spark, tbl) == -1L)
   }

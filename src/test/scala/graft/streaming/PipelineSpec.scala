@@ -620,7 +620,7 @@ class PipelineSpec extends SparkSpec {
         .option("maxFilesPerTrigger", "1").parquet(src)
         .writeStream
         .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
-          Manifest.appendBatch(spark, tbl, "ingest", id, batch,
+          DeltaLog.appendBatch(spark, tbl, "ingest", id, batch,
             beforeCommit = () =>
               if (inject && id == 2 && !crashed) {
                 crashed = true
@@ -640,23 +640,24 @@ class PipelineSpec extends SparkSpec {
     run(inject = true)
     assert(crashed, "the injected crash must have fired")
     // the ledger shows exactly the two pre-crash batches; the dead
-    // writer's batch-2 files were adopted into data/ but belong to NO
-    // manifest — a reader still sees only the committed snapshot
-    assert(Manifest.lastCommittedBatch(spark, tbl, "ingest") == 1)
-    val committedAtCrash = Manifest.read(spark, tbl).count()
+    // writer's batch-2 files were adopted into the table root but belong
+    // to NO commit — a reader still sees only the committed snapshot
+    assert(DeltaLog.lastTxnVersion(spark, tbl, "ingest") == 1)
+    val committedAtCrash = DeltaLog.read(spark, tbl).count()
     assert(committedAtCrash > 0 && committedAtCrash < total)
-    val orphans = Fs.listFiles(spark, s"$tbl/data", _.endsWith(".parquet")).size -
-      Manifest.snapshot(spark, tbl)._2.count(!_.startsWith("#txn|"))
+    def dataFiles: Int = Fs.listFiles(spark, tbl, _.endsWith(".parquet"))
+      .count(f => new org.apache.hadoop.fs.Path(f._1).getParent.getName != "_delta_log")
+    val orphans = dataFiles - DeltaLog.snapshot(spark, tbl)._2.size
     assert(orphans >= 1, "the crashed batch must leave adopted-but-uncommitted files")
     // restart from the SAME checkpoint — the real recovery path:
     // foreachBatch redelivers the failed batch with its original id
     run(inject = false)
-    assert(Manifest.lastCommittedBatch(spark, tbl, "ingest") == 3)
-    assert(Manifest.read(spark, tbl).count() == total, "rows lost or doubled across the crash")
-    assert(Manifest.read(spark, tbl).select("o_orderkey").distinct().count() == total)
+    assert(DeltaLog.lastTxnVersion(spark, tbl, "ingest") == 3)
+    assert(DeltaLog.read(spark, tbl).count() == total, "rows lost or doubled across the crash")
+    assert(DeltaLog.read(spark, tbl).select("o_orderkey").distinct().count() == total)
     // vacuum reclaims exactly the dead writer's orphans, nothing live
-    assert(Manifest.vacuum(spark, tbl, retentionMs = 0) == orphans)
-    assert(Manifest.read(spark, tbl).count() == total)
+    assert(DeltaLog.vacuum(spark, tbl, retentionMs = 0) == orphans)
+    assert(DeltaLog.read(spark, tbl).count() == total)
   }
 
   test("compaction crash window: a stranded sink log (checkpoint retired, swap not run) fails loud, and the startup repair recovers it") {
@@ -686,9 +687,18 @@ class PipelineSpec extends SparkSpec {
     // the sink log), after which the staged batch drains cleanly
     Compact.compactTable(spark, s"$tables/orders")
     Ingest.drainAll(spark, staging, tables, ckpt, schemas)
-    assert(spark.read.parquet(s"$tables/orders").count() ==
-      Tables.orders(spark, sf).count(),
+    val total = Tables.orders(spark, sf).count()
+    assert(spark.read.parquet(s"$tables/orders").count() == total,
       "post-repair drain must land the staged batch exactly once")
+    // a drain killed after its sink created the log dir but before its
+    // query checkpointed a batch strands an EMPTY log; a read through it
+    // sees no file, so the repair retires it and the plain files stay
+    Compact.deleteRecPublic(spark, s"$ckpt/orders")
+    Compact.compactTable(spark, s"$tables/orders")
+    Fs.mkdirs(spark, s"$tables/orders/_spark_metadata")
+    PipelineMain.repair(spark, tables, ckpt)
+    assert(!Files.exists(Paths.get(s"$tables/orders/_spark_metadata")))
+    assert(spark.read.parquet(s"$tables/orders").count() == total)
   }
 
   test("compaction crash recovery: a death between the swap moves loses no data") {
