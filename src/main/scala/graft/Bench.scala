@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main. Emits ONE JSON line:
   * `{"metric":"total","value":<sum of per-query medians>,"unit":"sec",
@@ -199,38 +198,14 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // TypedImperativeAggregate (SimhashAgg) groups exceed the 128-entry
-      // sort-fallback default in every partition at any real scale; keep
-      // the map-side hash aggregate hashed.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "1000000")
-      // Sort-based shuffle writer for EVERY exchange (r14, SCALE.md
-      // round-14): the default bypassMergeThreshold=200 routes <=200-
-      // partition shuffles through the per-reducer-file writer — one
-      // file create per (map task x reducer), which on this host's
-      // filesystem dominated the dd_* map stages (dd_containment x100n:
-      // 11-30 s bypass vs 2.8-4.7 s sort writer, non-monotonic in the
-      // partition count because 183 vs 276 straddled the threshold).
-      // The single-spill-file sort writer is also the only writer that
-      // exists at real cluster reducer counts.
-      .config("spark.shuffle.sort.bypassMergeThreshold", "1")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.build()
     // Derive LSH/IVF corpus parameters from this fixture's footers so the
     // bench measures the same plans Verify verifies, and size shuffle
     // partitions from the fixture's bytes (round 8, verdict item 7 —
     // identical to the old fixed core count at bench scale, scaling up
     // with the corpus; see Corpus.shufflePartitions for the measurement
     // that rejected a fixed-high AQE initialPartitionNum instead)
-    graft.operators.Corpus.prime(spark, sfDir)
-    spark.conf.set("spark.sql.shuffle.partitions",
-      graft.operators.Corpus.shufflePartitions(spark, sfDir).toString)
+    Session.fitTo(spark, sfDir)
     // Full materialization via the noop v2 sink: every output column is
     // computed and serialized, unlike round 1's count() action, which
     // let Catalyst prune projections under the count (e.g. op_synth_uuid

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,45 +9,11 @@ object Verify {
     val (sfDir, outDir) = (args(0), args(1))
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // µs parquet timestamps: DuckDB-comparable (INT96 is deprecated and
-      // reads back as ns in some arrow paths, breaking value compares).
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      // events.ts is parquet TIMESTAMP(NANOS): set once at build time so
-      // table loaders don't mutate session state mid-query (only nanos
-      // columns are affected; no fixture has others).
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // TypedImperativeAggregate (SimhashAgg) groups exceed the 128-entry
-      // sort-fallback default in every partition at any real scale; keep
-      // the map-side hash aggregate hashed.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "1000000")
-      // Sort-based shuffle writer for EVERY exchange (r14, SCALE.md
-      // round-14): the default bypassMergeThreshold=200 routes <=200-
-      // partition shuffles through the per-reducer-file writer — one
-      // file create per (map task x reducer), which on this host's
-      // filesystem dominated the dd_* map stages (dd_containment x100n:
-      // 11-30 s bypass vs 2.8-4.7 s sort writer, non-monotonic in the
-      // partition count because 183 vs 276 straddled the threshold).
-      // The single-spill-file sort writer is also the only writer that
-      // exists at real cluster reducer counts.
-      .config("spark.shuffle.sort.bypassMergeThreshold", "1")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Pin the corpus-size estimates to THIS fixture before any query runs
-    // or any oracle SQL is dumped — the LSH/IVF parameter derivations and
-    // the oracle strings that embed them must come from the same value
-    // (round 8; see graft.operators.Corpus). Explicit here so a filtered
-    // run that executes no deriving query still dumps synced oracles.
-    graft.operators.Corpus.prime(spark, sfDir)
-    // shuffle partitions sized from fixture bytes (Corpus.shufflePartitions)
-    spark.conf.set("spark.sql.shuffle.partitions",
-      graft.operators.Corpus.shufflePartitions(spark, sfDir).toString)
+    val spark = Session.build()
+    // Fit to THIS fixture before any query runs or any oracle SQL is
+    // dumped — explicit here so a filtered run that executes no deriving
+    // query still dumps synced oracles.
+    Session.fitTo(spark, sfDir)
     new java.io.File(outDir).mkdirs()
     // DuckDB oracle timestamps are tz-naive; Spark TimestampType writes
     // isAdjustedToUTC=true parquet (reads back tz-aware). Session TZ is

@@ -2082,7 +2082,7 @@ object Analytics {
     * checkpointing is semantically a no-op (that is the test). */
   def opCheckpoint(spark: SparkSession, sfDir: String): DataFrame = {
     spark.sparkContext.setCheckpointDir(
-      s"${sys.env.getOrElse("GRAFT_PIPE_DIR", "/root/repo/target/pipe")}/chkpt")
+      s"${graft.Session.pipeDir}/chkpt")
     val stage1 = Tables.orders(spark, sfDir)
       .groupBy("o_custkey")
       .agg(count(lit(1)).as("n_orders"),

@@ -206,7 +206,7 @@ object Dedup {
     * or `batch` (both new). */
   def ddIncrMinhash(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.streaming.{DeltaLog, Fs}
-    val table = sys.env.getOrElse("GRAFT_PIPE_DIR", "/root/repo/target/pipe") +
+    val table = graft.Session.pipeDir +
       s"/incr_lsh_${java.nio.file.Paths.get(sfDir).getFileName.toString}"
     Fs.deleteRec(spark, table)
     // LAZY persists (r15, was 2× Scratch.materialize): the eager count

@@ -1156,7 +1156,7 @@ object Relational {
       if (!spark.catalog.tableExists(name)) {
         build().write.mode("overwrite")
           .bucketBy(nb, key).sortBy(key)
-          .option("path", s"${sys.env.getOrElse("GRAFT_PIPE_DIR", "/root/repo/target/pipe")}/bkt/$name")
+          .option("path", s"${graft.Session.pipeDir}/bkt/$name")
           .saveAsTable(name)
       }
     val ordT = s"graft_bkt_orders_$sfTag"
@@ -1437,7 +1437,7 @@ object Relational {
     * parquet file, read it back, serve. The returned DataFrame is the
     * READ-BACK, so the oracle verifies the write→read roundtrip. */
   def opResultSink(spark: SparkSession, sfDir: String): DataFrame = {
-    val out = s"${sys.env.getOrElse("GRAFT_PIPE_DIR", "/root/repo/target/pipe")}/results/q3_${java.nio.file.Paths.get(sfDir).getFileName}"
+    val out = s"${graft.Session.pipeDir}/results/q3_${java.nio.file.Paths.get(sfDir).getFileName}"
     q3Unshipped(spark, sfDir)
       .coalesce(1) // one result file per segment, like the reference
       .write.mode("overwrite").option("compression", "snappy").parquet(out)

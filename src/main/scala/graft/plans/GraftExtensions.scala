@@ -12,8 +12,8 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Li
   * consumers of the library.
   *
   * Activate with `spark.sql.extensions=graft.plans.GraftExtensions`
-  * (how Verify/Bench/tests create their sessions) or
-  * `SparkSession.builder().withExtensions(new GraftExtensions)`.
+  * (as [[graft.Session]] builds every session) or a builder's
+  * `withExtensions(new GraftExtensions)`.
   */
 object GraftExtensions {
 

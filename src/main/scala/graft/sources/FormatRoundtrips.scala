@@ -20,7 +20,7 @@ object FormatRoundtrips {
 
   private def scratch(sfDir: String, fmt: String): String = {
     val tag = java.nio.file.Paths.get(sfDir).getFileName.toString
-    s"${sys.env.getOrElse("GRAFT_PIPE_DIR", "/root/repo/target/pipe")}/fmt/${fmt}_$tag"
+    s"${graft.Session.pipeDir}/fmt/${fmt}_$tag"
   }
 
   private def summarize(df: DataFrame, fmt: String): DataFrame =

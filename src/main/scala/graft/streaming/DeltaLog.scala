@@ -699,17 +699,23 @@ object DeltaLog {
     * name recurs in every partition dir that task wrote) — one
     * metadata-sized aggregation job, file-count rows to the driver.
     * Stats are NAMED per column, which is what makes Delta skipping
-    * robust to query-order mistakes. */
+    * robust to query-order mistakes. Reads the listed part files, not
+    * the `.scratch_*` root: given a dot-named root, Spark warns "All
+    * paths were ignored" although it then reads it. */
   private def partStats(spark: SparkSession, scratch: String,
-                        statsCols: Seq[String], partDepth: Int): Map[String, String] =
-    if (statsCols.isEmpty) Map.empty
+                        statsCols: Seq[String], partDepth: Int): Map[String, String] = {
+    val files =
+      if (statsCols.isEmpty) Seq.empty
+      else Fs.listFiles(spark, scratch, _.endsWith(".parquet")).map(_._1)
+    if (files.isEmpty) Map.empty
     else {
       import org.apache.spark.sql.functions.{col, count, input_file_name, lit, max, min, sum}
       val aggs = count(lit(1)).as("n") +: statsCols.zipWithIndex.flatMap { case (c, i) =>
         Seq(min(col(c).cast("long")).as(s"mn$i"), max(col(c).cast("long")).as(s"mx$i"),
           sum(col(c).isNull.cast("long")).as(s"nu$i"))
       }
-      spark.read.parquet(scratch)
+      val reader = if (partDepth == 0) spark.read else spark.read.option("basePath", scratch)
+      reader.parquet(files: _*)
         .groupBy(input_file_name().as("f"))
         .agg(aggs.head, aggs.tail: _*)
         .collect()
@@ -728,6 +734,7 @@ object DeltaLog {
             M.writeValueAsString(st))
         }.toMap
     }
+  }
 
   private def removeJson(path: String, dataChange: Boolean = true): String = {
     val root: ObjectNode = M.createObjectNode()

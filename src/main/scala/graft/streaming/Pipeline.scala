@@ -6,6 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Schemas
+import graft.Session.pipeDir
 import graft.functions.Text
 import graft.operators.Journeys
 import graft.sources.Tables
@@ -36,9 +37,6 @@ import graft.sources.Tables
 object Pipeline {
 
   private val P = 1000000007L
-
-  private def scratchBase: String =
-    sys.env.getOrElse("GRAFT_PIPE_DIR", "/root/repo/target/pipe")
 
   private def wipe(spark: SparkSession, dir: String): Unit = {
     Fs.deleteRec(spark, dir)
@@ -89,7 +87,7 @@ object Pipeline {
 
   /** Generate ×2 → ingest ×3 → checksum (see object doc). */
   def pipeIngestRoundtrip(spark: SparkSession, sfDir: String): DataFrame = {
-    val base = s"$scratchBase/ingest_${sfName(sfDir)}"
+    val base = s"$pipeDir/ingest_${sfName(sfDir)}"
     wipe(spark, base)
     val staging = s"$base/staging"
     val tables = s"$base/tables"
@@ -158,7 +156,7 @@ object Pipeline {
 
   /** 16-file table → compact to 2 → checksum + file counts. */
   def pipeCompactRoundtrip(spark: SparkSession, sfDir: String): DataFrame = {
-    val base = s"$scratchBase/compact_${sfName(sfDir)}"
+    val base = s"$pipeDir/compact_${sfName(sfDir)}"
     wipe(spark, base)
     val dir = s"$base/orders"
     Tables.orders(spark, sfDir).repartition(16).write.mode("overwrite").parquet(dir)
@@ -190,7 +188,7 @@ object Pipeline {
     * appends + raced append + compaction = v3), and the vacuum count
     * (the 8 rewritten input files). */
   def pipeTxnCompact(spark: SparkSession, sfDir: String): DataFrame = {
-    val base = s"$scratchBase/txn_${sfName(sfDir)}"
+    val base = s"$pipeDir/txn_${sfName(sfDir)}"
     wipe(spark, base)
     val tbl = s"$base/orders"
     val ord = Tables.orders(spark, sfDir)
@@ -245,7 +243,7 @@ object Pipeline {
     * equality proves the incremental path converges to the batch
     * answer. */
   def pipeIncrAgg(spark: SparkSession, sfDir: String): DataFrame = {
-    val base = s"$scratchBase/incr_${sfName(sfDir)}"
+    val base = s"$pipeDir/incr_${sfName(sfDir)}"
     wipe(spark, base)
     val src = s"$base/src"
     val res = s"$base/res"
@@ -326,7 +324,7 @@ object Pipeline {
     * later commits), while the latest read sees both. The oracle pins
     * both versions' row counts and checksums from the fixture. */
   def pipeTimeTravel(spark: SparkSession, sfDir: String): DataFrame = {
-    val base = s"$scratchBase/tt_${sfName(sfDir)}"
+    val base = s"$pipeDir/tt_${sfName(sfDir)}"
     wipe(spark, base)
     val tbl = s"$base/orders"
     val ord = Tables.orders(spark, sfDir)
@@ -367,7 +365,7 @@ object Pipeline {
     * 3-group aggregate; both sides are version-pinned parquet scans, so
     * the join is shuffle-partitioned on the key with no driver data. */
   def pipeCdcDiff(spark: SparkSession, sfDir: String): DataFrame = {
-    val base = s"$scratchBase/cdc_${sfName(sfDir)}"
+    val base = s"$pipeDir/cdc_${sfName(sfDir)}"
     wipe(spark, base)
     val tbl = s"$base/orders"
     val ord = Tables.orders(spark, sfDir)
@@ -441,7 +439,7 @@ object Pipeline {
     * covers both) — closing the quiesce limitation the parquet-sink
     * pipeline documents. */
   def pipeStreamTxnSink(spark: SparkSession, sfDir: String): DataFrame = {
-    val base = s"$scratchBase/stxn_${sfName(sfDir)}"
+    val base = s"$pipeDir/stxn_${sfName(sfDir)}"
     wipe(spark, base)
     val src = s"$base/src"
     val tbl = s"$base/orders"
@@ -500,7 +498,7 @@ object Pipeline {
     * scans, and at 100 TB the scan cost drops by the pruned fraction
     * with zero data-path change. */
   def pipeStatsPrune(spark: SparkSession, sfDir: String): DataFrame = {
-    val base = s"$scratchBase/prune_${sfName(sfDir)}"
+    val base = s"$pipeDir/prune_${sfName(sfDir)}"
     wipe(spark, base)
     val tbl = s"$base/orders"
     val ord = Tables.orders(spark, sfDir)
@@ -548,7 +546,7 @@ object Pipeline {
     * to the intersected-slab fraction; the layout pass is one
     * range-partitioned write, the planning is driver-side metadata. */
   def pipeZorderPrune(spark: SparkSession, sfDir: String): DataFrame = {
-    val base = s"$scratchBase/zprune_${sfName(sfDir)}"
+    val base = s"$pipeDir/zprune_${sfName(sfDir)}"
     wipe(spark, base)
     val tbl = s"$base/orders"
     val nSlabs = 8
@@ -629,7 +627,7 @@ object Pipeline {
     * PUBLIC one, so engines with delta support read these tables
     * directly. */
   def pipeDeltaLog(spark: SparkSession, sfDir: String): DataFrame = {
-    val base = s"$scratchBase/delta_${sfName(sfDir)}"
+    val base = s"$pipeDir/delta_${sfName(sfDir)}"
     wipe(spark, base)
     val tbl = s"$base/orders"
     val ord = Tables.orders(spark, sfDir)
@@ -660,7 +658,7 @@ object Pipeline {
     * a data scan would find — history never touches data files). */
   def pipeDeltaHistory(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val base = s"$scratchBase/deltah_${sfName(sfDir)}"
+    val base = s"$pipeDir/deltah_${sfName(sfDir)}"
     wipe(spark, base)
     val tbl = s"$base/orders"
     val ord = Tables.orders(spark, sfDir)
@@ -688,7 +686,7 @@ object Pipeline {
     * a dropped good one shifts every column. Audit cost is one scan of
     * the STAGED batch (small), never of main. */
   def pipeDeltaWap(spark: SparkSession, sfDir: String): DataFrame = {
-    val base = s"$scratchBase/wap_${sfName(sfDir)}"
+    val base = s"$pipeDir/wap_${sfName(sfDir)}"
     wipe(spark, base)
     val stage = s"$base/stage"
     val main = s"$base/main"
@@ -729,7 +727,7 @@ object Pipeline {
     * straight from the fixture: any row leaked or dropped by the
     * bronze/silver hops shifts the checksums. */
   def pipeMedallion(spark: SparkSession, sfDir: String): DataFrame = {
-    val base = s"$scratchBase/medallion_${sfName(sfDir)}"
+    val base = s"$pipeDir/medallion_${sfName(sfDir)}"
     wipe(spark, base)
     val ev = Tables.events(spark, sfDir)
       .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
@@ -776,7 +774,7 @@ object Pipeline {
     * log's partitionValues, protocol-literally — data files do not
     * contain it (DeltaLogSpec proves the flat-layout foreign case). */
   def pipeDeltaPartition(spark: SparkSession, sfDir: String): DataFrame = {
-    val base = s"$scratchBase/deltap_${sfName(sfDir)}"
+    val base = s"$pipeDir/deltap_${sfName(sfDir)}"
     wipe(spark, base)
     val tbl = s"$base/events"
     val ev = Tables.events(spark, sfDir)
@@ -805,7 +803,7 @@ object Pipeline {
     * partition pruning and parquet pushdown compose with Delta tables
     * exactly as with Hive layouts. */
   def pipeDeltaNativePrune(spark: SparkSession, sfDir: String): DataFrame = {
-    val base = s"$scratchBase/deltanp_${sfName(sfDir)}"
+    val base = s"$pipeDir/deltanp_${sfName(sfDir)}"
     wipe(spark, base)
     val tbl = s"$base/events"
     val ev = Tables.events(spark, sfDir)
@@ -841,7 +839,7 @@ object Pipeline {
     * the fixture, so a dropped legacy row, a misfilled NULL, or a
     * failed metaData update all shift the checksums. */
   def pipeDeltaEvolve(spark: SparkSession, sfDir: String): DataFrame = {
-    val base = s"$scratchBase/deltaev_${sfName(sfDir)}"
+    val base = s"$pipeDir/deltaev_${sfName(sfDir)}"
     wipe(spark, base)
     val tbl = s"$base/orders"
     val ord = Tables.orders(spark, sfDir)
@@ -889,7 +887,7 @@ object Pipeline {
     * multi-file scan over just the new files; the log replay per
     * trigger is metadata-sized (checkpoint-bounded). */
   def pipeDeltaStream(spark: SparkSession, sfDir: String): DataFrame = {
-    val base = s"$scratchBase/dstream_${sfName(sfDir)}"
+    val base = s"$pipeDir/dstream_${sfName(sfDir)}"
     wipe(spark, base)
     val tbl = s"$base/orders"
     val ord = Tables.orders(spark, sfDir).select(col("o_orderkey"), col("o_totalprice"))
@@ -926,7 +924,7 @@ object Pipeline {
     * CONTAINING matches are rewritten (DeltaDmlSpec pins that); the
     * oracle pins the row-level result. */
   def pipeDeltaDelete(spark: SparkSession, sfDir: String): DataFrame = {
-    val base = s"$scratchBase/ddel_${sfName(sfDir)}"
+    val base = s"$pipeDir/ddel_${sfName(sfDir)}"
     wipe(spark, base)
     val tbl = s"$base/orders"
     val ord = Tables.orders(spark, sfDir)
@@ -973,7 +971,7 @@ object Pipeline {
     * whose build side is bitmap-cardinality-sized (broadcast for
     * selective deletes). */
   def pipeDeltaDv(spark: SparkSession, sfDir: String): DataFrame = {
-    val base = s"$scratchBase/ddv_${sfName(sfDir)}"
+    val base = s"$pipeDir/ddv_${sfName(sfDir)}"
     wipe(spark, base)
     val tbl = s"$base/orders"
     val ord = Tables.orders(spark, sfDir).select(col("o_orderkey"), col("o_totalprice"))
@@ -1016,7 +1014,7 @@ object Pipeline {
     * exactly what the oracle recomputes. A key in the wrong branch, a
     * lost insert, or a double-applied update all shift the checksums. */
   def pipeDeltaMerge(spark: SparkSession, sfDir: String): DataFrame = {
-    val base = s"$scratchBase/dmrg_${sfName(sfDir)}"
+    val base = s"$pipeDir/dmrg_${sfName(sfDir)}"
     wipe(spark, base)
     val tbl = s"$base/orders"
     val ord = Tables.orders(spark, sfDir)
@@ -1063,7 +1061,7 @@ object Pipeline {
     * entities, and the unaffected history never moves. */
   def pipeScd2Delta(spark: SparkSession, sfDir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val base = s"$scratchBase/scd2_${sfName(sfDir)}"
+    val base = s"$pipeDir/scd2_${sfName(sfDir)}"
     wipe(spark, base)
     val tbl = s"$base/dim"
     val cutoff = "TIMESTAMP '1996-01-01 00:00:00'"
@@ -1099,7 +1097,7 @@ object Pipeline {
     * version on top, never history rewrite. At 100 TB the restore
     * commit costs file-count metadata, zero data movement. */
   def pipeDeltaRestore(spark: SparkSession, sfDir: String): DataFrame = {
-    val base = s"$scratchBase/drst_${sfName(sfDir)}"
+    val base = s"$pipeDir/drst_${sfName(sfDir)}"
     wipe(spark, base)
     val tbl = s"$base/orders"
     val ord = Tables.orders(spark, sfDir)
@@ -1137,7 +1135,7 @@ object Pipeline {
     * clone isolation in both directions. This is the 100 TB dev/test
     * workflow: a full-size table copy for the cost of one commit. */
   def pipeDeltaClone(spark: SparkSession, sfDir: String): DataFrame = {
-    val base = s"$scratchBase/dcln_${sfName(sfDir)}"
+    val base = s"$pipeDir/dcln_${sfName(sfDir)}"
     wipe(spark, base)
     val src = s"$base/src"
     val dst = s"$base/clone"
@@ -1190,7 +1188,7 @@ object Pipeline {
     * rewrite). Cost: one partition's write + two metadata commits per
     * run, nothing proportional to the table. */
   def pipeBackfill(spark: SparkSession, sfDir: String): DataFrame = {
-    val base = s"$scratchBase/bkfl_${sfName(sfDir)}"
+    val base = s"$pipeDir/bkfl_${sfName(sfDir)}"
     wipe(spark, base)
     val tbl = s"$base/orders"
     val ord = Tables.orders(spark, sfDir)
@@ -1242,7 +1240,7 @@ object Pipeline {
     * shift `price_check`, since the transform doubles). At 100 TB each
     * batch's merge rewrites only files containing matched keys. */
   def pipeStreamUpsert(spark: SparkSession, sfDir: String): DataFrame = {
-    val base = s"$scratchBase/sups_${sfName(sfDir)}"
+    val base = s"$pipeDir/sups_${sfName(sfDir)}"
     wipe(spark, base)
     val src = s"$base/src"
     val dst = s"$base/dst"
@@ -1306,7 +1304,7 @@ object Pipeline {
     * indexed) additionally needs a delete-by-doc_id pass before the
     * merge — out of scope here, documented as the deployment note. */
   def pipeStreamRagIndex(spark: SparkSession, sfDir: String): DataFrame = {
-    val base = s"$scratchBase/sragix_${sfName(sfDir)}"
+    val base = s"$pipeDir/sragix_${sfName(sfDir)}"
     wipe(spark, base)
     val src = s"$base/src"
     val dst = s"$base/dst"
@@ -1388,7 +1386,7 @@ object Pipeline {
     * both sinks are append-only txn commits — the DLT expectations
     * pattern without a control plane. */
   def pipeStreamQuarantine(spark: SparkSession, sfDir: String): DataFrame = {
-    val base = s"$scratchBase/squar_${sfName(sfDir)}"
+    val base = s"$pipeDir/squar_${sfName(sfDir)}"
     wipe(spark, base)
     val main = s"$base/main"
     val quar = s"$base/quarantine"
@@ -1471,7 +1469,7 @@ object Pipeline {
     * At 100 TB each leg is one bounded scan/write per trigger; nothing
     * is data-proportional to table HISTORY on either side. */
   def pipeDeltaToDelta(spark: SparkSession, sfDir: String): DataFrame = {
-    val base = s"$scratchBase/d2d_${sfName(sfDir)}"
+    val base = s"$pipeDir/d2d_${sfName(sfDir)}"
     wipe(spark, base)
     val srcTbl = s"$base/src"
     val dstTbl = s"$base/dst"
@@ -1522,7 +1520,7 @@ object Pipeline {
     * commit shifts that version's checksums). Oracle recomputes the
     * same split from the fixture. */
   def pipeDeltaCdf(spark: SparkSession, sfDir: String): DataFrame = {
-    val base = s"$scratchBase/dcdf_${sfName(sfDir)}"
+    val base = s"$pipeDir/dcdf_${sfName(sfDir)}"
     wipe(spark, base)
     val tbl = s"$base/orders"
     val ord = Tables.orders(spark, sfDir).select(col("o_orderkey"), col("o_totalprice"))
@@ -1606,7 +1604,7 @@ object Pipeline {
     * (quadratic over history); checkpoint + tail makes every commit
     * O(cadence), and cleanup keeps the log dir file count bounded. */
   def pipeDeltaCheckpoint(spark: SparkSession, sfDir: String): DataFrame = {
-    val base = s"$scratchBase/delta_ckpt_${sfName(sfDir)}"
+    val base = s"$pipeDir/delta_ckpt_${sfName(sfDir)}"
     wipe(spark, base)
     val tbl = s"$base/orders"
     // the checkpoint/replay/cleanup machinery under test is column-count
@@ -1671,7 +1669,7 @@ object Pipeline {
     * (file-count metadata), deleting without reading — same division
     * of labor as [[Compact]], emitted as public Delta. */
   def pipeDeltaOptimize(spark: SparkSession, sfDir: String): DataFrame = {
-    val base = s"$scratchBase/delta_opt_${sfName(sfDir)}"
+    val base = s"$pipeDir/delta_opt_${sfName(sfDir)}"
     wipe(spark, base)
     val tbl = s"$base/orders"
     val ord = Tables.orders(spark, sfDir)
@@ -1743,7 +1741,7 @@ object Pipeline {
     * (integer div, engine-identical), and the sparse-custkey invariant
     * (multiples of 3 must never appear: price_check = 0). */
   def pipeDbgenFidelity(spark: SparkSession, sfDir: String): DataFrame = {
-    val base = s"$scratchBase/dbgen_${sfName(sfDir)}"
+    val base = s"$pipeDir/dbgen_${sfName(sfDir)}"
     wipe(spark, base)
     val staging = s"$base/staging"
     val tables = s"$base/tables"

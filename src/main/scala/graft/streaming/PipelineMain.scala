@@ -72,36 +72,13 @@ object PipelineMain {
   def main(args: Array[String]): Unit = {
     val pos = args.filterNot(_.startsWith("--"))
     val sfDir = pos.headOption.getOrElse("/root/testdata/sf0.001")
-    val workDir = pos.lift(1).getOrElse("/root/repo/target/pipe/main")
+    val workDir = pos.lift(1).getOrElse(s"${graft.Session.pipeDir}/main")
     val nCycles = pos.lift(2).map(_.toInt).getOrElse(4)
     val compactEvery = pos.lift(3).map(_.toInt).getOrElse(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // TypedImperativeAggregate (SimhashAgg) groups exceed the 128-entry
-      // sort-fallback default in every partition at any real scale; keep
-      // the map-side hash aggregate hashed.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "1000000")
-      // Sort-based shuffle writer for EVERY exchange (r14, SCALE.md
-      // round-14): the default bypassMergeThreshold=200 routes <=200-
-      // partition shuffles through the per-reducer-file writer — one
-      // file create per (map task x reducer), which on this host's
-      // filesystem dominated the dd_* map stages (dd_containment x100n:
-      // 11-30 s bypass vs 2.8-4.7 s sort writer, non-monotonic in the
-      // partition count because 183 vs 276 straddled the threshold).
-      // The single-spill-file sort writer is also the only writer that
-      // exists at real cluster reducer counts.
-      .config("spark.shuffle.sort.bypassMergeThreshold", "1")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session.build()
     // stop on failure too: Spark's non-daemon threads would otherwise keep
     // the JVM alive after main throws, hanging a caller that waits on it
     try {
-      spark.sparkContext.setLogLevel("WARN")
       val servePort = sys.env.getOrElse("GRAFT_SERVE_PORT", "8080").toInt
       val live = args.contains("--live")
       val wantServe = args.contains("--serve")

@@ -41,19 +41,10 @@ object MakeScale {
     val dst = args(1)
     val copies = args.lift(2).map(_.toInt).getOrElse(10)
     val dense = args.lift(3).contains("dense-events")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // scaled timestamps write as TIMESTAMP(MICROS), not the legacy INT96
-      // default, so downstream footer probes (Tables.events) and external
-      // readers see the same logical type the shipped fixtures use
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // Session writes TIMESTAMP(MICROS), not the legacy INT96 default, so
+    // downstream footer probes (Tables.events) and external readers see
+    // the same logical type the shipped fixtures use
+    val spark = graft.Session.build()
     if (dense) buildDenseEvents(spark, src, dst, copies)
     else build(spark, src, dst, copies)
     spark.stop()

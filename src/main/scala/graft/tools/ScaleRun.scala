@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Scale-exponent measurement harness (SCALE.md): times each named
   * query at TWO scale factors in one JVM (warm-up + `reps` timed runs
   * each, bench's noop-write action, Scratch released between queries)
@@ -19,27 +17,7 @@ object ScaleRun {
     val ratio = args(2).toDouble
     val names = args(3).split(',').map(_.trim).filter(_.nonEmpty)
     val reps = args.lift(4).map(_.toInt).getOrElse(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "1000000")
-      // Sort-based shuffle writer for EVERY exchange (r14, SCALE.md
-      // round-14): the default bypassMergeThreshold=200 routes <=200-
-      // partition shuffles through the per-reducer-file writer — one
-      // file create per (map task x reducer), which on this host's
-      // filesystem dominated the dd_* map stages (dd_containment x100n:
-      // 11-30 s bypass vs 2.8-4.7 s sort writer, non-monotonic in the
-      // partition count because 183 vs 276 straddled the threshold).
-      // The single-spill-file sort writer is also the only writer that
-      // exists at real cluster reducer counts.
-      .config("spark.shuffle.sort.bypassMergeThreshold", "1")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.build()
 
     def time(name: String, sfDir: String): Seq[Double] = {
       // per-scale shuffle sizing: partitions derive from THIS dir's bytes

@@ -8,25 +8,15 @@ import org.scalatest.funsuite.AnyFunSuite
   * session across the forked test run) + the smoke fixture dir. */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // TypedImperativeAggregate (SimhashAgg) groups exceed the 128-entry
-    // sort-fallback default in every partition at any real scale; keep
-    // the map-side hash aggregate hashed.
-    .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "1000000")
-    // sort-based shuffle writer always — see the Bench builder note
-    .config("spark.shuffle.sort.bypassMergeThreshold", "1")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Session.build(cores = 4)
 
   /** Smoke fixture (TESTDATA.md): smallest scale, fast enough for unit
     * tests; correctness vs DuckDB is the Verify harness's job, these
     * suites cover invariants the oracle can't (nondeterministic ops,
     * streaming semantics, file-level pipeline behavior). */
   val sf = "/root/testdata/sf0.001"
+
+  /** Absolute path of `target/<sub>` in the checkout the tests run from. */
+  def targetDir(sub: String): String =
+    java.nio.file.Paths.get("target", sub).toAbsolutePath.toString
 }

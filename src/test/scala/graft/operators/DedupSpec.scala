@@ -200,7 +200,7 @@ class DedupSpec extends SparkSpec {
         col("doc_a") % 5 === 0 && col("doc_b") % 5 === 0).count() == 0)
       // lifecycle: v0 = history only; latest = full corpus, bands × docs
       // rows, so the NEXT batch's probe sees everything ingested so far
-      val table = sys.env.getOrElse("GRAFT_PIPE_DIR", "/root/repo/target/pipe") +
+      val table = graft.Session.pipeDir +
         s"/incr_lsh_${java.nio.file.Paths.get(sf).getFileName.toString}"
       val v0 = DeltaLog.read(spark, table, version = 0)
       assert(v0.filter(col("doc_id") % 5 === 0).count() == 0, "batch doc in the history snapshot")

@@ -240,7 +240,7 @@ class PlanSpec extends SparkSpec {
     graft.sources.FormatRoundtrips.opPartitionedWrite(spark, sf)
       .write.mode("overwrite").format("noop").save() // materializes the layout
     val tag = java.nio.file.Paths.get(sf).getFileName.toString
-    val dir = s"${sys.env.getOrElse("GRAFT_PIPE_DIR", "/root/repo/target/pipe")}/fmt/part_$tag"
+    val dir = s"${graft.Session.pipeDir}/fmt/part_$tag"
     val pruned = graft.sources.FormatRoundtrips.prunedRead(spark, dir)
     val plan = pruned.queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters") && plan.contains("o_year"),
@@ -266,7 +266,7 @@ class PlanSpec extends SparkSpec {
     graft.sources.FormatRoundtrips.opPartitionedWrite(spark, sf)
       .write.mode("overwrite").format("noop").save() // materializes the layout
     val tag = java.nio.file.Paths.get(sf).getFileName.toString
-    val dir = s"${sys.env.getOrElse("GRAFT_PIPE_DIR", "/root/repo/target/pipe")}/fmt/part_$tag"
+    val dir = s"${graft.Session.pipeDir}/fmt/part_$tag"
     val fact = spark.read.parquet(dir)
     val dim = spark.range(1995, 2002)
       .select(col("id").cast("int").as("d_year"), concat(lit("y"), col("id")).as("d_name"))
@@ -287,7 +287,7 @@ class PlanSpec extends SparkSpec {
     // static filter — pruning can only happen via the runtime subquery.
     graft.sources.FormatRoundtrips.opDppJoin(spark, sf).collect() // writes the layout
     val tag = java.nio.file.Paths.get(sf).getFileName.toString
-    val dir = s"${sys.env.getOrElse("GRAFT_PIPE_DIR", "/root/repo/target/pipe")}/fmt/dpp_$tag"
+    val dir = s"${graft.Session.pipeDir}/fmt/dpp_$tag"
     val j = graft.sources.FormatRoundtrips.dppFact(spark, sf, dir)
     assert(j.collect().nonEmpty)
     val plan = j.queryExecution.executedPlan.toString

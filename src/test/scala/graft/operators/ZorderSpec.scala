@@ -15,7 +15,7 @@ import graft.SparkSpec
 class ZorderSpec extends SparkSpec {
 
   test("z-order files are prunable on BOTH dimensions; single-sort on one") {
-    val base = s"${sys.env.getOrElse("GRAFT_PIPE_DIR", "/root/repo/target/pipe")}/zorder_test"
+    val base = s"${graft.Session.pipeDir}/zorder_test"
     val z = Relational.withZval(graft.sources.Tables.orders(spark, sf))
       .withColumn("days", datediff(col("o_orderdate"), lit("1970-01-01")).cast("bigint"))
       .select("o_orderkey", "o_custkey", "days", "zval")

@@ -27,7 +27,7 @@ class CrashMatrixSpec extends SparkSpec {
   import org.apache.spark.sql.DataFrame
 
   private def freshDir(tag: String): String = {
-    val d = s"/root/repo/target/test-crash/$tag-${java.util.UUID.randomUUID().toString.take(8)}"
+    val d = s"${targetDir("test-crash")}/$tag-${java.util.UUID.randomUUID().toString.take(8)}"
     Fs.deleteRec(spark, d)
     Fs.mkdirs(spark, d)
     d

@@ -17,7 +17,7 @@ import graft.SparkSpec
 class DeletionVectorSpec extends SparkSpec {
 
   private def freshDir(tag: String): String = {
-    val d = s"/root/repo/target/test-dv/$tag-${java.util.UUID.randomUUID().toString.take(8)}"
+    val d = s"${targetDir("test-dv")}/$tag-${java.util.UUID.randomUUID().toString.take(8)}"
     Fs.deleteRec(spark, d)
     Fs.mkdirs(spark, d)
     d

@@ -17,7 +17,7 @@ class DeltaDmlSpec extends SparkSpec {
   import spark.implicits._
 
   private def freshDir(tag: String): String = {
-    val d = s"/root/repo/target/test-dml/$tag-${java.util.UUID.randomUUID().toString.take(8)}"
+    val d = s"${targetDir("test-dml")}/$tag-${java.util.UUID.randomUUID().toString.take(8)}"
     Fs.deleteRec(spark, d)
     d
   }

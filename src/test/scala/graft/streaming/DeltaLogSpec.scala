@@ -21,10 +21,30 @@ import graft.sources.Tables
 class DeltaLogSpec extends SparkSpec {
 
   private def freshDir(tag: String): String = {
-    val d = s"/root/repo/target/test-delta/$tag-${java.util.UUID.randomUUID().toString.take(8)}"
+    val d = s"${targetDir("test-delta")}/$tag-${java.util.UUID.randomUUID().toString.take(8)}"
     Fs.deleteRec(spark, d)
     Fs.mkdirs(spark, d)
     d
+  }
+
+  /** `body`'s result and the WARN messages Spark's `DataSource` logged
+    * while it ran. */
+  private def withDataSourceWarns[T](body: => T): (T, Seq[String]) = {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val logger = LogManager.getLogger("org.apache.spark.sql.execution.datasources.DataSource")
+      .asInstanceOf[Logger]
+    val warns = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val capture = new AbstractAppender("datasource-warns", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel == Level.WARN) warns.add(e.getMessage.getFormattedMessage)
+    }
+    capture.start()
+    logger.addAppender(capture)
+    val out = try body finally { logger.removeAppender(capture); capture.stop() }
+    (out, warns.toArray(Array.empty[String]).toSeq)
   }
 
   private def writeParquetFile(dir: String, name: String, rows: Seq[(Long, String)]): Long = {
@@ -351,11 +371,15 @@ class DeltaLogSpec extends SparkSpec {
   test("add-action stats drive named-column data skipping; stats-less and foreign files are kept conservatively") {
     import spark.implicits._
     val tbl = freshDir("stats")
-    // four range-disjoint appends, each one file with k-stats
-    Seq(0L to 9L, 10L to 19L, 20L to 29L, 30L to 39L).foreach { r =>
-      DeltaLog.append(spark, tbl, r.map(k => (k, s"v$k")).toDF("k", "v").coalesce(1),
-        statsCols = Seq("k"))
+    // four range-disjoint appends, each one file with k-stats; reading
+    // the stats back raises no DataSource warning
+    val (_, appendWarns) = withDataSourceWarns {
+      Seq(0L to 9L, 10L to 19L, 20L to 29L, 30L to 39L).foreach { r =>
+        DeltaLog.append(spark, tbl, r.map(k => (k, s"v$k")).toDF("k", "v").coalesce(1),
+          statsCols = Seq("k"))
+      }
     }
+    assert(appendWarns.isEmpty, s"stats appends warned: $appendWarns")
     val (kept, total) = DeltaLog.pruneFiles(spark, tbl, Map("k" -> (12L, 17L)))
     assert(total == 4 && kept.size == 1, s"expected 1/4 files, got ${kept.size}/$total")
     // the pruned scan still answers the range correctly
@@ -404,8 +428,9 @@ class DeltaLogSpec extends SparkSpec {
         statsCols = Seq("o_custkey", "d"), partitionBy = Seq("slab"))
       t
     }
-    val ztbl = layout("stats-z", expr("zval div 8192"))
-    val htbl = layout("stats-hash", col("o_orderkey") % 8)
+    val ((ztbl, htbl), layoutWarns) = withDataSourceWarns(
+      (layout("stats-z", expr("zval div 8192")), layout("stats-hash", col("o_orderkey") % 8)))
+    assert(layoutWarns.isEmpty, s"partitioned stats appends warned: $layoutWarns")
     val r = z.agg(min(col("o_custkey")), max(col("o_custkey")),
       min(col("d")), max(col("d"))).first()
     val (cl, ch, dl, dh) = (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))

@@ -19,7 +19,7 @@ class DeltaStreamSpec extends SparkSpec {
   import spark.implicits._
 
   private def freshDir(tag: String): String = {
-    val d = s"/root/repo/target/test-dstream/$tag-${java.util.UUID.randomUUID().toString.take(8)}"
+    val d = s"${targetDir("test-dstream")}/$tag-${java.util.UUID.randomUUID().toString.take(8)}"
     Fs.deleteRec(spark, d)
     d
   }

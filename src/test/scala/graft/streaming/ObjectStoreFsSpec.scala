@@ -50,7 +50,7 @@ class MockS3FileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
 class ObjectStoreFsSpec extends SparkSpec {
 
   private def freshDir(tag: String): String = {
-    val local = s"/root/repo/target/test-os/$tag-${java.util.UUID.randomUUID().toString.take(8)}"
+    val local = s"${targetDir("test-os")}/$tag-${java.util.UUID.randomUUID().toString.take(8)}"
     Fs.deleteRec(spark, local)
     Fs.mkdirs(spark, local)
     s"mocks3://$local"

@@ -15,7 +15,7 @@ import graft.sources.Tables
   * source-file retirement, static-dim skip, and compaction invariants. */
 class PipelineSpec extends SparkSpec {
 
-  private val base = "/root/repo/target/test-pipe"
+  private val base = targetDir("test-pipe")
 
   private def wipe(dir: String): Unit = Compact.deleteRecPublic(spark, dir)
 
@@ -373,7 +373,7 @@ class PipelineSpec extends SparkSpec {
       .map(_.getPath).filter(_.contains("scala-library")).head
     def probe(): String = {
       val pb = new ProcessBuilder("java", "-cp",
-        s"/root/repo/target/scala-2.13/classes:$scalaLib",
+        s"${Paths.get(PipelineLock.getClass.getProtectionDomain.getCodeSource.getLocation.toURI)}:$scalaLib",
         "graft.streaming.PipelineLock", "probe", lock)
       pb.redirectErrorStream(true)
       val p = pb.start()

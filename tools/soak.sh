@@ -33,7 +33,7 @@ KILLS="${POS[2]:-8}"
 SEED="${POS[3]:-11}"
 CP="target/scala-2.13/classes:/opt/spark/jars/*"
 ADD_OPENS="--add-opens=java.base/java.lang=ALL-UNNAMED --add-opens=java.base/java.lang.invoke=ALL-UNNAMED --add-opens=java.base/java.lang.reflect=ALL-UNNAMED --add-opens=java.base/java.io=ALL-UNNAMED --add-opens=java.base/java.net=ALL-UNNAMED --add-opens=java.base/java.nio=ALL-UNNAMED --add-opens=java.base/java.util=ALL-UNNAMED --add-opens=java.base/java.util.concurrent=ALL-UNNAMED --add-opens=java.base/java.util.concurrent.atomic=ALL-UNNAMED --add-opens=java.base/sun.nio.ch=ALL-UNNAMED --add-opens=java.base/sun.nio.cs=ALL-UNNAMED --add-opens=java.base/sun.security.action=ALL-UNNAMED --add-opens=java.base/sun.util.calendar=ALL-UNNAMED"
-JAVA="java $ADD_OPENS -Xmx8g -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC -cp $CP"
+JAVA="java $ADD_OPENS -Xmx8g -cp $CP"
 WORK="$(pwd)/target/pipe/soak"
 CTRL="$(pwd)/target/pipe/soak_ctrl"
 rm -rf "$WORK" "$CTRL"
