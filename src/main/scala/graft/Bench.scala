@@ -11,7 +11,8 @@ package graft
   * cannot distinguish a plan regression from host noise):
   *  - queries run in NAME ORDER (a HashMap's hash order differs across
   *    JVMs, which silently reshuffled cache attribution between rounds);
-  *  - the shared dedup pair cache is materialized BEFORE any timing and
+  *  - the shared dedup pair relation (persisted through
+  *    [[graft.Session.memo]]) is materialized BEFORE any timing and
   *    reported as its own `cache_materialize` line, so no dd_* query's
   *    number absorbs the pipeline's most expensive stage;
   *  - TWO clean consecutive full passes over the whole suite; per query
@@ -25,10 +26,11 @@ package graft
   *    query stays in the stdout line's `noise` object only if no other
   *    pass median confirms its min within 1.25× even then — every
   *    remaining flag is a genuinely unpinnable line, with all its pass
-  *    medians shown. The pair cache is session-lived by design, so
+  *    medians shown. The memoized pair relation lives while the
+  *    fixture's `documents` is unchanged, i.e. for the whole bench, so
   *    both passes time dd_* queries under identical warm-cache
   *    conditions; `cache_materialize` reports pass 1's (true) cost,
-  *    and pass 2's confirms the cache held (~0).
+  *    and pass 2's confirms the memo held (~0).
   *
   * Wall-clock contract (round 7): the consumer kills the process at a
   * fixed timeout, and a killed bench records `parsed: null` — so the

@@ -60,4 +60,48 @@ object Session {
     * the working directory (gitignored). */
   def pipeDir: String =
     sys.env.getOrElse("GRAFT_PIPE_DIR", java.nio.file.Paths.get("target/pipe").toAbsolutePath.toString)
+
+  private val memos =
+    new java.util.concurrent.ConcurrentHashMap[(String, String, List[Any]), (Seq[(String, Long, Long)], Any)]()
+
+  /** The one memo for values derived from input files. The key is
+    * `(applicationId, name, params)`; each entry keeps its value with a
+    * witness, the (path, size, mtime) listing of `inputs` taken BEFORE
+    * `compute` ran (the identity [[graft.streaming.DeltaLog]]'s replay
+    * cache trusts). A lookup whose fresh listing differs drops the old
+    * entry (unpersisting a `Dataset` value), refreshes Spark's caches
+    * over the inputs — Spark matches cached plans by path, so the
+    * recomputed plan would otherwise read the old rows — and recomputes.
+    *
+    * `compute` runs outside the map (get, compute, put): memo calls nest
+    * (the pair plan primes [[graft.operators.Corpus]] through its own
+    * memo), which `computeIfAbsent` refuses ("Recursive update"). Two
+    * threads that miss at once both compute; the later put wins. */
+  def memo[T](spark: SparkSession, name: String, inputs: Seq[String], params: Any*)(compute: => T): T = {
+    val key = (spark.sparkContext.applicationId, name, params.toList)
+    val witness = inputs.flatMap(graft.streaming.Fs.listFileStats(spark, _, _ => true))
+    memos.get(key) match {
+      case (`witness`, v) => v.asInstanceOf[T]
+      case stale =>
+        if (stale != null) {
+          release(memos.remove(key))
+          inputs.foreach(spark.catalog.refreshByPath)
+        }
+        val v = compute
+        release(memos.put(key, (witness, v)))
+        v
+    }
+  }
+
+  /** Drop every memo entry, unpersisting `Dataset` values (ScaleRun: each
+    * timed rep must pay the full computation). */
+  def forgetMemos(): Unit =
+    memos.keySet.forEach(k => release(memos.remove(k)))
+
+  /** Blocking, as in [[graft.operators.Scratch.release]]: the next
+    * compute usually persists the same plan again. */
+  private def release(entry: (Seq[(String, Long, Long)], Any)): Unit = entry match {
+    case (_, ds: org.apache.spark.sql.Dataset[_]) => ds.unpersist(blocking = true); ()
+    case _ => ()
+  }
 }

@@ -12,7 +12,8 @@ import org.apache.spark.sql.SparkSession
   * path toward its quadratic form. So the estimate is now read from the
   * DATA: an exact row count from the parquet footers of the corpus table —
   * a metadata-only read (no row data, no Spark job), microseconds per file,
-  * cached per path for the JVM's lifetime.
+  * memoized per path while the files behind it are unchanged
+  * ([[graft.Session.memo]]), so a rewritten table is re-counted.
   *
   * Oracle synchronization (the reason previous rounds used a static
   * default): the DuckDB oracle SQL must be generated from the IDENTICAL
@@ -20,11 +21,13 @@ import org.apache.spark.sql.SparkSession
   * gate fails spuriously. That is preserved by ordering, not by constants:
   * [[graft.Verify]] primes this object for its fixture dir BEFORE running
   * queries or dumping `oracle_sql.json`, and every derived-parameter query
-  * re-primes (cached, idempotent) for its own sfDir on entry — so within a
+  * re-primes (memoized, idempotent) for its own sfDir on entry — so within a
   * process, plans and oracles always derive from the same footer count.
-  * One sfDir per process is the harness contract (Verify/Bench/ScaleRun
-  * all hold it); a service processing multiple corpora concurrently would
-  * key the estimate per corpus path instead of per JVM.
+  * The COUNT is per path, but the primed ESTIMATE is one value per JVM:
+  * the last fixture primed wins. One sfDir at a time is the harness
+  * contract (Verify/Bench hold one; ScaleRun re-primes per scale); a
+  * service processing multiple corpora concurrently would have to pass
+  * the estimate with each query instead.
   *
   * The fallback chain for sessions that never prime (unit tests driving a
   * single operator): system property (`graft.corpus.embeddings` /
@@ -33,13 +36,10 @@ import org.apache.spark.sql.SparkSession
   */
 object Corpus {
 
-  private val rowCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-
   /** Exact row count of a parquet file (or directory of part files) from
     * footers only — no row-group data is read and no Spark job runs. */
   def parquetRows(spark: SparkSession, path: String): Long =
-    rowCache.computeIfAbsent(path, _ => {
+    graft.Session.memo(spark, "parquetRows", Seq(path), path) {
       val conf = spark.sessionState.newHadoopConf()
       val p = new org.apache.hadoop.fs.Path(path)
       val fs = p.getFileSystem(conf)
@@ -52,7 +52,7 @@ object Corpus {
         val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
         try r.getRecordCount finally r.close()
       }.sum
-    })
+    }
 
   @volatile private var embPrimed: Option[Long] = None
   @volatile private var docPrimed: Option[Long] = None
@@ -78,20 +78,11 @@ object Corpus {
     .orElse(sys.props.get("graft.corpus.documents").map(_.toLong))
     .getOrElse(500L)
 
-  /** Total on-disk bytes of a fixture dir's parquet tables (one listing,
-    * cached). The input-size signal for [[shufflePartitions]]. */
+  /** Total on-disk bytes of a fixture dir's files: a sum over one
+    * recursive listing, as cheap as the witness a memo would take. The
+    * input-size signal for [[shufflePartitions]]. */
   def dirBytes(spark: SparkSession, sfDir: String): Long =
-    rowBytesCache.computeIfAbsent(sfDir, _ => {
-      val conf = spark.sessionState.newHadoopConf()
-      val p = new org.apache.hadoop.fs.Path(sfDir)
-      val fs = p.getFileSystem(conf)
-      def sz(s: org.apache.hadoop.fs.FileStatus): Long =
-        if (s.isDirectory) fs.listStatus(s.getPath).map(sz).sum else s.getLen
-      fs.listStatus(p).map(sz).sum
-    })
-
-  private val rowBytesCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+    graft.streaming.Fs.listFileStats(spark, sfDir, _ => true).map(_._2).sum
 
   /** Shuffle partition count DERIVED FROM INPUT BYTES (round-8, verdict
     * item 7): one partition per ~2 MB of compressed fixture parquet,

@@ -300,29 +300,22 @@ object Dedup {
       .select("doc_id", "n", "g")
   }
 
-  /** Per-(session, sfDir) cache of the verified LSH pair relation: the
-    * dedup pipeline computes pairs ONCE and feeds every consumer
-    * (pair report, clustering, keep-list) — recomputing the shingle →
-    * minhash → band → verify pipeline per consumer would double the
-    * most expensive stage. In a persisted deployment this is the
-    * staging table between the pair job and the cluster job; here it is
-    * an executor-cached DataFrame. Keyed by the applicationId STRING,
-    * not the session object: a cached DataFrame strongly references its
-    * SparkSession through QueryExecution, so a weak session key could
-    * never be collected (the WeakHashMap value-refers-to-key pitfall —
-    * round-2 advice). Entries therefore live until JVM exit — bounded
-    * at one DataFrame handle per (app, sfDir), which is the harness's
-    * JVM-per-invocation model; a long-lived service would evict on a
-    * SparkListener application-end event. */
-  private val pairCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String, Int, Int), DataFrame]
-
+  /** The verified LSH pair relation, persisted once per (session,
+    * sfDir, banding) through [[graft.Session.memo]] with `documents` as
+    * its input: the dedup pipeline computes pairs ONCE and feeds every
+    * consumer (pair report, clustering, keep-list) — recomputing the
+    * shingle → minhash → band → verify pipeline per consumer would
+    * double the most expensive stage. In a persisted deployment this is
+    * the staging table between the pair job and the cluster job; here it
+    * is an executor-cached DataFrame. A rewritten `documents` replaces
+    * (and unpersists) the entry, so there is one relation per key. */
   private def minhashPairs(spark: SparkSession, sfDir: String,
                            bands: Int = Bands, rowsPerBand: Int = RowsPerBand): DataFrame =
-    pairCache.getOrElseUpdate(
-      (spark.sparkContext.applicationId, sfDir, bands, rowsPerBand),
+    graft.Session.memo(spark, "minhashPairs", Seq(Tables.path(sfDir, "documents")),
+      sfDir, bands, rowsPerBand) {
       minhashLshPlan(spark, sfDir, bands, rowsPerBand)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    }
 
   /** Force the shared pair relation to materialize (count() the persisted
     * plan). The bench calls this BEFORE timing any dd_* query so the
@@ -344,16 +337,6 @@ object Dedup {
   val pairCacheConsumers: Set[String] = Set(
     "dd_minhash_lsh", "dd_minhash_lsh_wide", "dd_cluster",
     "dd_cluster_stats", "dd_minhash_recall")
-
-  /** Drop every cached pair relation (unpersist + forget). The bench
-    * keeps the cache session-lived BY DESIGN (cache_materialize is its
-    * own line); the scale harness needs the opposite — each timed rep
-    * of the pair PIPELINE must pay the full shingle→minhash→band→verify
-    * cost, or the measured exponent is that of a cached read. */
-  def releasePairCache(): Unit = {
-    pairCache.values.foreach(_.unpersist())
-    pairCache.clear()
-  }
 
   /** MinHash+LSH near-duplicate detection, threshold 0.8 Jaccard.
     * shingle → per-(band,row) md5-minhash → band signature → equi-join

@@ -80,13 +80,11 @@ object IvfPq {
       .withColumn("res", expr(residExpr(coarse, "emb")))
       .select(col("vec_id"), col("cell"), col("res"))
 
-  /** Trained (coarse, pq-residual) codebooks, cached like [[Pq]]'s. */
-  private val fitCache = new java.util.concurrent.ConcurrentHashMap[(String, String),
-    (Map[(Int, Int), Array[Double]], Map[(Int, Int), Array[Double]])]()
-
+  /** Trained (coarse, pq-residual) codebooks, memoized like [[Pq]]'s
+    * through [[graft.Session.memo]] while `embeddings` is unchanged. */
   private def fit(spark: SparkSession, sfDir: String)
       : (Map[(Int, Int), Array[Double]], Map[(Int, Int), Array[Double]]) =
-    fitCache.computeIfAbsent((spark.sparkContext.applicationId, sfDir), { _ =>
+    graft.Session.memo(spark, "ivfpqFit", Seq(Tables.path(sfDir, "embeddings")), sfDir) {
       val e = fullVec(spark, sfDir)
       val coarse = Pq.lloydFit(spark,
         e.select(col("vec_id"), lit(0).as("m"), col("emb").as("sub")), Cells, CoarseIters)
@@ -94,7 +92,7 @@ object IvfPq {
         .select(col("vec_id"), explode(expr(s"sequence(0, ${M - 1})")).as("m"), col("res"))
         .select(col("vec_id"), col("m"), expr(s"slice(res, m * $Dsub + 1, $Dsub)").as("sub"))
       (coarse, Pq.lloydFit(spark, svRes, K, PqIters))
-    })
+    }
 
   /** IVFPQ top-5 per probe (nprobe=2, residual-ADC ranking). */
   def annIvfPq(spark: SparkSession, sfDir: String): DataFrame = {

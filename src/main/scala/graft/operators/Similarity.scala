@@ -746,20 +746,17 @@ object Similarity {
       s"struct(-(${dotS("emb", centArr(cents, l))} / (nrm * ${dl(cnrm(cents, l))})) as negcos, $l as lbl)"
     }.mkString("array_min(array(", ", ", ")).lbl")
 
-  /** Trained IVF centroids per (applicationId, sfDir, iters) — the
-    * same deterministic-fit memo [[Pq]] (codebookCache) and [[IvfPq]]
-    * (fitCache) already keep; Similarity was the odd one out, paying
-    * the full 3-iteration Lloyd fit (3 × assignment argmax + explode +
-    * collect — StageProf: a 5.8 s-CPU assignment stage per round) on
-    * EVERY ann_ivf / ann_ivf_recall invocation (r15). Values are plain
-    * double arrays — no Spark references, no session-retention hazard. */
-  private val ivfCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String, Int), Map[Int, Array[Double]]]()
-
+  /** Trained IVF centroids per (session, sfDir, iters), memoized while
+    * `embeddings` is unchanged ([[graft.Session.memo]], as [[Pq]] and
+    * [[IvfPq]] do): without it every ann_ivf / ann_ivf_recall
+    * invocation paid the full 3-iteration Lloyd fit (3 × assignment
+    * argmax + explode + collect — a 5.8 s-CPU assignment stage per
+    * round, r15). Values are plain double arrays — no Spark references. */
   private def ivfCentroids(spark: SparkSession, sfDir: String,
                            iters: Int): Map[Int, Array[Double]] =
-    ivfCache.computeIfAbsent((spark.sparkContext.applicationId, sfDir, iters),
-      _ => ivfCentroidsFit(spark, sfDir, iters))
+    graft.Session.memo(spark, "ivfCentroids", Seq(Tables.path(sfDir, "embeddings")), sfDir, iters) {
+      ivfCentroidsFit(spark, sfDir, iters)
+    }
 
   /** Lloyd fit: per-label fixed-point-mean init, then `iters` rounds of
     * assign (one distributed map per round) + grouped fixed-point mean

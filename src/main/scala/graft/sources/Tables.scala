@@ -79,11 +79,10 @@ object Tables {
     * assertion promised. The reference is unit-agnostic for free via
     * pyarrow (reference pipeline/preprocess.py:38).
     *
-    * Probe result per distinct path is cached: one footer read per JVM. */
-  private val tsTypeCache = new java.util.concurrent.ConcurrentHashMap[String, DataType]()
-
+    * The probe result is memoized per path while the file is unchanged
+    * ([[graft.Session.memo]]): one footer read per fixture version. */
   private def probeEventsTsType(spark: SparkSession, p: String): DataType =
-    tsTypeCache.computeIfAbsent(p, _ => {
+    graft.Session.memo(spark, "eventsTsType", Seq(p), p) {
       val field = spark.read.parquet(p).schema.find(_.name == "ts").getOrElse(
         throw new IllegalArgumentException(s"events fixture at $p has no `ts` column"))
       field.dataType match {
@@ -94,7 +93,7 @@ object Tables {
             "TIMESTAMP(NANOS)/INT64 nanos (reads as LongType under " +
             "nanosAsLong); refusing to guess a unit")
       }
-    })
+    }
 
   /** Raw ns → µs TimestampType. Integer `div`, not `/`: ns epoch values
     * (~1.7e18) exceed double's 2^53 integer range, so float division would

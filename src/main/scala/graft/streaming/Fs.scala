@@ -102,27 +102,15 @@ object Fs {
         "'succeed' and one commit would vanish — use a transactional table format there")
   }
 
-  /** Recursive listing of regular files under `path` whose name passes
-    * `keep`; empty when the directory is absent. */
-  def listFiles(spark: SparkSession, path: String, keep: String => Boolean): Seq[(String, Long)] = {
-    val (fs, p) = fsOf(path, conf(spark))
-    if (!fs.exists(p)) Seq.empty
-    else {
-      val it = fs.listFiles(p, true)
-      val buf = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
-      while (it.hasNext) {
-        val st = it.next()
-        if (st.isFile && keep(st.getPath.getName))
-          buf += ((st.getPath.toString, st.getLen))
-      }
-      buf.toSeq
-    }
-  }
+  /** [[listFileStats]] without the modification times. */
+  def listFiles(spark: SparkSession, path: String, keep: String => Boolean): Seq[(String, Long)] =
+    listFileStats(spark, path, keep).map { case (f, len, _) => (f, len) }
 
-  /** [[listFiles]] with each file's modification time — the identity
-    * triple (path, length, mtime) a snapshot cache needs to detect that
-    * a file it read earlier is still the same file (r15: the Delta
-    * replay cache). */
+  /** Recursive listing of regular files under `path` whose name passes
+    * `keep`, as (path, length, mtime); empty when the path is absent. The
+    * triple is the identity a snapshot cache needs to detect that a file
+    * it read earlier is still the same file (the Delta replay cache,
+    * [[graft.Session.memo]]'s witness). */
   def listFileStats(spark: SparkSession, path: String,
                     keep: String => Boolean): Seq[(String, Long, Long)] = {
     val (fs, p) = fsOf(path, conf(spark))

@@ -4,8 +4,8 @@ import graft.SparkSpec
 
 /** [[Corpus]] — the runtime corpus-size estimator behind the LSH/IVF
   * parameter derivations (round 8). The properties that matter:
-  * the footer count is EXACT (equals a real scan's count), priming is
-  * idempotent and per-path cached, and the derived parameters move with
+  * the footer count is EXACT (equals a real scan's count) and follows a
+  * rewritten path, priming is idempotent, and the derived parameters move with
   * the primed corpus — the contract that keeps Spark plans and DuckDB
   * oracle SQL generated from the same value. */
 class CorpusSpec extends SparkSpec {
@@ -18,6 +18,14 @@ class CorpusSpec extends SparkSpec {
     val dir = "target/test-corpus/parts.parquet"
     spark.range(0, 1000).repartition(4).write.mode("overwrite").parquet(dir)
     assert(Corpus.parquetRows(spark, dir) == 1000L)
+  }
+
+  test("parquetRows: an overwritten path is re-counted, not served from a stale count") {
+    val dir = "target/test-corpus/rewritten.parquet"
+    spark.range(0, 100).write.mode("overwrite").parquet(dir)
+    assert(Corpus.parquetRows(spark, dir) == 100L)
+    spark.range(0, 250).write.mode("overwrite").parquet(dir)
+    assert(Corpus.parquetRows(spark, dir) == 250L)
   }
 
   test("prime: derived LSH parameters track the primed corpus and stay oracle-consistent") {

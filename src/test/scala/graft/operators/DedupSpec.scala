@@ -211,4 +211,40 @@ class DedupSpec extends SparkSpec {
       assert(idx.select("doc_id").distinct().count() == nDocs)
     } finally incr.unpersist()
   }
+
+  test("a rewritten documents table recomputes the memoized pair relation and unpersists the old one") {
+    val dir = targetDir("test-dedup-memo")
+    val docs = s"$dir/documents.parquet"
+    val src = spark.read.parquet(s"$sf/documents.parquet")
+    src.write.mode("overwrite").parquet(docs)
+    try {
+      // the persisted RDD behind the pair relation (cache lookups match
+      // by plan, and the recomputed plan equals this one)
+      def cachedRdds(df: org.apache.spark.sql.DataFrame): Set[Int] =
+        df.queryExecution.withCachedData.collect {
+          case r: org.apache.spark.sql.execution.columnar.InMemoryRelation =>
+            r.cacheBuilder.cachedColumnBuffers.id
+        }.toSet
+      val first = Dedup.ddMinhashLsh(spark, dir)
+      first.count()
+      val firstRdds = cachedRdds(first)
+      assert(firstRdds.nonEmpty && firstRdds.subsetOf(spark.sparkContext.getPersistentRDDs.keySet))
+      // one added exact duplicate of an existing (shingle-bearing) doc,
+      // swapped in by a rename as another writer would: a Spark write to
+      // `docs` itself would re-cache plans over the path and hide a
+      // stale memo
+      val orig = src.filter(size(split(col("text"), " ")) >= 3).agg(min("doc_id")).head.getLong(0)
+      val dupId = src.agg(max("doc_id")).head.getLong(0) + 1
+      val staged = targetDir("test-dedup-memo-staged")
+      src.union(src.filter(col("doc_id") === orig).withColumn("doc_id", lit(dupId)))
+        .write.mode("overwrite").parquet(staged)
+      graft.streaming.Fs.deleteRec(spark, docs)
+      graft.streaming.Fs.renameOrFail(spark, staged, docs)
+      val second = Dedup.ddMinhashLsh(spark, dir)
+      assert(second.filter(col("doc_a") === orig && col("doc_b") === dupId).count() == 1,
+        "the pair of the added duplicate is missing: a stale pair relation was served")
+      assert(firstRdds.intersect(spark.sparkContext.getPersistentRDDs.keySet).isEmpty,
+        "the replaced pair relation is still persisted")
+    } finally Corpus.prime(spark, sf)
+  }
 }

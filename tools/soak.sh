@@ -39,7 +39,7 @@ CTRL="$(pwd)/target/pipe/soak_ctrl"
 rm -rf "$WORK" "$CTRL"
 
 echo "== soak: control run (uninterrupted, $N batches${MODE:+, live}) =="
-SPARK_GRAFT_CPUS=8 $JAVA graft.streaming.PipelineMain "$SF" "$CTRL" "$N" 2 $MODE \
+$JAVA graft.streaming.PipelineMain "$SF" "$CTRL" "$N" 2 $MODE \
   > /tmp/soak_ctrl.log 2>&1
 
 # Deterministic pseudo-random kill delays (seconds) from the seed, so a
@@ -52,7 +52,7 @@ echo "== soak: $KILLS chaos runs, kill delays: $DELAYS =="
 i=0
 for d in $DELAYS; do
   i=$((i + 1))
-  SPARK_GRAFT_CPUS=8 $JAVA graft.streaming.PipelineMain "$SF" "$WORK" "$N" 2 $MODE \
+  $JAVA graft.streaming.PipelineMain "$SF" "$WORK" "$N" 2 $MODE \
     > "/tmp/soak_chaos_$i.log" 2>&1 &
   pid=$!
   sleep "$d"
@@ -65,7 +65,7 @@ for d in $DELAYS; do
 done
 
 echo "== soak: final clean run (crash-repair + finish) =="
-SPARK_GRAFT_CPUS=8 $JAVA graft.streaming.PipelineMain "$SF" "$WORK" "$N" 2 $MODE \
+$JAVA graft.streaming.PipelineMain "$SF" "$WORK" "$N" 2 $MODE \
   > /tmp/soak_final.log 2>&1
 
 echo "== soak: comparing chaos end-state vs control =="
