@@ -308,13 +308,20 @@ object Dedup {
     * double the most expensive stage. In a persisted deployment this is
     * the staging table between the pair job and the cluster job; here it
     * is an executor-cached DataFrame. A rewritten `documents` replaces
-    * (and unpersists) the entry, so there is one relation per key. */
+    * (and unpersists) the entry, so there is one relation per key. The
+    * relation materializes here, so the shingle relation its plan
+    * persisted is released before the entry is stored: the entry is the
+    * only thing a replaced or forgotten memo leaves to unpersist. */
   private def minhashPairs(spark: SparkSession, sfDir: String,
                            bands: Int = Bands, rowsPerBand: Int = RowsPerBand): DataFrame =
     graft.Session.memo(spark, "minhashPairs", Seq(Tables.path(sfDir, "documents")),
       sfDir, bands, rowsPerBand) {
-      minhashLshPlan(spark, sfDir, bands, rowsPerBand)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val (pairs, sh) = minhashLshPlan(spark, sfDir, bands, rowsPerBand)
+      pairs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK).count()
+      // the loaded pair cache no longer reads it (Spark re-plans only
+      // dependents whose buffers are not yet loaded)
+      sh.unpersist(blocking = true)
+      pairs
     }
 
   /** Force the shared pair relation to materialize (count() the persisted
@@ -356,11 +363,13 @@ object Dedup {
     minhashPairs(spark, sfDir, b, r)
   }
 
+  /** The verified pair plan and the shingle relation it reads,
+    * persisted: consumed three times (minhash explode + both
+    * verification sides) — see the ddNgramJaccard note; eager count for
+    * the same cold-cache race reason (Scratch.materialize scaladoc). The
+    * caller unpersists the shingles once the pairs are materialized. */
   private def minhashLshPlan(spark: SparkSession, sfDir: String,
-                             bands: Int = Bands, rowsPerBand: Int = RowsPerBand): DataFrame = {
-    // persisted: consumed three times (minhash explode + both
-    // verification sides) — see the ddNgramJaccard note; eager count for
-    // the same cold-cache race reason (Scratch.materialize scaladoc)
+                             bands: Int, rowsPerBand: Int): (DataFrame, DataFrame) = {
     val sh = Text.shingled(spark, sfDir)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     sh.count()
@@ -387,7 +396,7 @@ object Dedup {
         .as("p"))
       .select(col("p.doc_a").as("doc_a"), col("p.doc_b").as("doc_b"))
       .distinct()
-    verifyCandidates(cand, sh)
+    (verifyCandidates(cand, sh), sh)
   }
 
   /** Exact-Jaccard verification of a candidate (doc_a, doc_b) relation

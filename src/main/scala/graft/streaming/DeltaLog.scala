@@ -745,6 +745,19 @@ object DeltaLog {
     M.writeValueAsString(root)
   }
 
+  /** Write `df` into a fresh `<table>/.scratch_<id>` dir, the staging
+    * area every writer adopts its parts from, and drop the `_SUCCESS`
+    * marker; returns the scratch path. A writer killed inside this write
+    * leaves the dir behind, and [[vacuum]] reclaims it once stale. */
+  private def writeScratch(spark: SparkSession, table: String, df: DataFrame,
+                           partitionBy: Seq[String] = Seq.empty): String = {
+    val scratch = s"$table/.scratch_${java.util.UUID.randomUUID().toString.take(8)}"
+    val w = df.write.mode("overwrite")
+    (if (partitionBy.isEmpty) w else w.partitionBy(partitionBy: _*)).parquet(scratch)
+    Fs.deleteIfExists(spark, s"$scratch/_SUCCESS")
+    scratch
+  }
+
   /** Adopt the parts of a finished scratch write as root-level
     * `part-NNNNN-<uuid>.parquet` files (Delta's unpartitioned layout);
     * returns (relative path, size, source part name) triples — the
@@ -885,10 +898,7 @@ object DeltaLog {
              statsCols: Seq[String] = Seq.empty,
              partitionBy: Seq[String] = Seq.empty,
              mergeSchema: Boolean = false): Long = {
-    val scratch = s"$table/.scratch_${java.util.UUID.randomUUID().toString.take(8)}"
-    val w = df.write.mode("overwrite")
-    (if (partitionBy.isEmpty) w else w.partitionBy(partitionBy: _*)).parquet(scratch)
-    Fs.deleteIfExists(spark, s"$scratch/_SUCCESS")
+    val scratch = writeScratch(spark, table, df, partitionBy)
     val schema = df.schema
     val stats = partStats(spark, scratch, statsCols, partitionBy.size)
     if (partitionBy.isEmpty) {
@@ -1120,9 +1130,7 @@ object DeltaLog {
                   batchId: Long, df: DataFrame, checkpointEvery: Int = 10,
                   beforeCommit: () => Unit = () => ()): Boolean = {
     if (lastTxnVersion(spark, table, appId) >= batchId) return false
-    val scratch = s"$table/.scratch_${java.util.UUID.randomUUID().toString.take(8)}"
-    df.write.mode("overwrite").parquet(scratch)
-    Fs.deleteIfExists(spark, s"$scratch/_SUCCESS")
+    val scratch = writeScratch(spark, table, df)
     val schema = df.schema
     val mine = adoptParts(spark, table, scratch)
     beforeCommit()
@@ -1163,10 +1171,9 @@ object DeltaLog {
         s"optimize on partitioned table $table unsupported (adds would drop partitionValues)")
       val (_, live, schema) = snapshot(spark, table)
       if (live.size <= targetFiles) return (live.size, live.size)
-      val scratch = s"$table/.scratch_${java.util.UUID.randomUUID().toString.take(8)}"
-      spark.read.schema(schema).parquet(live.map(f => resolvedPath(table, f)): _*)
-        .repartition(targetFiles).write.mode("overwrite").parquet(scratch)
-      Fs.deleteIfExists(spark, s"$scratch/_SUCCESS")
+      val scratch = writeScratch(spark, table,
+        spark.read.schema(schema).parquet(live.map(f => resolvedPath(table, f)): _*)
+          .repartition(targetFiles))
       val mine = adoptParts(spark, table, scratch)
       beforeCommit()
       try {
@@ -1198,7 +1205,10 @@ object DeltaLog {
     * lost compactions) by filesystem mtime. Time travel to versions
     * whose files were vacuumed stops working, exactly as in Delta;
     * readers of the current version are unaffected because live files
-    * are never candidates. Returns the number of files deleted. */
+    * are never candidates. A `.scratch_*` dir (a writer killed inside
+    * its scratch write) goes by the orphan rule too: whole, once its
+    * newest mtime is older than the cutoff. Returns the number of data
+    * files and scratch dirs deleted. */
   def vacuum(spark: SparkSession, table: String, retentionMs: Long = 7L * 24 * 3600 * 1000): Int = {
     // allowDv: victims are non-live `.parquet` only — DV'd files are
     // live (kept), and `.bin` vectors are never candidates at all
@@ -1215,8 +1225,8 @@ object DeltaLog {
         (full, p.stripPrefix(tableAbs).stripPrefix("/"))
       }
       .filter { case (_, rel) =>
-        // listFiles walks recursively: skip the log and in-flight
-        // scratch/checkpoint work dirs (active writers own those)
+        // listFiles walks recursively: skip the log and the dot-named
+        // scratch/checkpoint work dirs (scratch dirs age whole, below)
         !rel.startsWith("_delta_log/") &&
           !rel.split('/').exists(_.startsWith(".")) &&
           !st.live.contains(rel)
@@ -1230,7 +1240,15 @@ object DeltaLog {
         }
       }
     victims.foreach { case (full, _) => Fs.deleteIfExists(spark, full) }
-    victims.size
+    val root = new org.apache.hadoop.fs.Path(table)
+    val deadScratch = root.getFileSystem(Fs.conf(spark)).listStatus(root).toSeq
+      .filter(d => d.isDirectory && d.getPath.getName.startsWith(".scratch_"))
+      .filter { d =>
+        val files = Fs.listFileStats(spark, d.getPath.toString, _ => true).map(_._3)
+        (d.getModificationTime +: files).max <= cutoff
+      }
+    deadScratch.foreach(d => Fs.deleteRec(spark, d.getPath.toString))
+    victims.size + deadScratch.size
   }
 
   /** Overwrite: one commit that removes every currently-live file and
@@ -1245,9 +1263,7 @@ object DeltaLog {
     require(latestVersion(spark, table) < 0 ||
         replay(spark, table, -1L).partitionColumns.isEmpty,
       s"overwrite on partitioned table $table unsupported (adds would drop partitionValues)")
-    val scratch = s"$table/.scratch_${java.util.UUID.randomUUID().toString.take(8)}"
-    df.write.mode("overwrite").parquet(scratch)
-    Fs.deleteIfExists(spark, s"$scratch/_SUCCESS")
+    val scratch = writeScratch(spark, table, df)
     val schema = df.schema
     val mine = adoptParts(spark, table, scratch)
     commit(spark, table, parent =>
@@ -1309,9 +1325,7 @@ object DeltaLog {
     val survivors = spark.read.schema(schema)
       .parquet(touched.map(f => s"$table/$f"): _*)
       .filter(!predicate)
-    val scratch = s"$table/.scratch_${java.util.UUID.randomUUID().toString.take(8)}"
-    survivors.write.mode("overwrite").parquet(scratch)
-    Fs.deleteIfExists(spark, s"$scratch/_SUCCESS")
+    val scratch = writeScratch(spark, table, survivors)
     val mine = adoptParts(spark, table, scratch)
     val v = commit(spark, table, _ =>
       touched.map(removeJson(_)) ++ mine.map { case (p, size, _) => addJson(p, size) })
@@ -1471,9 +1485,7 @@ object DeltaLog {
     val schema = st.schema
     val survivors = dvMaskedScanFiles(spark, table, dvAdds, schema)
       .select(schema.fieldNames.map(org.apache.spark.sql.functions.col).toSeq: _*)
-    val scratch = s"$table/.scratch_${java.util.UUID.randomUUID().toString.take(8)}"
-    survivors.write.mode("overwrite").parquet(scratch)
-    Fs.deleteIfExists(spark, s"$scratch/_SUCCESS")
+    val scratch = writeScratch(spark, table, survivors)
     val mine = adoptParts(spark, table, scratch)
     val purged = dvAdds.map(_._1)
     val v = commit(spark, table, parent => {
@@ -1563,9 +1575,7 @@ object DeltaLog {
         .join(srcKeys, keyCols, "left_anti")
         .select(schema.fieldNames.map(col).toSeq: _*)
         .unionAll(src.select(schema.fieldNames.map(col).toSeq: _*))
-    val scratch = s"$table/.scratch_${java.util.UUID.randomUUID().toString.take(8)}"
-    survivors.write.mode("overwrite").parquet(scratch)
-    Fs.deleteIfExists(spark, s"$scratch/_SUCCESS")
+    val scratch = writeScratch(spark, table, survivors)
     val mine = adoptParts(spark, table, scratch)
     try {
       val v = commit(spark, table, parent => {

@@ -1,10 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 
-/** Incremental JSON-lines → parquet ingestion as ONE Structured Streaming
+/** Incremental JSON-lines → Delta table ingestion as ONE Structured Streaming
   * query per table — the Spark-native form of the reference's per-file
   * task fan-out (reference pipeline/preprocess.py:35-59, workflow.py:16-19):
   *
@@ -19,21 +19,26 @@ import org.apache.spark.sql.types.StructType
   *    in bounded micro-batches (`maxFilesPerTrigger`), then stops — the
   *    scheduled-batch shape of the reference's 15-minute Prefect flow.
   *    A long-lived deployment would use `Trigger.ProcessingTime`.
-  *  - K2/T3 exactly-once append: the parquet sink records committed
-  *    files in `_spark_metadata`; batch reads of the table honor that
-  *    commit log, so a batch that fails mid-write is invisible until
-  *    retried — the role Delta's transaction log plays in the reference
-  *    (reference pipeline/preprocess.py:41-44). Re-running the stream
-  *    with the same checkpoint re-processes nothing (T5 idempotency).
+  *  - K2/T3 exactly-once append: each micro-batch is one
+  *    [[DeltaLog.appendBatch]] commit carrying the batch's files and a
+  *    `txn` {appId = query id, version = batch id} action, so a batch
+  *    that fails mid-write is invisible until retried and a replayed
+  *    batch commits nothing — the reference's
+  *    `write_deltalake(mode="append")` (reference
+  *    pipeline/preprocess.py:41-44), on the same public log the
+  *    compaction and the reduce use. Re-running the stream with the
+  *    same checkpoint re-processes nothing (T5 idempotency).
   *  - K3 retirement: `cleanSource=delete` removes a batch's source
   *    files once a SUBSEQUENT batch commits (reference `fs.rm`,
   *    pipeline/preprocess.py:45) — asynchronous and one batch late, so
   *    a quiesced stream leaves its final batch's files staged until the
   *    next cycle. That is at-least-once retirement, and it is safe: the
   *    checkpoint's source log, not file absence, prevents re-reads.
-  *  - T4 mutual exclusion: one streaming query owns one sink; Spark
-  *    serializes micro-batches within a query by construction, replacing
-  *    the reference's FileLock (reference pipeline/settings.py:37-40).
+  *  - T4 mutual exclusion: one streaming query per table serializes
+  *    its micro-batches by construction; the table's other writer, the
+  *    compaction, commits through the same optimistic log, and the
+  *    pipeline lock orders it against the drains (reference
+  *    pipeline/settings.py:37-40).
   *
   * Scale: ingestion parallelism is input-file × partition parallelism on
   * executors; the driver only coordinates micro-batch boundaries. At
@@ -63,41 +68,17 @@ object Ingest {
   def appetite(spark: SparkSession): Int =
     math.max(DefaultMaxFilesPerTrigger, spark.sparkContext.defaultParallelism)
 
-  /** Drain everything currently staged for `table` into
-    * `tablesDir/<table>`, exactly once. Blocks until the drain finishes.
-    *
-    * Crash-consistency guard: the streaming checkpoint (source log) and
-    * the sink's `_spark_metadata` (commit log) must live and die
-    * together. A maintenance crash can strand either half, and both
-    * stranded states lose data SILENTLY if a drain proceeds:
-    *  - checkpoint WITHOUT sink log (crash during the first-ever drain
-    *    before any commit): resuming is safe only because nothing was
-    *    committed — the checkpoint is retired and discovery restarts;
-    *    no staged file was deleted (retirement is post-commit), so
-    *    nothing is lost or doubled.
-    *  - sink log WITHOUT checkpoint (crash between a compaction's
-    *    checkpoint retirement and its table swap): a fresh query would
-    *    number batches from 0, and FileStreamSink skips every batchId
-    *    already in the sink log — the new data would be dropped without
-    *    an error. Deleting the log instead would hide the OLD files
-    *    from the fresh log the new query writes. There is no safe
-    *    automatic choice at this layer, so it FAILS LOUD; the
-    *    orchestrator repairs by finishing the compaction
-    *    ([[PipelineMain]] does this on startup), which retires the log
-    *    and returns the table to plain-parquet listing. */
-  def drainTable(spark: SparkSession, stagingDir: String, tablesDir: String,
-                 ckptDir: String, table: String, schema: StructType,
-                 maxFilesPerTrigger: Int = 0): Unit =
-    streamTable(spark, stagingDir, tablesDir, ckptDir, table, schema,
-      Trigger.AvailableNow(), maxFilesPerTrigger).awaitTermination()
-
   /** Start (and return, still running) the ingestion query for `table`
-    * under an arbitrary trigger — `Trigger.AvailableNow` gives the
-    * batch-drain cadence ([[drainTable]] wraps it), a
-    * `Trigger.ProcessingTime` gives the long-lived wall-clock mode the
-    * reference's 15-minute schedule corresponds to
-    * ([[PipelineMain.runLive]]). The crash-consistency guard runs either
-    * way. */
+    * under `trigger`: `Trigger.AvailableNow` gives the batch-drain
+    * cadence ([[drainAll]]), a `Trigger.ProcessingTime` the long-lived
+    * wall-clock mode the reference's 15-minute schedule corresponds to
+    * ([[PipelineMain.runLive]]). Each micro-batch lands through
+    * [[DeltaLog.appendBatch]] keyed by the query's id, which Spark keeps
+    * in the checkpoint and exposes on the batch thread as the
+    * `sql.streaming.queryId` local property — Delta's own sink rule. A
+    * batch replayed from the same checkpoint skips against its `txn`
+    * watermark; a fresh checkpoint is a fresh query id, so its batches
+    * can never be mistaken for committed ones. */
   def streamTable(spark: SparkSession, stagingDir: String, tablesDir: String,
                   ckptDir: String, table: String, schema: StructType,
                   trigger: Trigger,
@@ -105,16 +86,6 @@ object Ingest {
     // 0 = derive from the session ([[appetite]]); an explicit positive
     // value pins the batch size (tests exercising multi-batch drains)
     val mfpt = if (maxFilesPerTrigger > 0) maxFilesPerTrigger else appetite(spark)
-    val ckptPath = s"$ckptDir/$table"
-    val sinkLog = s"$tablesDir/$table/_spark_metadata"
-    if (Fs.exists(spark, ckptPath) && !Fs.exists(spark, sinkLog))
-      Fs.deleteRec(spark, ckptPath) // no commit ever happened; restart discovery
-    if (!Fs.exists(spark, ckptPath) && Fs.exists(spark, sinkLog))
-      throw new IllegalStateException(
-        s"table $table has a sink commit log but no checkpoint — an interrupted " +
-          "compaction left it half-retired; finish the compaction (retire the log " +
-          "by rewriting the table) before draining, or new batches would be " +
-          "silently skipped against the stale log")
     val src = spark.readStream
       .schema(schema)
       .option("timestampFormat", Synthesize.TsFmt)
@@ -122,25 +93,24 @@ object Ingest {
       .option("cleanSource", "delete")
       .json(s"$stagingDir/$table")
     src.writeStream
-      .format("parquet")
-      .option("path", s"$tablesDir/$table")
+      .foreachBatch { (df: DataFrame, id: Long) =>
+        val appId = spark.sparkContext.getLocalProperty("sql.streaming.queryId")
+        DeltaLog.appendBatch(spark, s"$tablesDir/$table", appId, id, df); ()
+      }
       .option("checkpointLocation", s"$ckptDir/$table")
-      .outputMode("append")
       .trigger(trigger)
       .start()
   }
 
   /** Drain all staged tables CONCURRENTLY (skips tables never staged):
     * each table is its own streaming query over its own checkpoint and
-    * sink, with no cross-table dependency at ingest time (the
+    * Delta log, with no cross-table dependency at ingest time (the
     * reference's O3 ordering constraint binds GENERATION — the keymap
     * must exist before lineitem is staged — not ingestion of the
     * self-contained staged files). Starting all queries before awaiting
     * any overlaps their micro-batches across the executor pool — on a
     * cluster, table count × file × partition parallelism instead of one
-    * table at a time. Guard failures (the stranded-sink-log state)
-    * still surface: start() runs the guard synchronously per table
-    * before anything is awaited. */
+    * table at a time. */
   def drainAll(spark: SparkSession, stagingDir: String, tablesDir: String,
                ckptDir: String, schemas: Map[String, StructType]): Unit = {
     val queries = schemas.toSeq.collect {

@@ -17,7 +17,7 @@ import graft.sources.Tables
   *
   *  - `pipe_ingest_roundtrip`: two [[Synthesize]] generation cycles
   *    (disjoint key slices) each drained by the [[Ingest]] streaming
-  *    query into parquet tables, plus a third drain with nothing staged
+  *    query into Delta tables, plus a third drain with nothing staged
   *    (the idempotent no-op), then a checksum summary of the final
   *    tables. Every transform in the synthesis is content-addressed
   *    (md5 keys, md5-uniform noise, fixed affine windows), so DuckDB
@@ -26,9 +26,10 @@ import graft.sources.Tables
   *    append → commit path end-to-end, including exactly-once across
   *    the three runs (a duplicated or dropped file would shift
   *    `n_rows`/checksums).
-  *  - `pipe_compact_roundtrip`: writes a 16-file table, [[Compact]]s it
-  *    to 2 files with an atomic swap + vacuum, and checksums the result;
-  *    the oracle pins both the content (unchanged) and the file count.
+  *  - `pipe_compact_roundtrip`: appends a 16-file Delta table,
+  *    compacts it to 2 files with [[DeltaLog.optimize]], and checksums
+  *    the result; the oracle pins both the content (unchanged) and the
+  *    file count.
   *
   * Scratch lives under the repo's build dir (gitignored), one directory
   * per scale factor; each invocation starts from a wiped slate so the
@@ -110,9 +111,9 @@ object Pipeline {
     Ingest.drainAll(spark, staging, tables, ckpt,
       Map("orders" -> Schemas.stagedOrders))
 
-    val ord = spark.read.parquet(s"$tables/orders")
-    val li = spark.read.parquet(s"$tables/lineitem")
-    val cust = spark.read.parquet(s"$tables/customer")
+    val ord = DeltaLog.readNative(spark, s"$tables/orders")
+    val li = DeltaLog.readNative(spark, s"$tables/lineitem")
+    val cust = DeltaLog.readNative(spark, s"$tables/customer")
     summarize(cust, "customer", "c_custkey", "0", "cast(round(c_acctbal * 100) as bigint)")
       .unionAll(summarize(li, "lineitem",
         Text.hash60SparkSql("l_orderkey"),
@@ -159,9 +160,9 @@ object Pipeline {
     val base = s"$pipeDir/compact_${sfName(sfDir)}"
     wipe(spark, base)
     val dir = s"$base/orders"
-    Tables.orders(spark, sfDir).repartition(16).write.mode("overwrite").parquet(dir)
-    val (before, after) = Compact.compactTable(spark, dir, targetFiles = 2)
-    spark.read.parquet(dir)
+    DeltaLog.append(spark, dir, Tables.orders(spark, sfDir).repartition(16))
+    val (before, after) = DeltaLog.optimize(spark, dir, targetFiles = 2)
+    DeltaLog.readNative(spark, dir)
       .agg(count(lit(1)).as("n_rows"),
         sum(expr(s"o_orderkey % $P")).as("key_check"),
         sum(expr(s"cast(round(o_totalprice * 100) as bigint) % $P")).as("price_check"))
@@ -421,9 +422,8 @@ object Pipeline {
        |WHERE n_rows > 0 ORDER BY op""".stripMargin
 
   /** EXACTLY-ONCE STREAMING INGESTION INTO A TRANSACTIONAL TABLE — the
-    * semantics the parquet streaming sink can't give (its
-    * `_spark_metadata` log owns the directory, forcing quiesced
-    * compaction): micro-batches land via [[DeltaLog.appendBatch]],
+    * sink [[Ingest]] runs the pipeline's tables on: micro-batches land
+    * via [[DeltaLog.appendBatch]],
     * which publishes each batch's files AND its (appId, batchId) `txn`
     * action in one atomic log commit — Delta's txnAppId/txnVersion
     * idempotence. The entry proves it the hard way: the SAME stream is
@@ -436,8 +436,7 @@ object Pipeline {
     * Scale: per batch this is one executor-side parquet job + one log
     * commit; replay detection is a driver-side read of the replayed
     * log. Compaction can run WHILE a stream appends (the commit rebase
-    * covers both) — closing the quiesce limitation the parquet-sink
-    * pipeline documents. */
+    * covers both), so no table has to quiesce to be compacted. */
   def pipeStreamTxnSink(spark: SparkSession, sfDir: String): DataFrame = {
     val base = s"$pipeDir/stxn_${sfName(sfDir)}"
     wipe(spark, base)
@@ -1666,8 +1665,8 @@ object Pipeline {
     *
     * Scale: compaction reads/writes data through executor parquet jobs
     * sized by `targetFiles`; vacuum is a driver-side listing diff
-    * (file-count metadata), deleting without reading — same division
-    * of labor as [[Compact]], emitted as public Delta. */
+    * (file-count metadata), deleting without reading — the pair
+    * [[PipelineMain]]'s compaction runs on the pipeline's tables. */
   def pipeDeltaOptimize(spark: SparkSession, sfDir: String): DataFrame = {
     val base = s"$pipeDir/delta_opt_${sfName(sfDir)}"
     wipe(spark, base)
@@ -1753,8 +1752,8 @@ object Pipeline {
     Synthesize.cycle(spark, sfDir, staging, tables, batchId = 0, nBatches = 1,
       fidelity = true)
     Ingest.drainAll(spark, staging, tables, ckpt, schemas)
-    val ord = spark.read.parquet(s"$tables/orders")
-    val li = spark.read.parquet(s"$tables/lineitem")
+    val ord = DeltaLog.readNative(spark, s"$tables/orders")
+    val li = DeltaLog.readNative(spark, s"$tables/lineitem")
     val mod3 = ord.agg(
       sum(when(col("o_custkey") % 3 === 0, 1L).otherwise(0L)).as("mod3_hits"))
     val skew = li.groupBy("l_partkey").agg(count(lit(1)).as("cnt"))

@@ -42,29 +42,23 @@ object PipelineMain {
 
   private def lockFile(workDir: String) = s"$workDir/.pipeline.lock"
 
-  /** Compact quiesced tables: synchronously retire committed staged
-    * tail files first (the drain completed, so everything still staged
-    * IS committed — the reference's rm-after-ingest, K3), then retire
-    * the streaming checkpoint, THEN rewrite + swap + vacuum.
-    *
-    * Checkpoint-before-swap ordering is load-bearing: compactTable
-    * retires the sink's `_spark_metadata` log, and if a crash left the
-    * OLD checkpoint behind, the next cycle's drain would resume from it
-    * and append under a FRESH sink log starting at batch 0 — which takes
-    * precedence over directory listing and hides every compacted file
-    * from batch readers (silent row loss). With the checkpoint retired
-    * first, every crash point is safe: dying before compactTable leaves
-    * the table + old sink log fully consistent and the next drain simply
-    * starts a fresh checkpoint (the staged tail was already committed,
-    * so nothing is re-ingested). */
-  private def compact(spark: SparkSession, staging: String, tables: String,
-                      ckpt: String, names: Seq[String]): Unit =
+  /** Compact + vacuum (reference pipeline/preprocess.py:62-93): each
+    * existing table's live files bin-pack into ceil(live bytes / 128 MB)
+    * files in one `dataChange=false` commit ([[DeltaLog.optimize]]),
+    * then [[DeltaLog.vacuum]] at retention 0 deletes what the rewrite
+    * retired, plus any orphan a killed writer left. The checkpoints and
+    * the staged tail stay: a drain resumes on the same log and
+    * `cleanSource` retires the tail. Caller holds the pipeline lock. */
+  private def compact(spark: SparkSession, tables: String, names: Seq[String],
+                      beforeCommit: () => Unit = () => ()): Unit =
     names.foreach { t =>
       val dir = s"$tables/$t"
-      if (Fs.exists(spark, dir)) {
-        Fs.deleteRec(spark, s"$staging/$t")
-        Fs.deleteRec(spark, s"$ckpt/$t")
-        val (b, a) = Compact.compactTable(spark, dir) // size-derived target
+      if (DeltaLog.latestVersion(spark, dir) >= 0) {
+        val bytes = DeltaLog.liveAdds(spark, dir)._2
+          .map(a => Option(a._2.get("size")).map(_.asLong).getOrElse(0L)).sum
+        val target = math.max(1, math.ceil(bytes / (128.0 * 1024 * 1024)).toInt)
+        val (b, a) = DeltaLog.optimize(spark, dir, targetFiles = target, beforeCommit)
+        DeltaLog.vacuum(spark, dir, retentionMs = 0)
         println(s"[pipeline] compacted $t: $b -> $a files")
       }
     }
@@ -104,38 +98,6 @@ object PipelineMain {
     } finally spark.stop()
   }
 
-  /** Crash repair (run under the lock before any cycle): a previous run
-    * that died between a compaction's checkpoint retirement and its
-    * table swap leaves a sink commit log with no checkpoint — the one
-    * state [[Ingest.drainTable]] fails loud on (a fresh drain would
-    * silently skip batches against the stale log). Finishing the
-    * compaction retires the log and returns the table to plain-parquet
-    * listing; every other crash point is already consistent (see
-    * compact()'s ordering note).
-    *
-    * A sink log with no batch file is the other stranded form: a drain
-    * killed after its sink created the log dir but before its query
-    * checkpointed a batch. It committed
-    * nothing and no batch ran, so no sink file exists in the table; the
-    * plain files are the whole table, and a read through the empty log
-    * would see none of them. The repair deletes that log. */
-  private[streaming] def repair(spark: SparkSession, tables: String, ckpt: String): Unit =
-    for (t <- schemas.keys) {
-      val log = s"$tables/$t/_spark_metadata"
-      if (Fs.exists(spark, log) && !Fs.exists(spark, s"$ckpt/$t")) {
-        // batch files are named `<id>` or `<id>.compact`
-        val committed = Fs.listFiles(spark, log, { n =>
-          val id = n.takeWhile(_ != '.'); id.nonEmpty && id.forall(_.isDigit) })
-        if (committed.isEmpty) {
-          Fs.deleteRec(spark, log)
-          println(s"[pipeline] crash-repaired $t: retired an empty sink log")
-        } else {
-          val (b, a) = Compact.compactTable(spark, s"$tables/$t")
-          println(s"[pipeline] crash-repaired $t via compaction: $b -> $a files")
-        }
-      }
-    }
-
   /** The whole workflow on a caller-owned session (what `main` wraps;
     * also the E2E test entry). */
   def runPipeline(spark: SparkSession, sfDir: String, workDir: String,
@@ -150,10 +112,11 @@ object PipelineMain {
     * transient failure (FS hiccup, interrupted drain) heals without
     * manual restart BECAUSE every retried unit is idempotent: staging
     * re-writes the same content-addressed files, drains are
-    * exactly-once against their sink commit log, compaction re-checks
-    * its inputs — so a half-done attempt plus a full retry equals one
-    * clean run. After `maxAttempts` the last failure propagates
-    * (fail-loud, not spin-forever). `sleep` is a test seam. */
+    * exactly-once against their table's `txn` watermark, compaction
+    * re-reads the live set — so a half-done attempt plus a full retry
+    * equals one clean run (a dead attempt's orphans are vacuum's).
+    * After `maxAttempts` the last failure propagates (fail-loud, not
+    * spin-forever). `sleep` is a test seam. */
   private[streaming] def withRetry[T](what: String, maxAttempts: Int = 10,
                                       baseDelayMs: Long = 100L,
                                       sleep: Long => Unit = Thread.sleep)(body: => T): T = {
@@ -176,18 +139,20 @@ object PipelineMain {
     * Two overlapping invocations (same workDir, DISJOINT batch ids —
     * the reference's two schedulers generating distinct data) serialize
     * at cycle granularity: a drain never observes a half-staged batch
-    * or races a compaction for the shared checkpoints. A failed cycle
-    * retries whole with backoff ([[withRetry]]) — the lock is released
+    * or races a compaction of its table. A failed cycle retries whole
+    * with backoff ([[withRetry]]) — the lock is released
     * between attempts, so a competing healthy invocation is never
     * starved by a sick one. `chaos` is a crash-injection test seam
-    * called between staging and drain. */
+    * called between staging and drain; `beforeCompactCommit` is
+    * [[DeltaLog.optimize]]'s seam between the compaction's rewrite and
+    * its commit. */
   def runCycles(spark: SparkSession, sfDir: String, workDir: String,
                 batchIds: Seq[Int], nBatches: Int, compactEvery: Int,
-                chaos: Int => Unit = _ => ()): Unit = {
+                chaos: Int => Unit = _ => (),
+                beforeCompactCommit: () => Unit = () => ()): Unit = {
     val staging = s"$workDir/staging"
     val tables = s"$workDir/tables"
     val ckpt = s"$workDir/ckpt"
-    PipelineLock.withLock(lockFile(workDir))(repair(spark, tables, ckpt))
     for (cycle <- batchIds) {
       withRetry(s"cycle $cycle") {
         PipelineLock.withLock(lockFile(workDir)) {
@@ -195,36 +160,22 @@ object PipelineMain {
           chaos(cycle)
           Ingest.drainAll(spark, staging, tables, ckpt, schemas)
           if ((cycle + 1) % compactEvery == 0)
-            compact(spark, staging, tables, ckpt, Seq("customer"))
+            compact(spark, tables, Seq("customer"), beforeCompactCommit)
         }
       }
       println(s"[pipeline] cycle $cycle complete")
     }
   }
 
-  /** Final maintenance + reduce + serve, under the lock. EVERY ingested
-    * table compacts here because no further appends target any of them —
-    * without a transactional format, compaction must quiesce a table
-    * first. The dim also compacts mid-run on the reference's cadence
-    * (runCycles' compactEvery), but that boundary only coincides with
-    * the LAST append when nCycles % compactEvery == 0, and live mode
-    * has no mid-run compaction at all — so relying on the cadence left
-    * a finished run with `customer` still under a streaming sink log
-    * (found by the r11 live-mode chaos soak: CONTROL and chaos runs
-    * both kept `tables/customer/_spark_metadata` after a clean finish,
-    * leaving the dir unreadable-as-plain-parquet to external tools and
-    * the next drain pinned to a stale checkpoint lineage). Compaction
-    * is idempotent on an already-compacted table, so the unconditional
-    * finish-time pass costs one small rewrite at most.
-    * ([[DeltaLog.optimize]] is the compaction-under-append form.) Idempotent:
-    * a second invocation re-compacts a plain parquet dir and
-    * re-overwrites the served results. */
+  /** Final maintenance + reduce + serve, under the lock: compact and
+    * vacuum all three tables (file count and dead-file reclaim only —
+    * appends and compaction share one log, so nothing waits on a
+    * quiesce), then publish. After a clean finish each table dir holds
+    * exactly its live files. Idempotent: a second invocation finds
+    * nothing to bin-pack and re-overwrites the served results. */
   def finishAndServe(spark: SparkSession, sfDir: String, workDir: String): Unit =
     PipelineLock.withLock(lockFile(workDir)) {
-      val staging = s"$workDir/staging"
-      val tables = s"$workDir/tables"
-      val ckpt = s"$workDir/ckpt"
-      compact(spark, staging, tables, ckpt, Seq("orders", "lineitem", "customer"))
+      compact(spark, s"$workDir/tables", Seq("orders", "lineitem", "customer"))
       publishResults(spark, workDir)
     }
 
@@ -239,9 +190,9 @@ object PipelineMain {
     * `l_orderkey`, `o_order_time`, `revenue`; within a segment, rank
     * order is `revenue desc, l_orderkey`. */
   private[graft] def segmentTop50(spark: SparkSession, tables: String): DataFrame = {
-    val li = spark.read.parquet(s"$tables/lineitem")
-    val ord = spark.read.parquet(s"$tables/orders")
-    val cust = spark.read.parquet(s"$tables/customer")
+    val li = DeltaLog.readNative(spark, s"$tables/lineitem")
+    val ord = DeltaLog.readNative(spark, s"$tables/orders")
+    val cust = DeltaLog.readNative(spark, s"$tables/customer")
     val cutoff = lit(Synthesize.OrdTgtHi).cast("timestamp")
     val rank = Seq(col("revenue").desc, col("l_orderkey"))
     ord.filter(col("o_order_time") < cutoff)
@@ -326,7 +277,6 @@ object PipelineMain {
     val tables = s"$workDir/tables"
     val ckpt = s"$workDir/ckpt"
     PipelineLock.withLock(lockFile(workDir)) {
-      repair(spark, tables, ckpt)
       schemas.keys.foreach(t => Fs.mkdirs(spark, s"$staging/$t"))
     }
     // supervised (r13): runLive is the resident deployment form, so its
@@ -349,7 +299,7 @@ object PipelineMain {
         println(s"[pipeline] live: staged batch $b")
         Thread.sleep(cadenceMs)
         if (publishEvery > 0 && (b + 1) % publishEvery == 0 &&
-            schemas.keys.forall(t => Fs.exists(spark, s"$tables/$t"))) {
+            schemas.keys.forall(t => DeltaLog.latestVersion(spark, s"$tables/$t") >= 0)) {
           // mid-run republish against the streams' committed state so
           // far; the lock serializes it with the generator, and Serve's
           // cache carries readers across the swap (skipped while the

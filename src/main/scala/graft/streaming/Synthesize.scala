@@ -290,13 +290,13 @@ object Synthesize {
       val w = Ingest.appetite(spark) // core-scaled (r15 s3): one cycle still drains in one micro-batch
       if (n >= 1 && n < w) df.repartition(w, key) else df
     }
-    // staged/ingested = actual FILES present: live mode pre-creates the
-    // staging roots, and FileStreamSink creates the table dir at query
-    // start before any commit — bare-directory existence would skip the
-    // static dim forever and serve an empty customer table
+    // staged = staged FILES present (live mode pre-creates the staging
+    // roots); ingested = the table's log has a commit (a writer's scratch
+    // dir makes the table dir before any commit, so bare-directory
+    // existence would skip the static dim forever)
     val custStagedOrIngested =
       Fs.listFiles(spark, s"$stagingDir/customer", _.endsWith(".json")).nonEmpty ||
-        Fs.listFiles(spark, s"$tablesDir/customer", _.endsWith(".parquet")).nonEmpty
+        DeltaLog.latestVersion(spark, s"$tablesDir/customer") >= 0
     // The per-table stagings are INDEPENDENT Spark jobs into disjoint
     // directories (the reference's O3 ordering constraint binds the
     // keymap-before-lineitem GENERATION, which here is content-addressed

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.sources.Tables
 
 /** Cross-operator dedup invariants (SURVEY §5): the probabilistic paths
   * must agree with the exact path where their guarantees say they must. */
@@ -245,6 +246,26 @@ class DedupSpec extends SparkSpec {
         "the pair of the added duplicate is missing: a stale pair relation was served")
       assert(firstRdds.intersect(spark.sparkContext.getPersistentRDDs.keySet).isEmpty,
         "the replaced pair relation is still persisted")
+    } finally Corpus.prime(spark, sf)
+  }
+
+  test("a forgotten pair relation pins nothing: no cached plan over documents survives forgetMemos") {
+    val dir = targetDir("test-dedup-forget")
+    spark.read.parquet(s"$sf/documents.parquet")
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    try {
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      assert(Dedup.ddMinhashLsh(spark, dir).count() > 0)
+      graft.Session.forgetMemos()
+      def cached(df: org.apache.spark.sql.DataFrame) =
+        df.queryExecution.withCachedData.collect {
+          case r: org.apache.spark.sql.execution.columnar.InMemoryRelation => r
+        }
+      assert(cached(graft.functions.Text.shingled(spark, dir)).isEmpty,
+        "the shingle relation is still cached")
+      assert(cached(Tables.documents(spark, dir)).isEmpty)
+      val pinned = spark.sparkContext.getPersistentRDDs.keySet -- before
+      assert(pinned.isEmpty, s"persisted RDDs left behind: $pinned")
     } finally Corpus.prime(spark, sf)
   }
 }

@@ -384,7 +384,7 @@ class PlanSpec extends SparkSpec {
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import org.apache.spark.sql.execution.window.{Final, Partial, WindowGroupLimitExec}
     val root = "target/test-plan/one-pass"
-    graft.streaming.Compact.deleteRecPublic(spark, root)
+    graft.streaming.Fs.deleteRec(spark, root)
     graft.streaming.PipelineMain.runCycles(spark, sf, root, Seq(0), nBatches = 1,
       compactEvery = Int.MaxValue)
     val df = graft.streaming.PipelineMain.segmentTop50(spark, s"$root/tables")

@@ -607,6 +607,28 @@ class DeltaLogSpec extends SparkSpec {
     intercept[Exception](DeltaLog.read(spark, tbl, 2L).collect())
   }
 
+  test("vacuum reclaims a dead writer's scratch dir once stale, and never a fresh one inside the retention") {
+    import spark.implicits._
+    val tbl = freshDir("vacuum-scratch")
+    DeltaLog.append(spark, tbl, Seq((1L, "a"), (2L, "b")).toDF("k", "v").coalesce(1))
+    // two writers killed inside their scratch writes: one 8 days ago, one now
+    def scratch(name: String): java.io.File = {
+      Seq((9L, "x")).toDF("k", "v").coalesce(1).write.mode("overwrite").parquet(s"$tbl/$name")
+      new java.io.File(s"$tbl/$name")
+    }
+    val dead = scratch(".scratch_dead0001")
+    val week8 = System.currentTimeMillis() - 8L * 24 * 3600 * 1000
+    java.nio.file.Files.walk(dead.toPath).sorted(java.util.Comparator.reverseOrder())
+      .forEach(f => f.toFile.setLastModified(week8))
+    val fresh = scratch(".scratch_fresh001")
+    assert(DeltaLog.vacuum(spark, tbl) == 1)
+    assert(!dead.exists, "a scratch dir older than the retention survived vacuum")
+    assert(fresh.exists, "vacuum reclaimed a scratch dir inside the retention window")
+    assert(DeltaLog.vacuum(spark, tbl, retentionMs = 0L) == 1)
+    assert(!fresh.exists, "vacuum(0) left a scratch dir behind")
+    assert(DeltaLog.read(spark, tbl).count() == 2, "vacuum touched a live file")
+  }
+
   test("optimize racing an overwrite aborts cleanly: content wins over layout") {
     import spark.implicits._
     val tbl = freshDir("optimize-race")

@@ -1,7 +1,6 @@
 package graft.streaming
 
-import java.nio.file.{Files, Path, Paths}
-import java.util.Comparator
+import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -12,12 +11,15 @@ import graft.sources.Tables
 
 /** End-to-end pipeline behavior the oracle's checksums don't pin down at
   * the file level: incremental append counts, idempotent re-drain,
-  * source-file retirement, static-dim skip, and compaction invariants. */
+  * source-file retirement, static-dim skip, and the commit shape of
+  * ingestion and compaction on the Delta log. */
 class PipelineSpec extends SparkSpec {
 
   private val base = targetDir("test-pipe")
 
-  private def wipe(dir: String): Unit = Compact.deleteRecPublic(spark, dir)
+  private def wipe(dir: String): Unit = Fs.deleteRec(spark, dir)
+
+  private def table(path: String): DataFrame = DeltaLog.read(spark, path)
 
   private def jsonFiles(dir: String): Long = {
     val p = Paths.get(dir)
@@ -40,7 +42,7 @@ class PipelineSpec extends SparkSpec {
     Synthesize.cycle(spark, sf, staging, tables, batchId = 0, nBatches = 2)
     assert(jsonFiles(s"$staging/customer") > 0, "static dim staged on first cycle")
     Ingest.drainAll(spark, staging, tables, ckpt, schemas)
-    val ordersB0 = spark.read.parquet(s"$tables/orders").count()
+    val ordersB0 = table(s"$tables/orders").count()
     val fixtureOrders = Tables.orders(spark, sf).count()
     val evenOrders = Tables.orders(spark, sf).filter(col("o_orderkey") % 2 === 0).count()
     assert(ordersB0 == evenOrders, "first drain should hold exactly the batch-0 slice")
@@ -53,13 +55,13 @@ class PipelineSpec extends SparkSpec {
       else Files.walk(p).filter(f => f.getFileName.toString.contains("_b1_")).count()
     assert(restaged == 0, "static dim must NOT be re-staged once ingested (T5)")
     Ingest.drainAll(spark, staging, tables, ckpt, schemas)
-    assert(spark.read.parquet(s"$tables/orders").count() == fixtureOrders)
-    assert(spark.read.parquet(s"$tables/lineitem").count() == Tables.lineitem(spark, sf).count())
-    assert(spark.read.parquet(s"$tables/customer").count() == Tables.customer(spark, sf).count())
+    assert(table(s"$tables/orders").count() == fixtureOrders)
+    assert(table(s"$tables/lineitem").count() == Tables.lineitem(spark, sf).count())
+    assert(table(s"$tables/customer").count() == Tables.customer(spark, sf).count())
 
     // idempotent no-op drain: nothing staged, nothing appended
     Ingest.drainAll(spark, staging, tables, ckpt, schemas)
-    assert(spark.read.parquet(s"$tables/orders").count() == fixtureOrders,
+    assert(table(s"$tables/orders").count() == fixtureOrders,
       "re-drain with empty staging duplicated rows — exactly-once broken")
 
     // K3 retirement: FileStreamSource deletes a batch's files when a
@@ -133,7 +135,7 @@ class PipelineSpec extends SparkSpec {
       assert(res.inputFiles.length == 1)
     }
     // the ingested fact tables hold the full fixture after both cycles
-    assert(spark.read.parquet(s"$root/tables/orders").count() ==
+    assert(table(s"$root/tables/orders").count() ==
       graft.sources.Tables.orders(spark, sf).count())
   }
 
@@ -143,9 +145,9 @@ class PipelineSpec extends SparkSpec {
     * the reduce: the reference the one-pass publish must reproduce row
     * for row and in order. */
   private def perSegmentTop50(tables: String, seg: String): Seq[String] = {
-    val li = spark.read.parquet(s"$tables/lineitem")
-    val ord = spark.read.parquet(s"$tables/orders")
-    val cust = spark.read.parquet(s"$tables/customer")
+    val li = table(s"$tables/lineitem")
+    val ord = table(s"$tables/orders")
+    val cust = table(s"$tables/customer")
     val cutoff = lit(Synthesize.OrdTgtHi).cast("timestamp")
     ord.filter(col("o_order_time") < cutoff)
       .join(cust.filter(col("c_mktsegment") === seg), col("o_custkey") === col("c_custkey"))
@@ -176,7 +178,7 @@ class PipelineSpec extends SparkSpec {
   private def stageDirs(results: String): Seq[String] =
     Option(new java.io.File(results).list()).toSeq.flatten.filter(_.startsWith(".stage"))
 
-  /** Two ingested batches of the fixture, copied out as plain parquet
+  /** Two ingested batches of the fixture, copied out as fresh Delta
     * tables that a test may edit before publishing over them. */
   private lazy val ingestedSrc: String = {
     val root = s"$base/publish-src"
@@ -187,8 +189,8 @@ class PipelineSpec extends SparkSpec {
 
   private def copyTables(root: String, customer: DataFrame => DataFrame = identity): Unit =
     Seq("orders", "lineitem", "customer").foreach { t =>
-      val df = spark.read.parquet(s"$ingestedSrc/$t")
-      (if (t == "customer") customer(df) else df).write.parquet(s"$root/tables/$t")
+      val df = table(s"$ingestedSrc/$t")
+      DeltaLog.append(spark, s"$root/tables/$t", if (t == "customer") customer(df) else df)
     }
 
   private def httpGet(port: Int, path: String): (Int, String) = {
@@ -338,13 +340,13 @@ class PipelineSpec extends SparkSpec {
     PipelineMain.finishAndServe(spark, sf, root)
     // healed run == clean run: full fixture, nothing doubled by the
     // re-staged attempts (staging is content-addressed, drain exactly-once)
-    assert(spark.read.parquet(s"$root/tables/orders").count() ==
+    assert(table(s"$root/tables/orders").count() ==
       Tables.orders(spark, sf).count(), "orders lost or doubled across retries")
-    assert(spark.read.parquet(s"$root/tables/lineitem").count() ==
+    assert(table(s"$root/tables/lineitem").count() ==
       Tables.lineitem(spark, sf).count(), "lineitem lost or doubled across retries")
-    assert(spark.read.parquet(s"$root/tables/orders")
+    assert(table(s"$root/tables/orders")
       .select("o_orderkey").distinct().count() ==
-      spark.read.parquet(s"$root/tables/orders").count(), "duplicate keys after retry")
+      table(s"$root/tables/orders").count(), "duplicate keys after retry")
   }
 
   test("withRetry: exponential backoff schedule, success stops retrying, exhaustion propagates the last failure") {
@@ -423,11 +425,11 @@ class PipelineSpec extends SparkSpec {
     ts.foreach(_.start()); ts.foreach(_.join())
     assert(errs.isEmpty, s"overlapping invocation failed: ${errs.peek()}")
     PipelineMain.finishAndServe(spark, sf, root)
-    assert(spark.read.parquet(s"$root/tables/orders").count() ==
+    assert(table(s"$root/tables/orders").count() ==
       Tables.orders(spark, sf).count(), "orders lost or doubled across overlapping invocations")
-    assert(spark.read.parquet(s"$root/tables/lineitem").count() ==
+    assert(table(s"$root/tables/lineitem").count() ==
       Tables.lineitem(spark, sf).count(), "lineitem lost or doubled across overlapping invocations")
-    assert(spark.read.parquet(s"$root/tables/customer").count() ==
+    assert(table(s"$root/tables/customer").count() ==
       Tables.customer(spark, sf).count())
     Seq("AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD", "MACHINERY").foreach { seg =>
       assert(spark.read.parquet(s"$root/results/$seg").count() == 50)
@@ -439,19 +441,14 @@ class PipelineSpec extends SparkSpec {
     wipe(root)
     PipelineMain.runLive(spark, sf, root, nBatches = 2,
       cadenceMs = 1500L, processingTimeMs = 300L)
-    assert(spark.read.parquet(s"$root/tables/orders").count() ==
-      Tables.orders(spark, sf).count(), "live ingestion lost or doubled orders")
-    assert(spark.read.parquet(s"$root/tables/lineitem").count() ==
-      Tables.lineitem(spark, sf).count())
     Seq("AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD", "MACHINERY").foreach { seg =>
       assert(spark.read.parquet(s"$root/results/$seg").count() == 50)
     }
-    // live mode never compacts mid-run, so the finish-time pass is the
-    // ONLY thing retiring the streaming sink logs — a clean finish must
-    // leave every table plain-parquet (r11 live-soak finding)
-    Seq("orders", "lineitem", "customer").foreach { t =>
-      assert(!Files.exists(Paths.get(s"$root/tables/$t/_spark_metadata")),
-        s"$t still under a streaming sink log after a clean live finish")
+    // every table is a Delta table holding exactly the fixture's rows
+    Seq("orders" -> Tables.orders(spark, sf), "lineitem" -> Tables.lineitem(spark, sf),
+        "customer" -> Tables.customer(spark, sf)).foreach { case (t, fixture) =>
+      assert(DeltaLog.latestVersion(spark, s"$root/tables/$t") >= 0, s"$t is not a Delta table")
+      assert(table(s"$root/tables/$t").count() == fixture.count(), s"$t lost or doubled rows")
     }
   }
 
@@ -555,7 +552,7 @@ class PipelineSpec extends SparkSpec {
         failure.foreach(throw _)
         // streams continued through the kill: the full fixture landed
         // exactly once and the REDEPLOYED server serves the final rows
-        assert(spark.read.parquet(s"$root/tables/orders").count() ==
+        assert(table(s"$root/tables/orders").count() ==
           Tables.orders(spark, sf).count(), "kill+redeploy disturbed ingestion")
         assert(health(port).contains(200), "redeployed server not healthy after run")
         val rows = http.send(
@@ -660,77 +657,52 @@ class PipelineSpec extends SparkSpec {
     assert(DeltaLog.read(spark, tbl).count() == total)
   }
 
-  test("compaction crash window: a stranded sink log (checkpoint retired, swap not run) fails loud, and the startup repair recovers it") {
-    val root = s"$base/ckpt-crash"
+  test("a compaction that dies before its commit heals through withRetry: one txn commit per micro-batch, one dataChange=false optimize, the dead rewrite vacuumed") {
+    val root = s"$base/compact-heal"
     wipe(root)
-    val staging = s"$root/staging"; val tables = s"$root/tables"; val ckpt = s"$root/ckpt"
-    val schemas = Map("orders" -> Schemas.stagedOrders)
-    Synthesize.cycle(spark, sf, staging, tables, batchId = 0, nBatches = 2)
-    Ingest.drainAll(spark, staging, tables, ckpt, schemas)
-    val afterB0 = spark.read.parquet(s"$tables/orders").count()
-    assert(afterB0 > 0)
-    // simulate the compaction crash window: checkpoint retired, but the
-    // process died before compactTable swapped the sink log away
-    Compact.deleteRecPublic(spark, s"$ckpt/orders")
-    assert(Files.exists(Paths.get(s"$tables/orders/_spark_metadata")))
-    // a fresh drain against the stale sink log would silently SKIP its
-    // first batches (FileStreamSink drops any batchId <= the log's
-    // latest) — the guard must refuse instead of losing rows
-    Synthesize.cycle(spark, sf, staging, tables, batchId = 1, nBatches = 2)
-    val ex = intercept[IllegalStateException] {
-      Ingest.drainAll(spark, staging, tables, ckpt, schemas)
+    val tables = s"$root/tables"
+    val cust = s"$tables/customer"
+    def rootParquet(t: String): Set[String] =
+      Option(new java.io.File(t).list()).toSeq.flatten.filter(_.endsWith(".parquet")).toSet
+    // customer pre-staged as four files (the cycle stages it as one), so
+    // it lands in four and the compaction has a rewrite to commit
+    Synthesize.writeStaged(Tables.customer(spark, sf).repartition(4), s"$root/staging", "customer", 0)
+    var deadRewrite = Set.empty[String]
+    var liveAtDeath = 0
+    PipelineMain.runCycles(spark, sf, root, Seq(0, 1), nBatches = 2, compactEvery = 1,
+      beforeCompactCommit = () => if (deadRewrite.isEmpty) {
+        val live = DeltaLog.snapshot(spark, cust)._2.toSet
+        liveAtDeath = live.size
+        deadRewrite = rootParquet(cust) -- live
+        throw new RuntimeException("injected death between the compaction's rewrite and its commit")
+      })
+    assert(liveAtDeath > 1 && deadRewrite.nonEmpty,
+      s"the compaction must have died with a rewrite to commit: $liveAtDeath live, $deadRewrite")
+    Seq("orders" -> Tables.orders(spark, sf), "lineitem" -> Tables.lineitem(spark, sf),
+        "customer" -> Tables.customer(spark, sf)).foreach { case (t, fixture) =>
+      assert(table(s"$tables/$t").count() == fixture.count(), s"$t lost or doubled rows")
     }
-    assert(ex.getMessage.contains("sink commit log but no checkpoint"))
-    assert(spark.read.parquet(s"$tables/orders").count() == afterB0,
-      "failed drain must not have touched the table")
-    // the orchestrator's startup repair: finish the compaction (retires
-    // the sink log), after which the staged batch drains cleanly
-    Compact.compactTable(spark, s"$tables/orders")
-    Ingest.drainAll(spark, staging, tables, ckpt, schemas)
-    val total = Tables.orders(spark, sf).count()
-    assert(spark.read.parquet(s"$tables/orders").count() == total,
-      "post-repair drain must land the staged batch exactly once")
-    // a drain killed after its sink created the log dir but before its
-    // query checkpointed a batch strands an EMPTY log; a read through it
-    // sees no file, so the repair retires it and the plain files stay
-    Compact.deleteRecPublic(spark, s"$ckpt/orders")
-    Compact.compactTable(spark, s"$tables/orders")
-    Fs.mkdirs(spark, s"$tables/orders/_spark_metadata")
-    PipelineMain.repair(spark, tables, ckpt)
-    assert(!Files.exists(Paths.get(s"$tables/orders/_spark_metadata")))
-    assert(spark.read.parquet(s"$tables/orders").count() == total)
-  }
-
-  test("compaction crash recovery: a death between the swap moves loses no data") {
-    val root = s"$base/crash"
-    wipe(root)
-    val dir = s"$root/orders"
-    graft.sources.Tables.orders(spark, sf).repartition(4).write.parquet(dir)
-    val expected = spark.read.parquet(dir).count()
-    // simulate a crash after `move(dir, old)` but before `move(tmp, dir)`:
-    // the table directory is gone; data lives only in .compact_old
-    java.nio.file.Files.move(Paths.get(dir), Paths.get(dir + ".compact_old"))
-    assert(!java.nio.file.Files.exists(Paths.get(dir)))
-    // the next compaction run must restore before doing anything else
-    val (before, after) = Compact.compactTable(spark, dir, targetFiles = 2)
-    assert(before == 4 && after == 2)
-    assert(spark.read.parquet(dir).count() == expected, "rows lost across crash recovery")
-    assert(!java.nio.file.Files.exists(Paths.get(dir + ".compact_old")))
-  }
-
-  test("compaction: file count drops to target, contents bit-identical") {
-    val root = s"$base/compact"
-    wipe(root)
-    val dir = s"$root/orders"
-    Tables.orders(spark, sf).repartition(16).write.parquet(dir)
-    val beforeDf = spark.read.parquet(dir).cache()
-    val beforeRows = beforeDf.collect().toSet
-    val (before, after) = Compact.compactTable(spark, dir, targetFiles = 2)
-    beforeDf.unpersist()
-    assert(before == 16 && after == 2, s"expected 16 -> 2 files, got $before -> $after")
-    val afterRows = spark.read.parquet(dir).collect().toSet
-    assert(afterRows == beforeRows, "compaction changed table contents")
-    assert(!Files.exists(Paths.get(dir + ".compact_old")) &&
-      !Files.exists(Paths.get(dir + ".compact_tmp")), "vacuum left retired dirs behind")
+    def actions(t: String, v: Long) = DeltaLog.readCommit(spark, t, v).map(DeltaLog.parseJson)
+    // every drained micro-batch is one commit carrying its txn {query id, batch id}
+    for (t <- Seq("orders", "lineitem")) {
+      val dir = s"$tables/$t"
+      val txns = (0L to DeltaLog.latestVersion(spark, dir)).map { v =>
+        val tx = actions(dir, v).filter(_.has("txn")).map(_.get("txn"))
+        assert(tx.size == 1, s"$t v$v: expected one txn action, got $tx")
+        (tx.head.get("appId").asText(), tx.head.get("version").asLong())
+      }
+      assert(txns.map(_._1).distinct.size == 1 && txns.map(_._2) == txns.indices.map(_.toLong),
+        s"$t: micro-batch commits are not one query's consecutive batches: $txns")
+    }
+    // customer: its one micro-batch, then the healed optimize as the one
+    // dataChange=false commit — the dead attempt committed nothing
+    val hist = DeltaLog.history(spark, cust)
+    assert(hist.map(_._5) == Seq(true, false), s"customer history: $hist")
+    assert(actions(cust, 0).count(_.has("txn")) == 1 && !actions(cust, 1).exists(_.has("txn")))
+    assert(hist(1)._2 == 1 && hist(1)._3 == liveAtDeath, s"optimize commit: ${hist(1)}")
+    // the compaction's vacuum(0) reclaimed the dead rewrite: on disk is
+    // exactly the live set, with no scratch dir left
+    assert(rootParquet(cust) == DeltaLog.snapshot(spark, cust)._2.toSet)
+    assert(!new java.io.File(cust).list().exists(_.startsWith(".scratch_")))
   }
 }

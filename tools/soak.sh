@@ -4,9 +4,12 @@
 # injected at RANDOM wall-clock points — not the crash matrix's chosen
 # windows — then let one clean invocation finish, and compare the final
 # published results and table row counts against an UNINTERRUPTED control
-# run. Exactly-once + crash-repair means the chaos end-state must be
+# run. Every table is a Delta table (txn-idempotent micro-batch appends,
+# OPTIMIZE + VACUUM(0) on finish), so the chaos end-state must be
 # row-identical to the control; any drift (lost rows, duplicated rows,
-# diverging top-50s) fails loud here.
+# diverging top-50s) fails loud here. The clean finish must also leave
+# each table dir holding exactly its log's live files: no orphan from a
+# killed writer and no `.scratch_*` dir.
 #
 # Usage: tools/soak.sh [sfDir] [nBatches] [nKills] [seed] [--live]
 # With --live every run (control, chaos, final) uses PipelineMain's
@@ -64,13 +67,14 @@ for d in $DELAYS; do
   wait "$pid" 2>/dev/null || true
 done
 
-echo "== soak: final clean run (crash-repair + finish) =="
+echo "== soak: final clean run (finish: compact, vacuum, publish) =="
 $JAVA graft.streaming.PipelineMain "$SF" "$WORK" "$N" 2 $MODE \
   > /tmp/soak_final.log 2>&1
 
 echo "== soak: comparing chaos end-state vs control =="
 python3 - "$WORK" "$CTRL" <<'EOF'
 import glob
+import json
 import os
 import sys
 
@@ -81,13 +85,48 @@ con = duckdb.connect()
 fails = []
 report = []
 
-# final compaction leaves plain-parquet tables (no _spark_metadata), so a
-# raw glob IS the engine's view; a leftover sink log would itself be a
-# finding (final clean run must retire it)
+
+def live_files(tdir):
+    """The latest version's live data files: the newest checkpoint's adds
+    (read through DuckDB), then the JSON commits after it."""
+    log = f"{tdir}/_delta_log"
+    names = os.listdir(log)
+    ckpts = sorted(int(n[:20]) for n in names if n.endswith(".checkpoint.parquet"))
+    live, start = set(), 0
+    if ckpts:
+        rows = con.sql(f"SELECT add.path FROM '{log}/{ckpts[-1]:020d}.checkpoint.parquet' "
+                       "WHERE add IS NOT NULL").fetchall()
+        live, start = {r[0] for r in rows}, ckpts[-1] + 1
+    for v in sorted(int(n[:20]) for n in names if n.endswith(".json") and n[:20].isdigit()):
+        if v < start:
+            continue
+        with open(f"{log}/{v:020d}.json") as f:
+            for line in filter(str.strip, f):
+                a = json.loads(line)
+                if "add" in a:
+                    live.add(a["add"]["path"])
+                if "remove" in a:
+                    live.discard(a["remove"]["path"])
+    return live
+
+
+# after the clean finish each table dir holds exactly its live files, so
+# a raw glob IS the engine's view; an orphan or a scratch dir left behind
+# would itself be a finding (the finish's vacuum(0) must reclaim them)
 for t in ("orders", "lineitem", "customer"):
     for base in (work, ctrl):
-        if os.path.exists(f"{base}/tables/{t}/_spark_metadata"):
-            fails.append(f"{t}: {base} still has a sink commit log after the clean finish")
+        tdir = f"{base}/tables/{t}"
+        if not os.path.isdir(f"{tdir}/_delta_log"):
+            fails.append(f"{t}: {base} is not a Delta table")
+            continue
+        on_disk = {n for n in os.listdir(tdir) if n.endswith(".parquet")}
+        live = live_files(tdir)
+        if on_disk != live:
+            fails.append(f"{t}: {base} holds {len(on_disk - live)} files outside the live set "
+                         f"and misses {len(live - on_disk)} live files")
+        for n in os.listdir(tdir):
+            if n.startswith(".scratch_"):
+                fails.append(f"{t}: {base} kept scratch dir {n} after the clean finish")
     a = con.sql(f"SELECT count(*) FROM '{work}/tables/{t}/*.parquet'").fetchone()[0]
     b = con.sql(f"SELECT count(*) FROM '{ctrl}/tables/{t}/*.parquet'").fetchone()[0]
     report.append(f"{t}: chaos={a} control={b}")
