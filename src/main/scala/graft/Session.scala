@@ -69,9 +69,10 @@ object Session {
     * witness, the (path, size, mtime) listing of `inputs` taken BEFORE
     * `compute` ran (the identity [[graft.streaming.DeltaLog]]'s replay
     * cache trusts). A lookup whose fresh listing differs drops the old
-    * entry (unpersisting a `Dataset` value), refreshes Spark's caches
-    * over the inputs — Spark matches cached plans by path, so the
-    * recomputed plan would otherwise read the old rows — and recomputes.
+    * entry (unpersisting a `Dataset` value or a tuple's `Dataset`s),
+    * refreshes Spark's caches over the inputs — Spark matches cached plans
+    * by path, so the recomputed plan would otherwise read the old rows —
+    * and recomputes.
     *
     * `compute` runs outside the map (get, compute, put): memo calls nest
     * (the pair plan primes [[graft.operators.Corpus]] through its own
@@ -98,10 +99,18 @@ object Session {
   def forgetMemos(): Unit =
     memos.keySet.forEach(k => release(memos.remove(k)))
 
-  /** Blocking, as in [[graft.operators.Scratch.release]]: the next
-    * compute usually persists the same plan again. */
-  private def release(entry: (Seq[(String, Long, Long)], Any)): Unit = entry match {
-    case (_, ds: org.apache.spark.sql.Dataset[_]) => ds.unpersist(blocking = true); ()
-    case _ => ()
+  /** Unpersists the `Dataset`s of a memo value: the value itself, or the
+    * members of a tuple. Blocking, as in [[graft.operators.Scratch.release]]:
+    * the next compute usually persists the same plan again. */
+  private def release(entry: (Seq[(String, Long, Long)], Any)): Unit = {
+    def datasets(v: Any): Iterator[org.apache.spark.sql.Dataset[_]] = v match {
+      case ds: org.apache.spark.sql.Dataset[_] => Iterator(ds)
+      case t: Product => t.productIterator.flatMap(datasets)
+      case _ => Iterator.empty
+    }
+    if (entry != null) datasets(entry._2).foreach(_.unpersist(blocking = true))
   }
+
+  /** Number of memo entries (tests: long-lived callers must keep it bounded). */
+  private[graft] def memoEntries: Int = memos.size
 }

@@ -1207,8 +1207,10 @@ object DeltaLog {
     * readers of the current version are unaffected because live files
     * are never candidates. A `.scratch_*` dir (a writer killed inside
     * its scratch write) goes by the orphan rule too: whole, once its
-    * newest mtime is older than the cutoff. Returns the number of data
-    * files and scratch dirs deleted. */
+    * newest mtime is older than the cutoff; so does a root-level commit
+    * temp `.tmp_*` (a committer killed before linking it into the log)
+    * with its checksum sidecar. Returns the number of data files,
+    * scratch dirs and commit temps deleted. */
   def vacuum(spark: SparkSession, table: String, retentionMs: Long = 7L * 24 * 3600 * 1000): Int = {
     // allowDv: victims are non-live `.parquet` only — DV'd files are
     // live (kept), and `.bin` vectors are never candidates at all
@@ -1241,14 +1243,28 @@ object DeltaLog {
       }
     victims.foreach { case (full, _) => Fs.deleteIfExists(spark, full) }
     val root = new org.apache.hadoop.fs.Path(table)
-    val deadScratch = root.getFileSystem(Fs.conf(spark)).listStatus(root).toSeq
+    // the raw filesystem: the checksum one hides `.crc` sidecars
+    val raw = root.getFileSystem(Fs.conf(spark)) match {
+      case c: org.apache.hadoop.fs.ChecksumFileSystem => c.getRawFileSystem
+      case fs => fs
+    }
+    val rootEntries = raw.listStatus(root).toSeq
+    val deadScratch = rootEntries
       .filter(d => d.isDirectory && d.getPath.getName.startsWith(".scratch_"))
       .filter { d =>
         val files = Fs.listFileStats(spark, d.getPath.toString, _ => true).map(_._3)
         (d.getModificationTime +: files).max <= cutoff
       }
     deadScratch.foreach(d => Fs.deleteRec(spark, d.getPath.toString))
-    victims.size + deadScratch.size
+    // a committer killed between writing its `.tmp_<uuid>` and linking it
+    // into the log leaves the temp and its `..tmp_<uuid>.crc` sidecar; the
+    // sidecar is matched on its own, since a commit that died after
+    // unlinking the temp leaves only the sidecar
+    val deadTemps = rootEntries
+      .filter(f => f.isFile && (f.getPath.getName.startsWith(".tmp_") ||
+        f.getPath.getName.startsWith("..tmp_")) && f.getModificationTime <= cutoff)
+    deadTemps.foreach(f => raw.delete(f.getPath, false))
+    victims.size + deadScratch.size + deadTemps.count(_.getPath.getName.startsWith(".tmp_"))
   }
 
   /** Overwrite: one commit that removes every currently-live file and

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
 /** Filesystem operations for the pipeline's maintenance jobs, routed
@@ -107,23 +107,32 @@ object Fs {
     listFileStats(spark, path, keep).map { case (f, len, _) => (f, len) }
 
   /** Recursive listing of regular files under `path` whose name passes
-    * `keep`, as (path, length, mtime); empty when the path is absent. The
-    * triple is the identity a snapshot cache needs to detect that a file
-    * it read earlier is still the same file (the Delta replay cache,
-    * [[graft.Session.memo]]'s witness). */
+    * `keep`, as (path, length, mtime); empty when the path is absent, the
+    * file itself when `path` is a file. The triple is the identity a
+    * snapshot cache needs to detect that a file it read earlier is still
+    * the same file (the Delta replay cache, [[graft.Session.memo]]'s
+    * witness).
+    *
+    * Walks with `listStatus`, not `listFiles(path, true)`: the latter
+    * builds a `LocatedFileStatus` per file, which copies the file's
+    * permissions, and the local filesystem without the native Hadoop
+    * library loads those by running `ls -ld` once per file. `listStatus`
+    * leaves them unloaded and lists the same files (both hide the
+    * checksum filesystem's `.crc` sidecars). */
   def listFileStats(spark: SparkSession, path: String,
                     keep: String => Boolean): Seq[(String, Long, Long)] = {
     val (fs, p) = fsOf(path, conf(spark))
-    if (!fs.exists(p)) Seq.empty
-    else {
-      val it = fs.listFiles(p, true)
-      val buf = scala.collection.mutable.ArrayBuffer.empty[(String, Long, Long)]
-      while (it.hasNext) {
-        val st = it.next()
-        if (st.isFile && keep(st.getPath.getName))
+    val buf = scala.collection.mutable.ArrayBuffer.empty[(String, Long, Long)]
+    def walk(dir: Path): Unit = {
+      val sts = try fs.listStatus(dir)
+        catch { case _: java.io.FileNotFoundException => Array.empty[FileStatus] }
+      sts.foreach { st =>
+        if (st.isDirectory) walk(st.getPath)
+        else if (st.isFile && keep(st.getPath.getName))
           buf += ((st.getPath.toString, st.getLen, st.getModificationTime))
       }
-      buf.toSeq
     }
+    walk(p)
+    buf.toSeq
   }
 }

@@ -47,17 +47,15 @@ import org.apache.spark.sql.types.StructType
   */
 object Ingest {
 
-  /** Default micro-batch appetite floor — shared with
-    * [[Synthesize.cycle]]'s staged-batch widening so the two values
-    * cannot silently drift (r15, ADVICE r14). */
+  /** Default micro-batch appetite floor (r15, ADVICE r14). */
   val DefaultMaxFilesPerTrigger: Int = 8
 
   /** Effective micro-batch appetite: scales with the session's core
     * count (r15 session 3, guide §2.2 — "fewer, larger" micro-batches).
-    * The staged writers produce up to one file per core
-    * ([[Synthesize.cycle]] widens narrow generation to this same value;
-    * fidelity generation inherits the cache's core-count partitioning),
-    * so a fixed appetite of 8 sliced a 32-core cycle's staged batch
+    * A cycle stages up to one file per core and table
+    * ([[Synthesize.staged]] keeps `defaultParallelism` partitions, never
+    * more than this value), so one cycle drains in one micro-batch per
+    * table; a fixed appetite of 8 sliced a 32-core cycle's staged batch
     * into 4 micro-batches — 4× the commit/lifecycle fixed cost for
     * identical committed content (exactly-once is per FILE via the
     * checkpoint source log, not per batch; no declared output reads a

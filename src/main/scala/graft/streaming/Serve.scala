@@ -6,7 +6,14 @@ import java.nio.charset.StandardCharsets.UTF_8
 import scala.util.control.NonFatal
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader,
+  ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.types.StructType
 
 /** Resident SERVING layer over the pipeline's result directory — the
   * engine-side equivalent of the reference's dashboard process
@@ -174,11 +181,28 @@ final class Serve private (spark: SparkSession, resultsDir: String,
   private def generation(files: Seq[(String, Long)]): Long =
     files.map { case (p, len) => p.hashCode.toLong ^ len }.sum
 
+  /** The Spark schema of one parquet file, read from its footer on the
+    * driver by Spark's own rule (`readSchemaFromFooter`: the row schema
+    * Spark wrote into the footer's metadata, else the converted parquet
+    * schema) — the schema `spark.read.parquet` would infer, without the
+    * Spark job its inference runs. */
+  private def footerSchema(file: String): StructType = {
+    val path = new Path(file)
+    val conf = Fs.conf(spark)
+    val footer = ParquetFooterReader.readFooter(HadoopInputFile.fromPath(path, conf),
+      ParquetMetadataConverter.SKIP_ROW_GROUPS)
+    ParquetFileFormat.readSchemaFromFooter(new Footer(path, footer),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+  }
+
   /** Rows of one segment as a JSON array string, cache keyed by the
     * result generation of `files` (the segment's listing); mid-republish
     * (no committed files, or a read that fails because the old
     * generation just vanished) serves the cached last generation rather
-    * than a torn read. */
+    * than a torn read. A miss is one Spark job: the schema comes from a
+    * footer ([[footerSchema]]) and the limit sits above `toJSON`, so it
+    * plans as `CollectLimit`, which takes the first rows without the
+    * single-partition exchange a limit under `toJSON` plans. */
   private def rowsJson(seg: String, files: Seq[(String, Long)], limit: Int): String = {
     val gen = generation(files)
     val cached = Option(cache.get(seg))
@@ -186,8 +210,8 @@ final class Serve private (spark: SparkSession, resultsDir: String,
       case Some((g, json)) if g == gen && limit == 50 => json
       case _ =>
         try {
-          val df: DataFrame = spark.read.parquet(segDir(seg)).limit(limit)
-          val json = df.toJSON.collect().mkString("[", ",", "]")
+          val json = spark.read.schema(footerSchema(files.head._1)).parquet(segDir(seg))
+            .toJSON.limit(limit).collect().mkString("[", ",", "]")
           if (limit == 50) cache.put(seg, (gen, json))
           json
         } catch {
@@ -320,6 +344,12 @@ object Serve {
     * default to unsupervised. */
   def start(spark: SparkSession, resultsDir: String, segments: Seq[String],
             port: Int = 0, watchdogMs: Long = 0L): Serve = {
+    // TCP_NODELAY on the JDK server's sockets: without it the body leaves
+    // a segment behind the headers and waits out the client's delayed ACK
+    // (about 40 ms a response). Read once, when the server classes load,
+    // so it must be set before the first create; the watchdog's
+    // redeploys inherit it.
+    System.setProperty("sun.net.httpserver.nodelay", "true")
     val server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
     val s = new Serve(spark, resultsDir, segments, server, watchdogMs)
     s.install()

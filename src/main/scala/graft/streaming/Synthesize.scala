@@ -89,43 +89,35 @@ object Synthesize {
         expr(s"cast(1000 + (${Text.hash60SparkSql("concat('price:', cast(id as string))")} % 499000) as double) / 10.0").as("o_totalprice"),
         expr("timestamp'1995-01-01 00:00:00' + make_interval(0, 0, 0, cast(id % 2400 as int), 0, 0, 0)").as("o_orderdate"))
 
-  /** Staged orders batch: uuid key + affine order time. `batchMod`
-    * selects the cycle's slice (o_orderkey % nBatches == batchId).
-    * `src` defaults to the fixture; [[dbgenOrders]] is the
-    * dbgen-fidelity source (same schema). */
-  def stagedOrders(spark: SparkSession, sfDir: String, batchId: Int, nBatches: Int,
-                   src: Option[DataFrame] = None): DataFrame =
-    // spread (r15 s3): the single-file fixture pinned the md5/affine
-    // map side to one task (StageProf: 237 ms serial per cycle); the
-    // fidelity `src` is cache-backed and already wide — fixture only
-    src.getOrElse(Tables.spread(spark, Tables.orders(spark, sfDir), col("o_orderkey")))
-      .filter(col("o_orderkey") % nBatches === batchId)
-      .select(
-        md5(concat(lit("order:"), col("o_orderkey").cast("string"))).as("o_orderkey"),
-        col("o_custkey"), col("o_orderstatus"), col("o_totalprice"),
-        expr(affineS("o_orderdate", OrdTgtLo, OrdTgtHi)).as("o_order_time"),
-        col("o_orderpriority"))
+  /** The batch id of a staged row, its source key mod `nBatches`: the
+    * column [[staged]] tags every row with and [[cycle]] filters on, so
+    * successive cycles append disjoint slices. */
+  val BatchCol = "batch_id"
 
-  /** Staged lineitem batch: J3 keymap join + E3 noise + E2 ship-time
-    * remap. The keymap is derived, not stored — md5 is content-addressed,
-    * so the join result is verifiable against recomputation.
-    * `srcOrders`/`srcLineitem` default to the fixture tables;
-    * [[dbgenOrders]]/[[dbgenLineitem]] are the dbgen-fidelity pair. */
-  def stagedLineitem(spark: SparkSession, sfDir: String, batchId: Int, nBatches: Int,
-                     srcOrders: Option[DataFrame] = None,
-                     srcLineitem: Option[DataFrame] = None): DataFrame = {
-    val keymap = srcOrders.getOrElse(Tables.orders(spark, sfDir))
+  /** Staged orders: uuid key + affine order time, each row tagged with
+    * its [[BatchCol]]. `src` is the fixture table or [[dbgenOrders]]
+    * (same schema). */
+  def stagedOrders(src: DataFrame, nBatches: Int): DataFrame =
+    src.select(
+      (col("o_orderkey") % nBatches).cast("int").as(BatchCol),
+      md5(concat(lit("order:"), col("o_orderkey").cast("string"))).as("o_orderkey"),
+      col("o_custkey"), col("o_orderstatus"), col("o_totalprice"),
+      expr(affineS("o_orderdate", OrdTgtLo, OrdTgtHi)).as("o_order_time"),
+      col("o_orderpriority"))
+
+  /** Staged lineitem: J3 keymap join + E3 noise + E2 ship-time remap,
+    * each row tagged with its [[BatchCol]]. The keymap is derived, not
+    * stored — md5 is content-addressed, so the join result is verifiable
+    * against recomputation. `srcOrders`/`srcLineitem` are the fixture
+    * tables or the [[dbgenOrders]]/[[dbgenLineitem]] pair. */
+  def stagedLineitem(srcOrders: DataFrame, srcLineitem: DataFrame, nBatches: Int): DataFrame = {
+    val keymap = srcOrders
       .select(col("o_orderkey"),
         md5(concat(lit("order:"), col("o_orderkey").cast("string"))).as("o_orderkey_new"))
-    // spread by the JOIN key (r15 s3): the fixture's ≤3 scan splits
-    // pinned the keymap-join map side to one 1.2 s task per cycle
-    // (StageProf pipe_ingest_roundtrip stages 35/45: p50 35 ms,
-    // max 1235 ms); keyed on l_orderkey so the exchange doubles as the
-    // join-side partitioning. Fidelity `src` is generated (wide) — skip.
-    srcLineitem.getOrElse(Tables.spread(spark, Tables.lineitem(spark, sfDir), col("l_orderkey")))
-      .filter(col("l_orderkey") % nBatches === batchId)
+    srcLineitem
       .join(keymap, col("l_orderkey") === col("o_orderkey"))
       .select(
+        (col("l_orderkey") % nBatches).cast("int").as(BatchCol),
         col("o_orderkey_new").as("l_orderkey"),
         col("l_partkey"), col("l_suppkey"), col("l_linenumber"),
         col("l_quantity"),
@@ -133,6 +125,45 @@ object Synthesize {
           col("l_extendedprice")).as("l_extendedprice"),
         col("l_discount"), col("l_tax"), col("l_returnflag"), col("l_linestatus"),
         expr(affineS("l_shipdate", ShipTgtLo, ShipTgtHi)).as("l_ship_time"))
+  }
+
+  /** Every batch's staged orders and lineitem, built once per
+    * `(sfDir, nBatches, fidelity)` through [[graft.Session.memo]] (inputs:
+    * the fixture files they derive from, so a rewritten fixture
+    * recomputes them) and persisted MEMORY_AND_DISK for the session. The
+    * persist is lazy: the first cycle's writes fill it, later cycles
+    * filter their [[BatchCol]] out of it, so no cycle re-scans,
+    * re-shuffles, re-joins or re-hashes the fixture. It stays outside
+    * [[graft.operators.Scratch]]'s registry, whose release between
+    * queries would drop it.
+    *
+    * Narrow fixture scans are spread to `defaultParallelism` partitions
+    * first, so the md5 and affine maps run on every core, and each
+    * relation is coalesced to at most that many partitions: a cycle
+    * writes at most one file per partition and table, never more than
+    * [[Ingest.appetite]], so it drains in one micro-batch per table. */
+  def staged(spark: SparkSession, sfDir: String, nBatches: Int,
+             fidelity: Boolean): (DataFrame, DataFrame) = {
+    val tables = Seq("orders", "lineitem") ++
+      (if (fidelity) Seq("customer", "part", "supplier") else Nil)
+    graft.Session.memo(spark, "synthesize.staged", tables.map(Tables.path(sfDir, _)),
+        sfDir, nBatches, fidelity) {
+      // (orders, the keymap's orders, lineitem)
+      val (ord, keys, li) =
+        if (fidelity) {
+          val d = dbgenDims(spark, sfDir)
+          val o = dbgenOrders(spark, d)
+          (o, o, dbgenLineitem(o, d))
+        } else {
+          val o = Tables.orders(spark, sfDir)
+          (Tables.spread(spark, o, col("o_orderkey")), o,
+            Tables.spread(spark, Tables.lineitem(spark, sfDir), col("l_orderkey")))
+        }
+      def keep(df: DataFrame): DataFrame =
+        df.coalesce(spark.sparkContext.defaultParallelism)
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      (keep(stagedOrders(ord, nBatches)), keep(stagedLineitem(keys, li, nBatches)))
+    }
   }
 
   // ----- dbgen-FIDELITY generation (r12 verdict item 5) ----------------
@@ -252,9 +283,10 @@ object Synthesize {
   }
 
   /** Synthesize one generation cycle into the staging dir: the two fact
-    * tables always; the static dim only when neither staged nor already
-    * ingested into `tablesDir` (T5 idempotent skip). Mirrors the
-    * reference's per-cycle `generate` flow (reference pipeline/data.py:126-132).
+    * tables always, as batch `batchId` of the [[staged]] relations; the
+    * static dim only when neither staged nor already ingested into
+    * `tablesDir` (T5 idempotent skip). Mirrors the reference's per-cycle
+    * `generate` flow (reference pipeline/data.py:126-132).
     *
     * `fidelity = true` (r12 verdict item 5) draws the fact rows from the
     * [[dbgenOrders]]/[[dbgenLineitem]] generators instead of fixture
@@ -267,29 +299,8 @@ object Synthesize {
     * joins are unchanged. */
   def cycle(spark: SparkSession, sfDir: String, stagingDir: String, tablesDir: String,
             batchId: Int, nBatches: Int, fidelity: Boolean = false): Unit = {
-    val (srcOrd, srcLi) =
-      if (fidelity) {
-        val d = dbgenDims(spark, sfDir)
-        // materialize (eager): the orders relation feeds BOTH staged
-        // writes, which run concurrently below — a lazy persist would
-        // re-create the cold-cache race Scratch.materialize documents
-        val o = graft.operators.Scratch.materialize(dbgenOrders(spark, d))
-        (Some(o), Some(dbgenLineitem(o, d)))
-      } else (None, None)
-    // Size each staged batch to the ingest appetite
-    // ([[Ingest.DefaultMaxFilesPerTrigger]]: one generation cycle
-    // drains in one micro-batch per table) — r14 optimization round: the fixture
-    // tables read as 1-5 splits, so the whole md5/affine/JSON-encode
-    // generation ran on 1-5 cores (StageProf: a 1.9 s single task per
-    // cycle inside pipe_ingest_roundtrip). Only WIDENS narrow file
-    // scans: generated (`range`, inputFiles = 0) or already-wide
-    // inputs keep their planned layout — at 100 TB the generation
-    // parallelism comes from the source itself and this is a no-op.
-    def widen(df: DataFrame, key: org.apache.spark.sql.Column): DataFrame = {
-      val n = df.inputFiles.length
-      val w = Ingest.appetite(spark) // core-scaled (r15 s3): one cycle still drains in one micro-batch
-      if (n >= 1 && n < w) df.repartition(w, key) else df
-    }
+    val (ord, li) = staged(spark, sfDir, nBatches, fidelity)
+    def batch(df: DataFrame) = df.filter(col(BatchCol) === batchId).drop(BatchCol)
     // staged = staged FILES present (live mode pre-creates the staging
     // roots); ingested = the table's log has a commit (a writer's scratch
     // dir makes the table dir before any commit, so bare-directory
@@ -309,10 +320,8 @@ object Synthesize {
       import scala.concurrent.duration.Duration
       implicit val ec: ExecutionContext = ExecutionContext.global
       val jobs = Seq(
-        () => writeStaged(widen(stagedOrders(spark, sfDir, batchId, nBatches, srcOrd),
-          col("o_orderkey")), stagingDir, "orders", batchId),
-        () => writeStaged(widen(stagedLineitem(spark, sfDir, batchId, nBatches, srcOrd, srcLi),
-          col("l_orderkey")), stagingDir, "lineitem", batchId)) ++
+        () => writeStaged(batch(ord), stagingDir, "orders", batchId),
+        () => writeStaged(batch(li), stagingDir, "lineitem", batchId)) ++
         (if (custStagedOrIngested) Seq.empty[() => Unit]
          else Seq(() => writeStaged(Tables.customer(spark, sfDir), stagingDir, "customer", batchId)))
       jobs.map(j => Future(j())).foreach(Await.result(_, Duration.Inf))

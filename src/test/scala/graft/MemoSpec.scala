@@ -58,6 +58,24 @@ class MemoSpec extends SparkSpec {
     assert(second.storageLevel == StorageLevel.NONE, "a forgotten Dataset is still persisted")
   }
 
+  test("a replaced tuple of Datasets is unpersisted whole") {
+    import org.apache.spark.storage.StorageLevel
+    val in = input("pair.txt")
+    var runs = 0L
+    def get() = Session.memo(spark, "memoSpec.pair", Seq(in), in) {
+      runs += 1; (spark.range(runs + 10).persist(), spark.range(runs + 20).persist())
+    }
+    val (a, b) = get()
+    val f = new File(in)
+    assert(f.setLastModified(f.lastModified() + 5000))
+    val (c, d) = get()
+    assert(a.storageLevel == StorageLevel.NONE && b.storageLevel == StorageLevel.NONE,
+      "a member of the replaced tuple is still persisted")
+    assert(c.storageLevel != StorageLevel.NONE && d.storageLevel != StorageLevel.NONE)
+    Session.forgetMemos()
+    assert(c.storageLevel == StorageLevel.NONE && d.storageLevel == StorageLevel.NONE)
+  }
+
   test("a memo call nested inside a compute returns") {
     val in = input("nested.txt")
     // a thousand nested entries grow the map while the outer entry is

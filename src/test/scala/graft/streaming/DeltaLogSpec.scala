@@ -629,6 +629,33 @@ class DeltaLogSpec extends SparkSpec {
     assert(DeltaLog.read(spark, tbl).count() == 2, "vacuum touched a live file")
   }
 
+  test("vacuum reclaims a killed commit's aged .tmp_ temp and its .crc sidecar, and never a fresh one inside the retention") {
+    import spark.implicits._
+    val tbl = freshDir("vacuum-tmp")
+    DeltaLog.append(spark, tbl, Seq((1L, "a"), (2L, "b")).toDF("k", "v").coalesce(1))
+    // two committers killed between writing their temp and linking it
+    // into the log (DeltaLog.commit's window): one 8 days ago, one now;
+    // written through the checksum filesystem as commit writes them
+    def temp(name: String): (java.io.File, java.io.File) = {
+      val p = new org.apache.hadoop.fs.Path(s"$tbl/$name")
+      val out = p.getFileSystem(Fs.conf(spark)).create(p, false)
+      try out.write("{\"commitInfo\":{}}\n".getBytes("UTF-8")) finally out.close()
+      (new java.io.File(s"$tbl/$name"), new java.io.File(s"$tbl/.$name.crc"))
+    }
+    val (dead, deadCrc) = temp(".tmp_00000000-dead")
+    val (fresh, freshCrc) = temp(".tmp_00000000-fresh")
+    assert(deadCrc.exists, "the temp has no checksum sidecar")
+    val week8 = System.currentTimeMillis() - 8L * 24 * 3600 * 1000
+    Seq(dead, deadCrc).foreach(f => assert(f.setLastModified(week8)))
+    assert(DeltaLog.vacuum(spark, tbl) == 1)
+    assert(!dead.exists && !deadCrc.exists, "an aged commit temp or its .crc survived vacuum")
+    assert(fresh.exists && freshCrc.exists, "vacuum reclaimed a commit temp inside the retention window")
+    assert(DeltaLog.vacuum(spark, tbl, retentionMs = 0L) == 1)
+    assert(!fresh.exists && !freshCrc.exists, "vacuum(0) left a commit temp behind")
+    assert(DeltaLog.read(spark, tbl).count() == 2, "vacuum touched a live file")
+    assert(DeltaLog.latestVersion(spark, tbl) == 0L)
+  }
+
   test("optimize racing an overwrite aborts cleanly: content wins over layout") {
     import spark.implicits._
     val tbl = freshDir("optimize-race")

@@ -231,6 +231,66 @@ class PipelineSpec extends SparkSpec {
     } finally srv.stop()
   }
 
+  test("serve: the first GET after a republish runs one Spark job and serves the parquet rows' JSON byte for byte") {
+    val root = s"$base/serve-miss"
+    wipe(root)
+    copyTables(root)
+    PipelineMain.publishResults(spark, root)
+    // the orders fixture served as a segment too (the serve test's shape,
+    // all rows): a footer Spark wrote from another schema
+    val fixtureResults = s"$root/fixture-results"
+    Tables.orders(spark, sf).coalesce(1).write.parquet(s"$fixtureResults/ORDERS")
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    // `waitUntilEmpty` is Spark-internal; reflection reaches it
+    def drained(): Unit = {
+      val bus = spark.sparkContext.getClass.getMethod("listenerBus").invoke(spark.sparkContext)
+      bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
+    }
+    def want(dir: String, n: Int): String =
+      spark.read.parquet(dir).limit(n).toJSON.collect().mkString("[", ",", "]")
+    /** One GET's body and the Spark jobs it ran. */
+    def get(port: Int, path: String): (String, Int) = {
+      drained()
+      jobs.set(0)
+      val (code, body) = httpGet(port, path)
+      assert(code == 200, s"$path -> $code")
+      drained()
+      (body, jobs.get)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val srv = Serve.start(spark, s"$root/results", segments)
+    val fix = Serve.start(spark, fixtureResults, Seq("ORDERS"))
+    try {
+      for (seg <- segments) {
+        val (body, n) = get(srv.port, s"/results/$seg")
+        assert(n == 1, s"$seg: the miss ran $n jobs")
+        assert(body == want(s"$root/results/$seg", 50), s"$seg: served JSON differs")
+        assert(get(srv.port, s"/results/$seg") == ((body, 0)), s"$seg: the hit ran a job")
+      }
+      val (one, n1) = get(srv.port, "/results/BUILDING?limit=1")
+      assert(n1 == 1 && one == want(s"$root/results/BUILDING", 1) && one.count(_ == '{') == 1)
+      // a republish makes the next GET a miss again: one job, the new rows
+      PipelineMain.publishResults(spark, root)
+      val (again, n2) = get(srv.port, "/results/AUTOMOBILE")
+      assert(n2 == 1 && again == want(s"$root/results/AUTOMOBILE", 50))
+      for (q <- Seq("", "?limit=1")) {
+        val (body, n) = get(fix.port, s"/results/ORDERS$q")
+        val k = if (q.isEmpty) 50 else 1
+        assert(n == 1, s"ORDERS$q: the miss ran $n jobs")
+        assert(body == want(s"$fixtureResults/ORDERS", k) && body.count(_ == '{') == k,
+          s"ORDERS$q: served JSON differs")
+      }
+    } finally {
+      srv.stop(); fix.stop()
+      spark.sparkContext.removeSparkListener(listener)
+    }
+  }
+
   test("publish after a crash: stale .stage and legacy .stage_<SEG> dirs are never served and are cleared") {
     val root = s"$base/publish-crash"
     wipe(root)

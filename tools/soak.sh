@@ -9,7 +9,7 @@
 # row-identical to the control; any drift (lost rows, duplicated rows,
 # diverging top-50s) fails loud here. The clean finish must also leave
 # each table dir holding exactly its log's live files: no orphan from a
-# killed writer and no `.scratch_*` dir.
+# killed writer, no `.scratch_*` dir and no `.tmp_*` commit temp.
 #
 # Usage: tools/soak.sh [sfDir] [nBatches] [nKills] [seed] [--live]
 # With --live every run (control, chaos, final) uses PipelineMain's
@@ -127,6 +127,8 @@ for t in ("orders", "lineitem", "customer"):
         for n in os.listdir(tdir):
             if n.startswith(".scratch_"):
                 fails.append(f"{t}: {base} kept scratch dir {n} after the clean finish")
+            if n.startswith(".tmp_") or n.startswith("..tmp_"):
+                fails.append(f"{t}: {base} kept commit temp {n} after the clean finish")
     a = con.sql(f"SELECT count(*) FROM '{work}/tables/{t}/*.parquet'").fetchone()[0]
     b = con.sql(f"SELECT count(*) FROM '{ctrl}/tables/{t}/*.parquet'").fetchone()[0]
     report.append(f"{t}: chaos={a} control={b}")
