@@ -11,10 +11,11 @@ import org.apache.spark.sql.types.{ByteType, DateType, IntegerType, LongType, Sh
 
 /** A Catalyst [[FileIndex]] backed by the Delta transaction log — the
   * NATIVE integration tier for the lakehouse format (public Delta
-  * connectors sit on exactly this seam): instead of [[DeltaLog.read]]'s
-  * per-partition scan union with literal partition columns, the live
-  * file set and the log's `partitionValues` become a first-class file
-  * index, so Catalyst plans ONE `FileSourceScanExec` whose
+  * connectors sit on exactly this seam), and the file index of every
+  * [[DeltaLog]] table scan ([[DeltaLog.read]], the change feed, the
+  * streaming tail, the OPTIMIZE/DML rewrites): a set of add actions
+  * and their `partitionValues` become a first-class file index, so
+  * Catalyst plans ONE `FileSourceScanExec` whose
   * `PartitionFilters` — static predicates AND runtime
   * DynamicPruningExpressions alike — are evaluated HERE, against
   * log metadata, before any file is listed or read. `dataFilters`
@@ -31,14 +32,16 @@ import org.apache.spark.sql.types.{ByteType, DateType, IntegerType, LongType, Sh
   * `HadoopFsRelation` (pushdown, column pruning, vectorized parquet)
   * applies unchanged.
   *
-  * Values are PROTOCOL-LITERAL like [[DeltaLog.readPartitioned]]: the
-  * partition column is rebuilt from `partitionValues` (cast per the
-  * schema, null for JSON null), never parsed from file paths, so
-  * foreign flat-layout tables index identically.
+  * Values are PROTOCOL-LITERAL: the partition column is rebuilt from
+  * `partitionValues` (cast per the schema, null for JSON null), never
+  * parsed from file paths, so foreign flat-layout tables index
+  * identically. [[DeltaLog.pruneFiles]] lists through the same index,
+  * so the stats rule in `mayMatch` is the one data-skipping rule.
   *
-  * `adds` carries (absolute file path, size, partition values in
-  * partition-schema order, stats JSON if recorded) for the live set at
-  * the pinned version — the index is an immutable snapshot, matching
+  * `adds` carries (resolved file path, size, partition values in
+  * partition-schema order, stats JSON if recorded) for the scanned
+  * adds: a version's live set, or one commit's new files for the change
+  * feed and the streaming tail — the index is an immutable snapshot, matching
   * Delta's read semantics (`refresh` is deliberately a no-op; a new
   * version is a NEW index, the same way it is a new log replay).
   */
@@ -47,7 +50,7 @@ final class DeltaFileIndex(
     table: String,
     adds: Seq[(String, Long, Seq[(String, Option[String])], Option[String])],
     override val partitionSchema: StructType,
-    dataSchema: StructType)
+    val dataSchema: StructType)
   extends FileIndex {
 
   override def rootPaths: Seq[Path] = Seq(new Path(table))

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SQLContext, SparkSession}
 import org.apache.spark.sql.connector.read.streaming.{Offset => V2Offset, ReadLimit, ReadMaxFiles, SupportsTriggerAvailableNow}
 import org.apache.spark.sql.execution.streaming.{Offset => V1Offset, Source}
 import org.apache.spark.sql.execution.streaming.runtime.LongOffset
-import org.apache.spark.sql.graftbridge.StreamBridge
+import org.apache.spark.sql.graftbridge.{StreamBridge, TypeBridge}
 import org.apache.spark.sql.sources.StreamSourceProvider
 import org.apache.spark.sql.types.StructType
 
@@ -33,10 +33,11 @@ import org.apache.spark.sql.types.StructType
   *    case the new files are emitted and the rewrite is the caller's
   *    contract to handle downstream.
   *
-  * Scale shape: each micro-batch plans ONE multi-file parquet scan over
-  * just the new files (schema-asserted, filters/pruning push down as in
-  * any batch scan); the log replay per trigger is metadata-sized and
-  * checkpoint-bounded ([[DeltaLog.replay]]). State is a single long.
+  * Scale shape: each micro-batch plans ONE scan over just the new files
+  * ([[DeltaLog.tail]], the same log-indexed scan as every table read:
+  * filters/pruning push down as in any batch scan); the log replay per
+  * trigger is metadata-sized and checkpoint-bounded
+  * ([[DeltaLog.replay]]). State is a single long.
   *
   * The reference's pipeline reads its Delta tables only as batch
   * snapshots per cycle (reference pipeline/reduce.py:21,43); this source
@@ -49,9 +50,9 @@ class DeltaStreamSource(
     maxVersionsPerTrigger: Option[Int] = None,
     startingVersion: Option[Long] = None) extends Source with SupportsTriggerAvailableNow {
 
-  import DeltaStreamSource.M
-
-  override val schema: StructType = DeltaLog.snapshot(spark, table)._3
+  // nullable, like every DeltaLog scan: a micro-batch's columns must
+  // match what the source declares
+  override val schema: StructType = TypeBridge.asNullable(DeltaLog.snapshot(spark, table)._3)
 
   override def getOffset: Option[V1Offset] = {
     val v = DeltaLog.latestVersion(spark, table)
@@ -120,52 +121,13 @@ class DeltaStreamSource(
     }
   }
 
-  /** Add-actions of versions (startV, endV] as one multi-file scan. */
-  private def tailBatch(startV: Long, endV: Long): DataFrame = {
-    val adds = Seq.newBuilder[(String, com.fasterxml.jackson.databind.JsonNode)]
-    for (v <- (startV + 1) to endV; line <- DeltaLog.readCommit(spark, table, v)) {
-      val n = M.readTree(line)
-      if (n.has("add")) {
-        val a = n.get("add")
-        if (a.has("deletionVector") && !a.get("deletionVector").isNull)
-          throw new UnsupportedOperationException(
-            s"version $v of $table adds a file with a deletion vector; the " +
-              "streaming tail reads commit files whole and cannot mask its " +
-              "deleted rows (even under ignoreChanges)")
-        if (!a.has("dataChange") || a.get("dataChange").asBoolean(true))
-          adds += a.get("path").asText() -> a
-      }
-      if (n.has("remove") && n.get("remove").path("dataChange").asBoolean(true) &&
-          !ignoreChanges)
-        throw new IllegalStateException(
-          s"version ${v} of $table removes data (overwrite/delete); a streaming " +
-            "tail cannot represent that as an append — set ignoreChanges=true " +
-            "to stream the rewritten files anyway")
-    }
-    val files = adds.result()
-    // schema/partition layout at endV (additive evolution is safe:
-    // new files carry the new schema, the scan asserts it)
-    val tailSchema = DeltaLog.snapshot(spark, table, endV)._3
-    val partCols = DeltaLog.partitionColumnsAt(spark, table, endV)
-    if (files.isEmpty) StreamBridge.emptyStreaming(spark, tailSchema)
-    else if (partCols.isEmpty)
-      StreamBridge.asStreaming(
-        // resolvedPath: adds may be absolute (a shallow clone's v0, a
-        // foreign writer) — same rule as every DeltaLog scan
-        spark.read.schema(tailSchema).parquet(
-          files.map(f => DeltaLog.resolvedPath(table, f._1)): _*))
-    else
-      StreamBridge.asStreaming(
-        DeltaLog.readPartitioned(spark, table, files, tailSchema, partCols))
-  }
+  /** Add-actions of versions (startV, endV] as one scan. */
+  private def tailBatch(startV: Long, endV: Long): DataFrame =
+    StreamBridge.asStreaming(DeltaLog.tail(spark, table, startV, endV, ignoreChanges))
 
   override def commit(end: V1Offset): Unit = ()
   override def stop(): Unit = ()
   override def toString: String = s"DeltaStreamSource[$table]"
-}
-
-object DeltaStreamSource {
-  private val M = new com.fasterxml.jackson.databind.ObjectMapper()
 }
 
 /** `spark.readStream.format("graft.streaming.DeltaStreamProvider")
@@ -183,7 +145,7 @@ class DeltaStreamProvider extends StreamSourceProvider {
       ctx: SQLContext, userSchema: Option[StructType],
       providerName: String, params: Map[String, String]): (String, StructType) =
     ("graft-delta", userSchema.getOrElse(
-      DeltaLog.snapshot(ctx.sparkSession, table(params))._3))
+      TypeBridge.asNullable(DeltaLog.snapshot(ctx.sparkSession, table(params))._3)))
 
   override def createSource(
       ctx: SQLContext, metadataPath: String, userSchema: Option[StructType],

@@ -111,9 +111,9 @@ object Pipeline {
     Ingest.drainAll(spark, staging, tables, ckpt,
       Map("orders" -> Schemas.stagedOrders))
 
-    val ord = DeltaLog.readNative(spark, s"$tables/orders")
-    val li = DeltaLog.readNative(spark, s"$tables/lineitem")
-    val cust = DeltaLog.readNative(spark, s"$tables/customer")
+    val ord = DeltaLog.read(spark, s"$tables/orders")
+    val li = DeltaLog.read(spark, s"$tables/lineitem")
+    val cust = DeltaLog.read(spark, s"$tables/customer")
     summarize(cust, "customer", "c_custkey", "0", "cast(round(c_acctbal * 100) as bigint)")
       .unionAll(summarize(li, "lineitem",
         Text.hash60SparkSql("l_orderkey"),
@@ -162,7 +162,7 @@ object Pipeline {
     val dir = s"$base/orders"
     DeltaLog.append(spark, dir, Tables.orders(spark, sfDir).repartition(16))
     val (before, after) = DeltaLog.optimize(spark, dir, targetFiles = 2)
-    DeltaLog.readNative(spark, dir)
+    DeltaLog.read(spark, dir)
       .agg(count(lit(1)).as("n_rows"),
         sum(expr(s"o_orderkey % $P")).as("key_check"),
         sum(expr(s"cast(round(o_totalprice * 100) as bigint) % $P")).as("price_check"))
@@ -763,15 +763,15 @@ object Pipeline {
     * the events fixture `partitionBy("event_type")` (Hive `col=value/`
     * layout on disk, stringified `partitionValues` on every add
     * action), then the purchase partition reads back through LOG-level
-    * partition pruning ([[DeltaLog.prunePartitionFiles]] shrinks the
-    * file list before any scan is planned — the way every real engine
-    * reads a 100 TB date-partitioned Delta table) and aggregates. The
-    * oracle recomputes the same aggregate from the fixture's purchase
-    * rows, so a pruning bug in either direction (a dropped live
-    * purchase file, or a leaked foreign-partition file) shifts
-    * n_rows/checksums. The partition column itself comes back from the
-    * log's partitionValues, protocol-literally — data files do not
-    * contain it (DeltaLogSpec proves the flat-layout foreign case). */
+    * partition pruning (the `event_type` filter prunes inside
+    * [[DeltaFileIndex.listFiles]] before any file is opened — the way
+    * every real engine reads a 100 TB date-partitioned Delta table) and
+    * aggregates. The oracle recomputes the same aggregate from the
+    * fixture's purchase rows, so a pruning bug in either direction (a
+    * dropped live purchase file, or a leaked foreign-partition file)
+    * shifts n_rows/checksums. The partition column itself comes back
+    * from the log's partitionValues, protocol-literally — data files do
+    * not contain it (DeltaLogSpec proves the flat-layout foreign case). */
   def pipeDeltaPartition(spark: SparkSession, sfDir: String): DataFrame = {
     val base = s"$pipeDir/deltap_${sfName(sfDir)}"
     wipe(spark, base)
@@ -782,8 +782,7 @@ object Pipeline {
       partitionBy = Seq("event_type"))
     DeltaLog.append(spark, tbl, ev.filter(col("event_id") % 2 === 1).repartition(2),
       partitionBy = Seq("event_type"))
-    val purchases = DeltaLog.readPartition(spark, tbl, Map("event_type" -> "purchase"))
-    purchases
+    DeltaLog.read(spark, tbl).filter(col("event_type") === "purchase")
       .groupBy("event_type")
       .agg(count(lit(1)).as("n_rows"),
         sum(expr(s"event_id % $P")).as("key_check"),
@@ -791,16 +790,16 @@ object Pipeline {
       .orderBy("event_type")
   }
 
-  /** NATIVE CATALYST SCAN OVER THE DELTA LOG ([[DeltaLog.readNative]] /
+  /** NATIVE CATALYST SCAN OVER THE DELTA LOG ([[DeltaLog.read]] /
     * [[DeltaFileIndex]]): the same two-commit partitioned table as
-    * [[pipeDeltaPartition]], but the partition predicate is a plain
-    * `.filter` on the DataFrame — pruning happens inside the file
-    * index's `listFiles` against log metadata (PlanSpec asserts the
-    * scan's PartitionFilters + pruned file count; here the oracle
-    * asserts the VALUES). One FileSourceScanExec, no per-partition
-    * union, no filesystem listing — the read path where dynamic
-    * partition pruning and parquet pushdown compose with Delta tables
-    * exactly as with Hive layouts. */
+    * [[pipeDeltaPartition]], filtered on TWO partition values — an `IN`
+    * list prunes inside the file index's `listFiles` against log
+    * metadata just as an equality does (DeltaLogSpec asserts the scan's
+    * PartitionFilters + pruned file count; here the oracle asserts the
+    * VALUES). One FileSourceScanExec, no per-partition union, no
+    * filesystem listing — the read path where dynamic partition pruning
+    * and parquet pushdown compose with Delta tables exactly as with
+    * Hive layouts. */
   def pipeDeltaNativePrune(spark: SparkSession, sfDir: String): DataFrame = {
     val base = s"$pipeDir/deltanp_${sfName(sfDir)}"
     wipe(spark, base)
@@ -811,7 +810,7 @@ object Pipeline {
       partitionBy = Seq("event_type"))
     DeltaLog.append(spark, tbl, ev.filter(col("event_id") % 2 === 1).repartition(2),
       partitionBy = Seq("event_type"))
-    DeltaLog.readNative(spark, tbl)
+    DeltaLog.read(spark, tbl)
       .filter(col("event_type").isin("purchase", "signup"))
       .groupBy("event_type")
       .agg(count(lit(1)).as("n_rows"),
@@ -1752,8 +1751,8 @@ object Pipeline {
     Synthesize.cycle(spark, sfDir, staging, tables, batchId = 0, nBatches = 1,
       fidelity = true)
     Ingest.drainAll(spark, staging, tables, ckpt, schemas)
-    val ord = DeltaLog.readNative(spark, s"$tables/orders")
-    val li = DeltaLog.readNative(spark, s"$tables/lineitem")
+    val ord = DeltaLog.read(spark, s"$tables/orders")
+    val li = DeltaLog.read(spark, s"$tables/lineitem")
     val mod3 = ord.agg(
       sum(when(col("o_custkey") % 3 === 0, 1L).otherwise(0L)).as("mod3_hits"))
     val skew = li.groupBy("l_partkey").agg(count(lit(1)).as("cnt"))

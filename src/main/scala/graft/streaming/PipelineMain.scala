@@ -190,9 +190,9 @@ object PipelineMain {
     * `l_orderkey`, `o_order_time`, `revenue`; within a segment, rank
     * order is `revenue desc, l_orderkey`. */
   private[graft] def segmentTop50(spark: SparkSession, tables: String): DataFrame = {
-    val li = DeltaLog.readNative(spark, s"$tables/lineitem")
-    val ord = DeltaLog.readNative(spark, s"$tables/orders")
-    val cust = DeltaLog.readNative(spark, s"$tables/customer")
+    val li = DeltaLog.read(spark, s"$tables/lineitem")
+    val ord = DeltaLog.read(spark, s"$tables/orders")
+    val cust = DeltaLog.read(spark, s"$tables/customer")
     val cutoff = lit(Synthesize.OrdTgtHi).cast("timestamp")
     val rank = Seq(col("revenue").desc, col("l_orderkey"))
     ord.filter(col("o_order_time") < cutoff)

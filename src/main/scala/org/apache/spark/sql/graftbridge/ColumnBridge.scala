@@ -92,7 +92,7 @@ object FunctionBridge {
   * LogicalRelation) — a plain batch read fails MicroBatchExecution's
   * streaming-plan check. Same supported extension pattern as above. */
 object StreamBridge {
-  import org.apache.spark.sql.classic.{Dataset => ClassicDataset, SparkSession => ClassicSession}
+  import org.apache.spark.sql.classic.{Dataset => ClassicDataset}
   import org.apache.spark.sql.execution.datasources.LogicalRelation
 
   /** Re-root `df`'s relation leaves as streaming leaves. */
@@ -103,13 +103,12 @@ object StreamBridge {
     }
     ClassicDataset.ofRows(classic.sparkSession, plan)
   }
+}
 
-  /** Empty streaming-marked frame (the no-new-files micro-batch). */
-  def emptyStreaming(spark: org.apache.spark.sql.SparkSession,
-                     schema: org.apache.spark.sql.types.StructType): org.apache.spark.sql.DataFrame = {
-    val classic = spark.asInstanceOf[ClassicSession]
-    classic.internalCreateDataFrame(
-      classic.sparkContext.emptyRDD[org.apache.spark.sql.catalyst.InternalRow], schema,
-      isStreaming = true)
-  }
+/** Type access: `StructType.asNullable` (every field, nested ones too,
+  * made nullable — what Spark's own file reads apply to a user schema)
+  * is internal to Spark. */
+object TypeBridge {
+  def asNullable(s: org.apache.spark.sql.types.StructType): org.apache.spark.sql.types.StructType =
+    s.asNullable
 }

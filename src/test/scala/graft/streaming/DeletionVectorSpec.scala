@@ -159,10 +159,6 @@ class DeletionVectorSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getString(1))).toSeq
     assert(got == Seq((2L, "b"), (4L, "d"), (5L, "e")))
     assert(DeltaLog.read(spark, tbl).schema.fieldNames.toSeq == Seq("k", "v"))
-    // raw-consuming paths refuse the same table by name (file-level:
-    // live vector-carrying adds must never be read whole)
-    val e = intercept[UnsupportedOperationException](DeltaLog.readNative(spark, tbl))
-    assert(e.getMessage.contains("deletion vector"))
   }
 
   test("deleteWhereDv lifecycle: union on overlap, checkpoint round-trip, vacuum keeps live DV'd files, protocol upgraded") {
@@ -214,7 +210,6 @@ class DeletionVectorSpec extends SparkSpec {
     val afterPurge = DeltaLog.read(spark, tbl).select("k").as[Long].collect().sorted.toSeq
     assert(afterPurge == survivors :+ 100L)
     assert(DeltaLog.snapshot(spark, tbl)._2.nonEmpty) // no refusal: vectors gone
-    assert(DeltaLog.readNative(spark, tbl).select("k").as[Long].collect().sorted.toSeq == afterPurge)
     val (nIn, nOut) = DeltaLog.optimize(spark, tbl, targetFiles = 1)
     assert(nOut == 1 && nIn >= 2)
     assert(DeltaLog.read(spark, tbl).select("k").as[Long].collect().sorted.toSeq == afterPurge)

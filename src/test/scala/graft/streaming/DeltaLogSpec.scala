@@ -200,14 +200,14 @@ class DeltaLogSpec extends SparkSpec {
     intercept[IllegalStateException](DeltaLog.snapshot(spark, tbl))
   }
 
-  test("readNative: one FileSourceScanExec; partition predicate prunes via the log index, no listing") {
+  test("read: one FileSourceScanExec; partition predicate prunes via the log index, no listing") {
     import org.apache.spark.sql.execution.FileSourceScanExec
     val tbl = freshDir("native")
     val ev = graft.sources.Tables.events(spark, sf)
       .select(col("event_id"), col("event_type"), col("value"))
     DeltaLog.append(spark, tbl, ev.repartition(2), partitionBy = Seq("event_type"))
     val totalFiles = DeltaLog.snapshot(spark, tbl)._2.size
-    val q = DeltaLog.readNative(spark, tbl).filter(col("event_type") === "purchase")
+    val q = DeltaLog.read(spark, tbl).filter(col("event_type") === "purchase")
     // execute q ITSELF so ITS scan's metrics populate (an .agg would be
     // a separate QueryExecution whose metrics never tick here)
     val got = q.collect().map(_.getLong(0)).sorted.toSeq
@@ -223,7 +223,7 @@ class DeltaLogSpec extends SparkSpec {
       s"log-index pruning read $scanned of $totalFiles files")
     // relation-level column pruning must still reach parquet (separate
     // narrow projection — q above materializes every column by design)
-    val narrow = DeltaLog.readNative(spark, tbl)
+    val narrow = DeltaLog.read(spark, tbl)
       .filter(col("event_type") === "purchase").select("event_id")
     narrow.collect()
     val rs = narrow.queryExecution.executedPlan
@@ -231,7 +231,7 @@ class DeltaLogSpec extends SparkSpec {
     assert(!rs.contains("value"), s"unpruned ReadSchema: $rs")
   }
 
-  test("readNative: dynamic partition pruning fires over a Delta fact table") {
+  test("read: dynamic partition pruning fires over a Delta fact table") {
     val tbl = freshDir("nativedpp")
     val ev = graft.sources.Tables.events(spark, sf)
       .select(col("event_id"), col("event_type"), col("value"))
@@ -242,7 +242,7 @@ class DeltaLogSpec extends SparkSpec {
         when(col("id") === 3, lit("purchase")).otherwise(concat(lit("x"), col("id")))
           .as("d_type"))
       .filter(col("d_name") === "t3")
-    val j = DeltaLog.readNative(spark, tbl).join(dim, col("event_type") === col("d_type"))
+    val j = DeltaLog.read(spark, tbl).join(dim, col("event_type") === col("d_type"))
     val got = j.count()
     val want = ev.filter(col("event_type") === "purchase").count()
     assert(got == want && got > 0)
@@ -251,7 +251,7 @@ class DeltaLogSpec extends SparkSpec {
       s"no dynamic-pruning subquery over the Delta scan:\n${plan.take(4000)}")
   }
 
-  test("readNative: foreign flat-layout table with a null partition value reads protocol-literally") {
+  test("read: foreign flat-layout table with a null partition value reads protocol-literally") {
     val tbl = freshDir("nativenull")
     val s1 = writeParquetFile(tbl, "f1.snappy.parquet", Seq((1L, "a"), (2L, "b")))
     val s2 = writeParquetFile(tbl, "f2.snappy.parquet", Seq((3L, "c")))
@@ -262,7 +262,7 @@ class DeltaLogSpec extends SparkSpec {
       s"""{"metaData":{"id":"11111111-2222-3333-4444-666666666666","format":{"provider":"parquet","options":{}},"schemaString":"$handPartSchemaString","partitionColumns":["p"],"configuration":{},"createdTime":1700000000000}}""",
       s"""{"add":{"path":"f1.snappy.parquet","partitionValues":{"p":"g1"},"size":$s1,"modificationTime":1,"dataChange":true}}""",
       s"""{"add":{"path":"f2.snappy.parquet","partitionValues":{"p":null},"size":$s2,"modificationTime":2,"dataChange":true}}"""))
-    val df = DeltaLog.readNative(spark, tbl)
+    val df = DeltaLog.read(spark, tbl)
     assert(df.columns.toSeq == Seq("k", "v", "p"))
     val rows = df.select("k", "p").collect().map(r => r.getLong(0) -> Option(r.getString(1))).toMap
     assert(rows == Map(1L -> Some("g1"), 2L -> Some("g1"), 3L -> None))
@@ -271,7 +271,7 @@ class DeltaLogSpec extends SparkSpec {
     assert(df.filter(col("p") === "g1").count() == 2)
   }
 
-  test("readNative: add-action stats data-skip files inside the native scan; fractional columns stay conservative") {
+  test("read: add-action stats data-skip files inside the native scan; fractional columns stay conservative") {
     import org.apache.spark.sql.execution.FileSourceScanExec
     val tbl = freshDir("nativeskip")
     val ord = graft.sources.Tables.orders(spark, sf)
@@ -294,19 +294,19 @@ class DeltaLogSpec extends SparkSpec {
         .collect { case s: FileSourceScanExec => s }.head.metrics("numFiles").value
     }
     // equality inside one slice's range → exactly 1 of 4 files opened
-    val q1 = DeltaLog.readNative(spark, tbl).filter(col("o_orderkey") === keys(2))
+    val q1 = DeltaLog.read(spark, tbl).filter(col("o_orderkey") === keys(2))
     assert(q1.count() == 1)
-    assert(scannedFiles(DeltaLog.readNative(spark, tbl)
+    assert(scannedFiles(DeltaLog.read(spark, tbl)
       .filter(col("o_orderkey") === keys(2))) == 1L)
     // a range predicate spanning two slices → 2 files
-    assert(scannedFiles(DeltaLog.readNative(spark, tbl)
+    assert(scannedFiles(DeltaLog.read(spark, tbl)
       .filter(col("o_orderkey") >= cuts(1) - 1 && col("o_orderkey") < cuts(2))) == 2L)
     // fractional column (o_totalprice double): truncated long stats are
     // not tight → NO skipping may happen on it, all 4 files open
-    assert(scannedFiles(DeltaLog.readNative(spark, tbl)
+    assert(scannedFiles(DeltaLog.read(spark, tbl)
       .filter(col("o_totalprice") < 2000.0)) == 4L)
     // values must equal the plain filter regardless of skipping
-    val got = DeltaLog.readNative(spark, tbl)
+    val got = DeltaLog.read(spark, tbl)
       .filter(col("o_orderkey") < cuts(0)).agg(sum("o_orderkey")).head.getLong(0)
     val want = ord.filter(col("o_orderkey") < cuts(0)).agg(sum("o_orderkey")).head.getLong(0)
     assert(got == want)
@@ -754,12 +754,16 @@ class DeltaLogSpec extends SparkSpec {
     // full read reconstructs the partition column (values from the LOG)
     assert(DeltaLog.read(spark, tbl).select("k", "p", "x").collect().toSet ==
       (df.collect().toSet ++ Set(Row(5L, "a", 50L), Row(6L, "b", 60L))))
-    // pruning: only partition-a files survive, strictly fewer than live
-    val (kept, total) = DeltaLog.prunePartitionFiles(spark, tbl, Map("p" -> "a"))
-    assert(kept.nonEmpty && kept.size < total)
-    assert(kept.forall(_._1.startsWith("p=a/")))
-    assert(DeltaLog.readPartition(spark, tbl, Map("p" -> "a"))
-      .select("k").collect().map(_.getLong(0)).sorted.sameElements(Array(1L, 3L, 5L)))
+    // pruning: the partition filter opens exactly the partition-a
+    // files, strictly fewer than live
+    val pa = DeltaLog.read(spark, tbl).filter(col("p") === "a").select("k")
+    assert(pa.collect().map(_.getLong(0)).sorted.sameElements(Array(1L, 3L, 5L)))
+    val scanned = pa.queryExecution.executedPlan.collectLeaves().collectFirst {
+      case f: org.apache.spark.sql.execution.FileSourceScanExec => f.metrics("numFiles").value
+    }.getOrElse(fail("no FileSourceScanExec leaf"))
+    val aFiles = adds.count(_._1.startsWith("p=a/"))
+    assert(scanned == aFiles && aFiles < adds.size,
+      s"partition pruning read $scanned files; partition a has $aFiles of ${adds.size}")
     // appends with a different partitioning must refuse
     intercept[IllegalArgumentException] {
       DeltaLog.append(spark, tbl, Seq((7L, "z", 70L)).toDF("k", "p", "x"))
@@ -838,7 +842,6 @@ class DeltaLogSpec extends SparkSpec {
     val dvTbl = mkTable("refuse-dv",
       """{"protocol":{"minReaderVersion":3,"minWriterVersion":7,"readerFeatures":["deletionVectors"],"writerFeatures":["deletionVectors"]}}""")
     assert(DeltaLog.read(spark, dvTbl).count() == 1L)
-    assert(DeltaLog.readNative(spark, dvTbl).count() == 1L)
     assert(DeltaLog.snapshot(spark, dvTbl)._2 == Seq("f1.parquet"))
     // an unknown v3 feature still refuses by name
     val vtTbl = mkTable("refuse-v2ckpt",
@@ -863,8 +866,6 @@ class DeltaLogSpec extends SparkSpec {
     val lyingTbl = mkTable("refuse-dvfile",
       """{"protocol":{"minReaderVersion":1,"minWriterVersion":2}}""",
       ""","deletionVector":{"storageType":"u","pathOrInlineDv":"ab^-aqEH.-t@S}K{vb[*k^","offset":1,"sizeInBytes":38,"cardinality":1}""")
-    val e4 = intercept[UnsupportedOperationException](DeltaLog.readNative(spark, lyingTbl))
-    assert(e4.getMessage.contains("deletion vector"))
     val e4b = intercept[UnsupportedOperationException](DeltaLog.optimize(spark, lyingTbl))
     assert(e4b.getMessage.contains("deletion vector"))
     intercept[Exception](DeltaLog.read(spark, lyingTbl).count())
@@ -874,19 +875,22 @@ class DeltaLogSpec extends SparkSpec {
     assert(DeltaLog.snapshot(spark, okTbl)._2 == Seq("f1.parquet"))
   }
 
-  test("column-mapped foreign table (mode id): physical-name reads, logical output; native path and partitioned refuse (r14)") {
+  /** A foreign column-mapped table (mode id) holding k = 1..3, v = a..c:
+    * its one data file carries Delta's PHYSICAL column names
+    * (col-<uuid> style) and its log the logical schema k,v with
+    * column-mapping field metadata, exactly as a mode-id writer emits
+    * it (numeric id + physicalName per field). Returns (table, logical
+    * schema). */
+  private def columnMappedTable(tag: String): (String, org.apache.spark.sql.types.StructType) = {
     import org.apache.spark.sql.types._
-    val tbl = freshDir("colmap")
-    // data file carries Delta's PHYSICAL column names (col-<uuid> style)
-    val scratch = s"$tbl/.mk"
     import spark.implicits._
+    val tbl = freshDir(tag)
+    val scratch = s"$tbl/.mk"
     Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("col-9f8e7d6c", "col-1a2b3c4d")
       .coalesce(1).write.mode("overwrite").parquet(scratch)
     val part = Fs.listFiles(spark, scratch, _.endsWith(".parquet")).head
     Fs.renameOrFail(spark, part._1, s"$tbl/m1.parquet")
     Fs.deleteRec(spark, scratch)
-    // logical schema k,v with column-mapping field metadata, exactly as
-    // a mode-id writer emits it (numeric id + physicalName per field)
     val mappedSchema = StructType(Seq(
       StructField("k", LongType, nullable = true, new MetadataBuilder()
         .putLong("delta.columnMapping.id", 1L)
@@ -899,14 +903,17 @@ class DeltaLogSpec extends SparkSpec {
       """{"protocol":{"minReaderVersion":2,"minWriterVersion":5}}""",
       s"""{"metaData":{"id":"cccc-dddd","format":{"provider":"parquet","options":{}},"schemaString":"$schemaStr","partitionColumns":[],"configuration":{"delta.columnMapping.mode":"id","delta.columnMapping.maxColumnId":"2"},"createdTime":1}}""",
       s"""{"add":{"path":"m1.parquet","partitionValues":{},"size":${part._2},"modificationTime":1,"dataChange":true}}"""))
+    (tbl, mappedSchema)
+  }
+
+  test("column-mapped foreign table (mode id): physical-name reads, logical output; partitioned refuses (r14)") {
+    import org.apache.spark.sql.types._
+    val (tbl, mappedSchema) = columnMappedTable("colmap")
     // read(): logical names out, physical columns resolved underneath
     val got = DeltaLog.read(spark, tbl).orderBy("k").collect()
       .map(r => (r.getLong(0), r.getString(1))).toSeq
     assert(got == Seq((1L, "a"), (2L, "b"), (3L, "c")))
     assert(DeltaLog.read(spark, tbl).schema.fieldNames.toSeq == Seq("k", "v"))
-    // the native-scan path refuses by name rather than reading nulls
-    val en = intercept[UnsupportedOperationException](DeltaLog.readNative(spark, tbl))
-    assert(en.getMessage.contains("column-mapped"))
     // our checkpoint must PRESERVE the foreign v2 protocol (not
     // downgrade to our v1 announcement) and keep reading mapped
     DeltaLog.checkpoint(spark, tbl)
@@ -914,7 +921,6 @@ class DeltaLogSpec extends SparkSpec {
     val got2 = DeltaLog.read(spark, tbl).orderBy("k").collect()
       .map(r => (r.getLong(0), r.getString(1))).toSeq
     assert(got2 == got)
-    intercept[UnsupportedOperationException](DeltaLog.readNative(spark, tbl))
     // mapped + partitioned: named refusal (physical-keyed
     // partitionValues are out of scope, silence is not)
     val ptbl = freshDir("colmap-part")
@@ -930,5 +936,92 @@ class DeltaLogSpec extends SparkSpec {
       s"""{"add":{"path":"p1.parquet","partitionValues":{"col-55667788":"x"},"size":$ps,"modificationTime":1,"dataChange":true}}"""))
     val ep = intercept[UnsupportedOperationException](DeltaLog.read(spark, ptbl))
     assert(ep.getMessage.contains("column-mapped AND partitioned"))
+  }
+
+  test("every read shape plans its table files through DeltaFileIndex: one FileSourceScanExec per read, no listing, no per-partition union") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.{FileSourceScanExec, LeafExecNode, LocalTableScanExec, UnionExec}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper}
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    val aqe = new AdaptiveSparkPlanHelper {}
+    // the number of table scans in `df`'s physical plan: every leaf is a
+    // log-indexed FileSourceScanExec, or the deletion-vector mask's
+    // local descriptor list
+    def deltaScans(df: org.apache.spark.sql.DataFrame): Int = {
+      val plan = df.queryExecution.executedPlan
+      val leaves = aqe.collect(plan) {
+        case l: LeafExecNode if !l.isInstanceOf[AdaptiveSparkPlanExec] => l }
+      leaves.foreach {
+        case s: FileSourceScanExec =>
+          assert(s.relation.location.isInstanceOf[DeltaFileIndex],
+            s"scan over ${s.relation.location.getClass.getSimpleName}:\n$plan")
+        case _: LocalTableScanExec =>
+        case other => fail(s"unexpected leaf ${other.nodeName}:\n$plan")
+      }
+      leaves.count(_.isInstanceOf[FileSourceScanExec])
+    }
+    def unions(df: org.apache.spark.sql.DataFrame): Int =
+      aqe.collect(df.queryExecution.executedPlan) { case u: UnionExec => u }.size
+    val kv = (0L until 6L).map(k => (k, s"v$k")).toDF("k", "v")
+
+    // current and time travel: one scan per read version
+    val tbl = freshDir("plan") + "/t"
+    DeltaLog.append(spark, tbl, kv.filter($"k" < 3).repartition(2))
+    DeltaLog.append(spark, tbl, kv.filter($"k" >= 3).repartition(2))
+    assert(deltaScans(DeltaLog.read(spark, tbl)) == 1)
+    assert(DeltaLog.read(spark, tbl, 0L).count() == 3)
+    assert(deltaScans(DeltaLog.read(spark, tbl, 0L)) == 1)
+    assert(deltaScans(DeltaLog.read(spark, tbl, 0L).unionAll(DeltaLog.read(spark, tbl))) == 2)
+    // change feed: one scan per version in the window
+    val feed = DeltaLog.changesSince(spark, tbl, since = -1L)
+    assert(feed.count() == 6 && deltaScans(feed) == 2)
+
+    // partitioned: one scan whatever the partition count, pruned in the
+    // index, with no per-partition union
+    val ptbl = freshDir("plan-part") + "/t"
+    DeltaLog.append(spark, ptbl, kv.withColumn("p", ($"k" % 3).cast("string")),
+      partitionBy = Seq("p"))
+    val pa = DeltaLog.read(spark, ptbl).filter($"p" === "1")
+    assert(pa.count() == 2 && deltaScans(pa) == 1 && unions(pa) == 0)
+    assert(unions(DeltaLog.read(spark, ptbl)) == 0)
+
+    // column-mapped
+    val (mtbl, _) = columnMappedTable("plan-colmap")
+    assert(deltaScans(DeltaLog.read(spark, mtbl)) == 1)
+
+    // deletion vectors: the mask sits on the one scan
+    val dtbl = freshDir("plan-dv") + "/t"
+    DeltaLog.append(spark, dtbl, kv.repartition(1))
+    DeltaLog.deleteWhereDv(spark, dtbl, $"k" === 4L)
+    val masked = DeltaLog.read(spark, dtbl)
+    assert(masked.count() == 5 && deltaScans(masked) == 1)
+
+    // streaming tail batch: the micro-batch's relation is the same
+    // log-indexed one (a streaming frame has no executable plan here,
+    // so its analyzed leaves are checked)
+    val tailBatch = new DeltaStreamSource(spark, tbl, ignoreChanges = false)
+      .getBatch(Some(org.apache.spark.sql.execution.streaming.runtime.LongOffset(0L)),
+        org.apache.spark.sql.execution.streaming.runtime.LongOffset(1L))
+    val rels = tailBatch.queryExecution.analyzed.collectLeaves()
+    assert(rels.nonEmpty && rels.forall {
+      case LogicalRelation(r: HadoopFsRelation, _, _, streaming, _) =>
+        streaming && r.location.isInstanceOf[DeltaFileIndex]
+      case _ => false
+    }, s"tail batch leaves: $rels")
+  }
+
+  test("read keeps an appended NULL visible under a column the log declares NOT NULL") {
+    import spark.implicits._
+    val tbl = freshDir("nullable") + "/t"
+    // a primitive column is NOT NULL in the log's schema...
+    DeltaLog.append(spark, tbl, Seq(1L, 2L).toDF("k"))
+    assert(!DeltaLog.liveAdds(spark, tbl)._3("k").nullable)
+    // ...and an Option column of the same type passes the evolution
+    // gate, which compares names and types only
+    DeltaLog.append(spark, tbl, Seq(Some(3L), None).toDF("k"))
+    val df = DeltaLog.read(spark, tbl)
+    assert(df.filter(col("k").isNull).count() == 1)
+    assert(df.schema("k").nullable)
+    assert(df.count() == 4)
   }
 }
