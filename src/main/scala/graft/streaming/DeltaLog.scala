@@ -1112,6 +1112,8 @@ object DeltaLog {
       val st = replay(spark, table, -1L)
       require(st.partitionColumns.isEmpty,
         s"optimize on partitioned table $table unsupported (adds would drop partitionValues)")
+      require(st.columnMappingMode == "none",
+        s"optimize on column-mapped $table unsupported (the rewrite would write logical names)")
       val live = st.live.keys.toSeq
       if (live.size <= targetFiles) return (live.size, live.size)
       val scratch = writeScratch(spark, table,
@@ -1273,6 +1275,8 @@ object DeltaLog {
       s"deleteWhere on partitioned $table unsupported — partition-aligned " +
         "deletes are metadata-only via deletePartitions; row-level deletes " +
         "inside partitions would need per-partition rewrite plumbing")
+    require(st.columnMappingMode == "none",
+      s"deleteWhere on column-mapped $table unsupported (the rewrite would write logical names)")
     if (st.live.isEmpty) return (st.version, 0, 0)
     val touched = touchedFiles(spark, table, withFilePath(spark, table, st).filter(predicate))
     if (touched.isEmpty) return (st.version, 0, 0)
@@ -1492,6 +1496,17 @@ object DeltaLog {
         return (latestVersion(spark, table), 0)
     }
     val exists = latestVersion(spark, table) >= 0
+    // None: merge-into-missing = create
+    val st = if (exists) Some(replay(spark, table, -1L)) else None
+    st.foreach { s =>
+      require(s.partitionColumns.isEmpty,
+        s"merge on partitioned $table unsupported (same plumbing as deleteWhere)")
+      require(s.columnMappingMode == "none",
+        s"merge on column-mapped $table unsupported (the rewrite would write logical names)")
+      require(s.schema.fieldNames.sameElements(source.schema.fieldNames),
+        s"merge source columns ${source.schema.fieldNames.mkString(",")} != " +
+          s"table ${s.schema.fieldNames.mkString(",")} (whole-row upsert)")
+    }
     // Materialize the source once when merging into an EXISTING table
     // (Delta's own MERGE does the same — `materializeSource`): the plan
     // below consumes it three times — distinct keys for the touched-file
@@ -1504,15 +1519,6 @@ object DeltaLog {
     // Scratch.release frees the blocks between queries. The create path
     // (!exists) reads the source exactly once and skips the persist.
     val src = if (exists) graft.operators.Scratch.persist(source) else source
-    // None: merge-into-missing = create
-    val st = if (exists) Some(replay(spark, table, -1L)) else None
-    st.foreach { s =>
-      require(s.partitionColumns.isEmpty,
-        s"merge on partitioned $table unsupported (same plumbing as deleteWhere)")
-      require(s.schema.fieldNames.sameElements(source.schema.fieldNames),
-        s"merge source columns ${source.schema.fieldNames.mkString(",")} != " +
-          s"table ${s.schema.fieldNames.mkString(",")} (whole-row upsert)")
-    }
     val schema = st.fold(source.schema)(_.schema)
     val srcKeys = src.select(keyCols.map(col): _*).distinct()
     val touched = st.filter(_.live.nonEmpty).fold(Seq.empty[String]) { s =>

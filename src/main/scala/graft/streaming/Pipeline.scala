@@ -484,8 +484,9 @@ object Pipeline {
   /** LOG-LEVEL DATA SKIPPING, proven as an oracle query: four
     * range-disjoint one-file appends record per-file o_orderkey
     * min/max in their add actions' stats ([[DeltaLog.append]]'s
-    * `statsCols`); a range read then selects files via
-    * [[DeltaLog.pruneFiles]] — touching 1 of 4 files — and the
+    * `statsCols`); a range read of [[DeltaLog.read]] then skips files
+    * on those stats — touching 1 of 4 files, the count
+    * [[DeltaLog.pruneFiles]] reports by the same rule — and the
     * aggregate over the pruned scan must equal the oracle's aggregate
     * over the full table under the same predicate. This is the
     * table-format half of data skipping (Delta/Iceberg file
@@ -510,7 +511,7 @@ object Pipeline {
         },
       statsCols = Seq("o_orderkey"))
     val (kept, total) = DeltaLog.pruneFiles(spark, tbl, Map("o_orderkey" -> (q + 1, 2 * q)))
-    spark.read.parquet(kept.map(DeltaLog.resolvedPath(tbl, _)): _*)
+    DeltaLog.read(spark, tbl)
       .filter(col("o_orderkey") > q && col("o_orderkey") <= 2 * q)
       .agg(count(lit(1)).as("n_rows"), sum(expr(s"o_orderkey % $P")).as("key_check"))
       .select(col("n_rows"), col("key_check"),
@@ -532,7 +533,8 @@ object Pipeline {
     * oracle recomputes — one file per non-empty slab, each committed
     * with per-file min/max stats on BOTH dimensions
     * ([[DeltaLog.append]]'s multi-column `statsCols`). A 2-D range read
-    * (the middle half of each dimension) then plans its scan via
+    * (the middle half of each dimension) then skips files on those
+    * stats in [[DeltaLog.read]]'s scan, counted by
     * [[DeltaLog.pruneFiles]]: because z-ordering gives every slab a
     * tight bounding box in both dimensions, the query box intersects
     * only a fraction of the files — which the oracle DERIVES (not
@@ -568,7 +570,7 @@ object Pipeline {
     val (dLo, dHi) = (dl + (dh - dl) / 4, dl + (dh - dl) * 3 / 4)
     val (kept, total) = DeltaLog.pruneFiles(spark, tbl,
       Map("o_custkey" -> (ckLo, ckHi), "d" -> (dLo, dHi)))
-    spark.read.parquet(kept.map(DeltaLog.resolvedPath(tbl, _)): _*)
+    DeltaLog.read(spark, tbl)
       .filter(col("o_custkey").between(ckLo, ckHi) && col("d").between(dLo, dHi))
       .agg(count(lit(1)).as("n_rows"),
         sum(expr(s"o_orderkey % $P")).as("key_check"),

@@ -938,6 +938,26 @@ class DeltaLogSpec extends SparkSpec {
     assert(ep.getMessage.contains("column-mapped AND partitioned"))
   }
 
+  test("rewrites of a column-mapped table refuse: optimize, deleteWhere and merge leave its rows unchanged") {
+    import spark.implicits._
+    val (tbl, _) = columnMappedTable("colmap-rewrite")
+    def rows = DeltaLog.read(spark, tbl).orderBy("k").collect()
+      .map(r => (r.getLong(0), r.getString(1))).toSeq
+    val before = rows
+    assert(before == Seq((1L, "a"), (2L, "b"), (3L, "c")))
+    val v0 = DeltaLog.latestVersion(spark, tbl)
+    val eo = intercept[IllegalArgumentException](DeltaLog.optimize(spark, tbl))
+    assert(eo.getMessage.contains("column-mapped"))
+    val ed = intercept[IllegalArgumentException](
+      DeltaLog.deleteWhere(spark, tbl, org.apache.spark.sql.functions.col("k") === 2L))
+    assert(ed.getMessage.contains("column-mapped"))
+    val em = intercept[IllegalArgumentException](
+      DeltaLog.merge(spark, tbl, Seq((2L, "z")).toDF("k", "v"), Seq("k")))
+    assert(em.getMessage.contains("column-mapped"))
+    assert(DeltaLog.latestVersion(spark, tbl) == v0)
+    assert(rows == before)
+  }
+
   test("every read shape plans its table files through DeltaFileIndex: one FileSourceScanExec per read, no listing, no per-partition union") {
     import spark.implicits._
     import org.apache.spark.sql.execution.{FileSourceScanExec, LeafExecNode, LocalTableScanExec, UnionExec}
