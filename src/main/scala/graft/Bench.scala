@@ -62,7 +62,7 @@ package graft
   * Round 12 (r11 verdict item 1: wall was 91% of the driver budget on
   * a GOOD host — one bad window re-creates the r6 rc-124 death or
   * silently strips the falsifiability passes): pass 2's general tier
-  * previously had UNBOUNDED appetite ("re-measure expensive-first
+  * previously had an UNBOUNDED goal ("re-measure expensive-first
   * until 85% of budget"), so every protocol saving was re-spent by
   * design and elapsed always tracked the budget. The run now has a
   * FINITE GOAL it can complete under budget — the falsifiability

@@ -102,6 +102,15 @@ object Fs {
         "'succeed' and one commit would vanish — use a transactional table format there")
   }
 
+  /** Names of the directories directly under `path`; empty when the
+    * path is absent. */
+  def listDirs(spark: SparkSession, path: String): Seq[String] = {
+    val (fs, p) = fsOf(path, conf(spark))
+    val sts = try fs.listStatus(p)
+      catch { case _: java.io.FileNotFoundException => Array.empty[FileStatus] }
+    sts.toSeq.filter(_.isDirectory).map(_.getPath.getName)
+  }
+
   /** [[listFileStats]] without the modification times. */
   def listFiles(spark: SparkSession, path: String, keep: String => Boolean): Seq[(String, Long)] =
     listFileStats(spark, path, keep).map { case (f, len, _) => (f, len) }

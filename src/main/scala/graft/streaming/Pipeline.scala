@@ -5,7 +5,6 @@ import java.nio.file.Paths
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Schemas
 import graft.Session.pipeDir
 import graft.functions.Text
 import graft.operators.Journeys
@@ -16,15 +15,15 @@ import graft.sources.Tables
   * workflow.py:12-23), run as oracle-verified queries:
   *
   *  - `pipe_ingest_roundtrip`: two [[Synthesize]] generation cycles
-  *    (disjoint key slices) each drained by the [[Ingest]] streaming
-  *    query into Delta tables, plus a third drain with nothing staged
-  *    (the idempotent no-op), then a checksum summary of the final
-  *    tables. Every transform in the synthesis is content-addressed
+  *    (disjoint key slices) each drained by [[Ingest.drain]] into Delta
+  *    tables, plus a third drain of batch 1 staged again (its `txn` is
+  *    in the log, so it commits nothing), then a checksum summary of the
+  *    final tables. Every transform in the synthesis is content-addressed
   *    (md5 keys, md5-uniform noise, fixed affine windows), so DuckDB
   *    recomputes the exact expected state from the fixture tables alone:
-  *    a hash match proves the JSON encode → stage → discover → stream →
+  *    a hash match proves the JSON encode → stage → discover → read →
   *    append → commit path end-to-end, including exactly-once across
-  *    the three runs (a duplicated or dropped file would shift
+  *    the three drains (a duplicated or dropped batch would shift
   *    `n_rows`/checksums).
   *  - `pipe_compact_roundtrip`: appends a 16-file Delta table,
   *    compacts it to 2 files with [[DeltaLog.optimize]], and checksums
@@ -65,9 +64,10 @@ object Pipeline {
       () => { DeltaLog.append(spark, tbl, df, statsCols); () }))
 
   /** Run independent driver-coordinated jobs concurrently (each is a
-    * self-contained Spark write + commit); used by the Delta staging
-    * passes above and below. */
-  private def concurrently(jobs: Seq[() => Unit]): Unit = {
+    * self-contained Spark write + commit) and wait for all of them: the
+    * Delta staging passes here, [[Synthesize.cycle]]'s per-table
+    * stagings and [[Ingest.drain]]'s per-table drains. */
+  private[streaming] def concurrently(jobs: Seq[() => Unit]): Unit = {
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
     implicit val ec: ExecutionContext = ExecutionContext.global
@@ -92,24 +92,16 @@ object Pipeline {
     wipe(spark, base)
     val staging = s"$base/staging"
     val tables = s"$base/tables"
-    val ckpt = s"$base/ckpt"
-    val schemas = Map(
-      "orders" -> Schemas.stagedOrders,
-      "lineitem" -> Schemas.stagedLineitem,
-      "customer" -> Schemas.customer)
 
     Synthesize.cycle(spark, sfDir, staging, tables, batchId = 0, nBatches = 2)
-    Ingest.drainAll(spark, staging, tables, ckpt, schemas)
-    // second cycle: facts grow, the static dim is skipped (T5)
-    Synthesize.cycle(spark, sfDir, staging, tables, batchId = 1, nBatches = 2)
-    Ingest.drainAll(spark, staging, tables, ckpt, schemas)
-    // third drain with nothing staged: the idempotent no-op (T3/T5).
-    // The no-op property is per-stream and the three streams are the
-    // same machinery, so ONE table's no-op drain proves it (r12,
-    // bench-budget item: was all three — two stream lifecycles of pure
-    // fixed cost per run)
-    Ingest.drainAll(spark, staging, tables, ckpt,
-      Map("orders" -> Schemas.stagedOrders))
+    Ingest.drain(spark, staging, tables, PipelineMain.schemas)
+    // second cycle: facts grow, the static dim is skipped (T5);
+    // staged and drained twice: the second drain finds batch 1's txn in
+    // each log and commits nothing (T3)
+    for (_ <- 0 until 2) {
+      Synthesize.cycle(spark, sfDir, staging, tables, batchId = 1, nBatches = 2)
+      Ingest.drain(spark, staging, tables, PipelineMain.schemas)
+    }
 
     val ord = DeltaLog.read(spark, s"$tables/orders")
     val li = DeltaLog.read(spark, s"$tables/lineitem")
@@ -1730,7 +1722,7 @@ object Pipeline {
     * fact rows from the [[Synthesize.dbgenOrders]]/[[Synthesize.dbgenLineitem]]
     * generators carrying dbgen's value skew (sparse custkeys, Zipf-like
     * part popularity, ship dates correlated to order dates) — staged as
-    * JSON-lines, drained through the streaming ingest, and checksummed.
+    * JSON-lines, drained through [[Ingest.drain]], and checksummed.
     * Every generated value is a pure hash of the row id, so DuckDB
     * REGENERATES the entire synthetic corpus (row_number over the
     * fixture's orders supplies ids 1..N) and recomputes the post-ingest
@@ -1745,14 +1737,9 @@ object Pipeline {
     wipe(spark, base)
     val staging = s"$base/staging"
     val tables = s"$base/tables"
-    val ckpt = s"$base/ckpt"
-    val schemas = Map(
-      "orders" -> Schemas.stagedOrders,
-      "lineitem" -> Schemas.stagedLineitem,
-      "customer" -> Schemas.customer)
     Synthesize.cycle(spark, sfDir, staging, tables, batchId = 0, nBatches = 1,
       fidelity = true)
-    Ingest.drainAll(spark, staging, tables, ckpt, schemas)
+    Ingest.drain(spark, staging, tables, PipelineMain.schemas)
     val ord = DeltaLog.read(spark, s"$tables/orders")
     val li = DeltaLog.read(spark, s"$tables/lineitem")
     val mod3 = ord.agg(

@@ -3,24 +3,23 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions.{col, lit, row_number}
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.Schemas
 
 /** Runnable end-to-end pipeline — the `workflow.py` equivalent
   * (reference workflow.py:12-31): per cycle, GENERATE staged data →
-  * INGEST it through the streaming drain → every `compactEvery` cycles
-  * COMPACT the tables → REDUCE (the flagship Q3 variant per market
-  * segment) → SERVE the results as one parquet file per segment.
+  * INGEST it ([[Ingest.drain]]: one Delta commit per staged batch) →
+  * every `compactEvery` cycles COMPACT the tables → REDUCE (the flagship
+  * Q3 variant per market segment) → SERVE the results as one parquet
+  * file per segment.
   *
   * The reference runs these as four Prefect schedules (15 min / 15 min /
   * 6 h / 24 h) serialized by a shared FileLock
   * (pipeline/settings.py:37-40). Both forms exist here:
-  *  - [[runPipeline]] drives N cycles back-to-back with
-  *    `Trigger.AvailableNow` standing in for the wall-clock cadence (T1);
-  *  - [[runLive]] is the long-lived form: ingestion runs as resident
-  *    `Trigger.ProcessingTime` streaming queries while the generator
-  *    stages batches on a wall-clock cadence.
+  *  - [[runPipeline]] drives N cycles back-to-back, standing in for the
+  *    wall-clock cadence (T1);
+  *  - [[runLive]] is the long-lived form: it stages and drains one batch
+  *    per wall-clock tick while [[Serve]] answers throughout.
   * Every maintenance step (generate+drain cycle, compaction, reduce)
   * holds the workDir's [[PipelineLock]], so overlapping invocations —
   * threads or separate JVMs — serialize instead of interleaving
@@ -35,7 +34,9 @@ object PipelineMain {
 
   private val Segments = Seq("AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD", "MACHINERY")
 
-  private def schemas = Map(
+  /** The staged tables and their schemas: what [[Synthesize.cycle]]
+    * stages and [[Ingest.drain]] reads. */
+  private[streaming] val schemas = Map(
     "orders" -> Schemas.stagedOrders,
     "lineitem" -> Schemas.stagedLineitem,
     "customer" -> Schemas.customer)
@@ -46,9 +47,9 @@ object PipelineMain {
     * existing table's live files bin-pack into ceil(live bytes / 128 MB)
     * files in one `dataChange=false` commit ([[DeltaLog.optimize]]),
     * then [[DeltaLog.vacuum]] at retention 0 deletes what the rewrite
-    * retired, plus any orphan a killed writer left. The checkpoints and
-    * the staged tail stay: a drain resumes on the same log and
-    * `cleanSource` retires the tail. Caller holds the pipeline lock. */
+    * retired, plus any orphan a killed writer left. Staging is not
+    * touched: every drain retires its batches as it commits them.
+    * Caller holds the pipeline lock. */
   private def compact(spark: SparkSession, tables: String, names: Seq[String],
                       beforeCommit: () => Unit = () => ()): Unit =
     names.foreach { t =>
@@ -80,8 +81,7 @@ object PipelineMain {
         if (live)
           // in live mode the service is up DURING ingestion, republishing
           // every compactEvery batches — the resident deployment form
-          runLive(spark, sfDir, workDir, nBatches = nCycles,
-            cadenceMs = 2000L, processingTimeMs = 500L,
+          runLive(spark, sfDir, workDir, nBatches = nCycles, cadenceMs = 2000L,
             serve = wantServe, publishEvery = compactEvery, servePort = servePort)
         else {
           runPipeline(spark, sfDir, workDir, nCycles, compactEvery)
@@ -111,8 +111,8 @@ object PipelineMain {
     * reference pipeline/preprocess.py:22-27) as a plain combinator. A
     * transient failure (FS hiccup, interrupted drain) heals without
     * manual restart BECAUSE every retried unit is idempotent: staging
-    * re-writes the same content-addressed files, drains are
-    * exactly-once against their table's `txn` watermark, compaction
+    * re-writes the same content-addressed batch, drains are
+    * exactly-once against each batch's `txn` in the table's log, compaction
     * re-reads the live set — so a half-done attempt plus a full retry
     * equals one clean run (a dead attempt's orphans are vacuum's).
     * After `maxAttempts` the last failure propagates (fail-loud, not
@@ -152,13 +152,12 @@ object PipelineMain {
                 beforeCompactCommit: () => Unit = () => ()): Unit = {
     val staging = s"$workDir/staging"
     val tables = s"$workDir/tables"
-    val ckpt = s"$workDir/ckpt"
     for (cycle <- batchIds) {
       withRetry(s"cycle $cycle") {
         PipelineLock.withLock(lockFile(workDir)) {
           Synthesize.cycle(spark, sfDir, staging, tables, batchId = cycle, nBatches = nBatches)
           chaos(cycle)
-          Ingest.drainAll(spark, staging, tables, ckpt, schemas)
+          Ingest.drain(spark, staging, tables, schemas)
           if ((cycle + 1) % compactEvery == 0)
             compact(spark, tables, Seq("customer"), beforeCompactCommit)
         }
@@ -250,73 +249,39 @@ object PipelineMain {
   }
 
   /** Long-lived wall-clock mode (the deployment form of the reference's
-    * 15-minute schedules): resident `Trigger.ProcessingTime` ingestion
-    * queries discover and commit staged batches as they appear, while
-    * the generator stages a batch every `cadenceMs` under the lock.
-    * After `nBatches` the streams stop gracefully and one
-    * `AvailableNow` mop-up drain pins the deterministic end state
-    * (everything staged is committed), then compact + reduce + serve.
-    * Exactly-once holds throughout — the resident queries and the
-    * mop-up share the same checkpoints.
+    * 15-minute schedules): every `cadenceMs` one batch is staged and
+    * drained under the lock ([[runCycles]], no mid-run compaction), then
+    * compact + reduce + serve after `nBatches`.
     *
     * `serve = true` starts the [[Serve]] HTTP layer BEFORE the loop
     * (health answers "waiting" until the first publish) and returns it
     * running — the resident deployment form: the service is up while
-    * ingestion streams and reduce republishes race underneath it, and
-    * its generation-keyed cache carries readers across each republish
-    * swap. `publishEvery = k` re-runs the reduce after every k-th
-    * staged batch (under the lock, against whatever the resident
-    * streams have committed so far — the reference's independent
-    * 15-min ingest / 24-h reduce schedules compressed onto one
-    * cadence). Caller stops the returned server. */
+    * ingestion and reduce republishes run underneath it, and its
+    * generation-keyed cache carries readers across each republish swap.
+    * `publishEvery = k` re-runs the reduce after every k-th batch (under
+    * the lock — the reference's independent 15-min ingest / 24-h reduce
+    * schedules compressed onto one cadence). Caller stops the returned
+    * server. */
   def runLive(spark: SparkSession, sfDir: String, workDir: String,
-              nBatches: Int, cadenceMs: Long, processingTimeMs: Long,
+              nBatches: Int, cadenceMs: Long,
               serve: Boolean = false, publishEvery: Int = 0,
               servePort: Int = 0, onServe: Serve => Unit = _ => ()): Option[Serve] = {
-    val staging = s"$workDir/staging"
-    val tables = s"$workDir/tables"
-    val ckpt = s"$workDir/ckpt"
-    PipelineLock.withLock(lockFile(workDir)) {
-      schemas.keys.foreach(t => Fs.mkdirs(spark, s"$staging/$t"))
-    }
     // supervised (r13): runLive is the resident deployment form, so its
     // service carries the watchdog — a dead listener redeploys on the
-    // same port while ingestion streams continue (reference
-    // dashboard.py:52-61's health-check + redeploy loop)
+    // same port while ingestion continues (reference dashboard.py:52-61's
+    // health-check + redeploy loop)
     val srv = if (serve) Some(Serve.start(spark, s"$workDir/results", Segments, servePort,
                  watchdogMs = 500L))
               else None
     srv.foreach(onServe) // hand the running server out BEFORE the loop (test seam / supervisor registration)
-    val queries = schemas.map { case (t, s) =>
-      Ingest.streamTable(spark, staging, tables, ckpt, t, s,
-        Trigger.ProcessingTime(processingTimeMs))
-    }.toSeq
-    try {
-      for (b <- 0 until nBatches) {
-        PipelineLock.withLock(lockFile(workDir)) {
-          Synthesize.cycle(spark, sfDir, staging, tables, batchId = b, nBatches = nBatches)
-        }
-        println(s"[pipeline] live: staged batch $b")
-        Thread.sleep(cadenceMs)
-        if (publishEvery > 0 && (b + 1) % publishEvery == 0 &&
-            schemas.keys.forall(t => DeltaLog.latestVersion(spark, s"$tables/$t") >= 0)) {
-          // mid-run republish against the streams' committed state so
-          // far; the lock serializes it with the generator, and Serve's
-          // cache carries readers across the swap (skipped while the
-          // resident streams haven't committed all tables yet)
-          PipelineLock.withLock(lockFile(workDir))(publishResults(spark, workDir))
-          println(s"[pipeline] live: republished results after batch $b")
-        }
+    for (b <- 0 until nBatches) {
+      if (b > 0) Thread.sleep(cadenceMs)
+      runCycles(spark, sfDir, workDir, Seq(b), nBatches, compactEvery = Int.MaxValue)
+      if (publishEvery > 0 && (b + 1) % publishEvery == 0) {
+        // mid-run republish; Serve's cache carries readers across the swap
+        PipelineLock.withLock(lockFile(workDir))(publishResults(spark, workDir))
+        println(s"[pipeline] live: republished results after batch $b")
       }
-    } finally {
-      queries.foreach(_.stop())
-      queries.foreach { q =>
-        try q.awaitTermination()
-        catch { case _: org.apache.spark.sql.streaming.StreamingQueryException => () }
-      }
-    }
-    PipelineLock.withLock(lockFile(workDir)) {
-      Ingest.drainAll(spark, staging, tables, ckpt, schemas)
     }
     finishAndServe(spark, sfDir, workDir)
     srv

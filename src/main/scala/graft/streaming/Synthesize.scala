@@ -140,8 +140,7 @@ object Synthesize {
     * Narrow fixture scans are spread to `defaultParallelism` partitions
     * first, so the md5 and affine maps run on every core, and each
     * relation is coalesced to at most that many partitions: a cycle
-    * writes at most one file per partition and table, never more than
-    * [[Ingest.appetite]], so it drains in one micro-batch per table. */
+    * writes at most one file per partition and table. */
   def staged(spark: SparkSession, sfDir: String, nBatches: Int,
              fidelity: Boolean): (DataFrame, DataFrame) = {
     val tables = Seq("orders", "lineitem") ++
@@ -257,29 +256,32 @@ object Synthesize {
           .as("l_shipdate"))
   }
 
-  /** Write one staged batch as timestamped JSON-lines files into
-    * `stagingDir/<table>/` (K1: append-by-new-file). Spark writes one
-    * file per partition into a scratch dir; the parts are then moved to
-    * flat `{table}_{batch}_{part}.json` names — the reference's
-    * `{table}_{isotime}.json` naming (reference pipeline/data.py:110-121),
-    * with batch id standing in for wall-clock time (determinism). */
+  /** Write one staged batch as timestamped JSON-lines files and publish
+    * it as `stagingDir/<table>/b<batchId>` (K1: append-by-new-file).
+    * Spark writes one file per partition into `stagingDir/.tmp_<table>_<batchId>`;
+    * the parts are renamed there to `<table>_b<batchId>_p<i>.json` — the
+    * reference's `{table}_{isotime}.json` naming (reference
+    * pipeline/data.py:110-121), with batch id standing in for wall-clock
+    * time (determinism) — and the directory is then renamed into place
+    * in one step, so a batch directory [[Ingest.drain]] can see is
+    * complete, and a death mid-write leaves only the `.tmp_` directory,
+    * which no drain reads and the next staging of the batch overwrites.
+    * A batch whose directory exists is left as it is: its content is a
+    * pure function of the batch id. */
   def writeStaged(df: DataFrame, stagingDir: String, table: String, batchId: Int): Unit = {
     val spark = df.sparkSession
-    val tableDir = s"$stagingDir/$table"
-    Fs.mkdirs(spark, tableDir)
+    val dst = s"$stagingDir/$table/b$batchId"
+    if (Fs.exists(spark, dst)) return
     val tmp = s"$stagingDir/.tmp_${table}_$batchId"
     df.write.mode("overwrite")
       .option("timestampFormat", TsFmt)
       .json(tmp)
     val parts = Fs.listFiles(spark, tmp, _.endsWith(".json")).map(_._1).sorted
     parts.zipWithIndex.foreach { case (p, i) =>
-      val dst = f"$tableDir/${table}_b${batchId}_p$i%04d.json"
-      Fs.deleteIfExists(spark, dst) // idempotent re-stage (Hadoop rename won't overwrite)
-      Fs.renameOrFail(spark, p, dst) // unchecked, a false here + the tmp
-      // cleanup below would silently drop this part's rows from the batch
+      Fs.renameOrFail(spark, p, f"$tmp/${table}_b${batchId}_p$i%04d.json")
     }
-    // scrap the _SUCCESS marker + dir
-    Fs.deleteRec(spark, tmp)
+    Fs.mkdirs(spark, s"$stagingDir/$table")
+    Fs.renameOrFail(spark, tmp, dst)
   }
 
   /** Synthesize one generation cycle into the staging dir: the two fact
@@ -301,30 +303,23 @@ object Synthesize {
             batchId: Int, nBatches: Int, fidelity: Boolean = false): Unit = {
     val (ord, li) = staged(spark, sfDir, nBatches, fidelity)
     def batch(df: DataFrame) = df.filter(col(BatchCol) === batchId).drop(BatchCol)
-    // staged = staged FILES present (live mode pre-creates the staging
-    // roots); ingested = the table's log has a commit (a writer's scratch
-    // dir makes the table dir before any commit, so bare-directory
-    // existence would skip the static dim forever)
+    // staged = a published batch dir; ingested = the table's log has a
+    // commit (a writer's scratch dir makes the table dir before any
+    // commit, so bare-directory existence would skip the static dim
+    // forever)
     val custStagedOrIngested =
-      Fs.listFiles(spark, s"$stagingDir/customer", _.endsWith(".json")).nonEmpty ||
+      Fs.listDirs(spark, s"$stagingDir/customer").nonEmpty ||
         DeltaLog.latestVersion(spark, s"$tablesDir/customer") >= 0
     // The per-table stagings are INDEPENDENT Spark jobs into disjoint
     // directories (the reference's O3 ordering constraint binds the
     // keymap-before-lineitem GENERATION, which here is content-addressed
     // md5 — no cross-table data dependency exists at staging time), so
     // run them concurrently instead of paying three serial job
-    // latencies per cycle (r15, guide §5: the driver coordinates, the
-    // executors already have idle cores at this stage).
-    locally {
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration.Duration
-      implicit val ec: ExecutionContext = ExecutionContext.global
-      val jobs = Seq(
-        () => writeStaged(batch(ord), stagingDir, "orders", batchId),
-        () => writeStaged(batch(li), stagingDir, "lineitem", batchId)) ++
-        (if (custStagedOrIngested) Seq.empty[() => Unit]
-         else Seq(() => writeStaged(Tables.customer(spark, sfDir), stagingDir, "customer", batchId)))
-      jobs.map(j => Future(j())).foreach(Await.result(_, Duration.Inf))
-    }
+    // latencies per cycle.
+    Pipeline.concurrently(Seq(
+      () => writeStaged(batch(ord), stagingDir, "orders", batchId),
+      () => writeStaged(batch(li), stagingDir, "lineitem", batchId)) ++
+      (if (custStagedOrIngested) Nil
+       else Seq(() => writeStaged(Tables.customer(spark, sfDir), stagingDir, "customer", batchId))))
   }
 }

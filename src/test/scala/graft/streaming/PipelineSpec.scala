@@ -11,7 +11,7 @@ import graft.sources.Tables
 
 /** End-to-end pipeline behavior the oracle's checksums don't pin down at
   * the file level: incremental append counts, idempotent re-drain,
-  * source-file retirement, static-dim skip, and the commit shape of
+  * staged-batch retirement and crash windows, static-dim skip, and the commit shape of
   * ingestion and compaction on the Delta log. */
 class PipelineSpec extends SparkSpec {
 
@@ -33,57 +33,97 @@ class PipelineSpec extends SparkSpec {
   test("ingest: incremental batches accumulate exactly the fixture row counts; re-drain is a no-op; staged files retire") {
     val root = s"$base/ingest"
     wipe(root)
-    val staging = s"$root/staging"; val tables = s"$root/tables"; val ckpt = s"$root/ckpt"
-    val schemas = Map(
-      "orders" -> Schemas.stagedOrders,
-      "lineitem" -> Schemas.stagedLineitem,
-      "customer" -> Schemas.customer)
+    val staging = s"$root/staging"; val tables = s"$root/tables"
 
     Synthesize.cycle(spark, sf, staging, tables, batchId = 0, nBatches = 2)
     assert(jsonFiles(s"$staging/customer") > 0, "static dim staged on first cycle")
-    Ingest.drainAll(spark, staging, tables, ckpt, schemas)
+    Ingest.drain(spark, staging, tables, PipelineMain.schemas)
+    // K3: a drain retires every batch it commits before it returns
+    assert(jsonFiles(staging) == 0, "the first drain left staged files behind")
     val ordersB0 = table(s"$tables/orders").count()
     val fixtureOrders = Tables.orders(spark, sf).count()
     val evenOrders = Tables.orders(spark, sf).filter(col("o_orderkey") % 2 === 0).count()
     assert(ordersB0 == evenOrders, "first drain should hold exactly the batch-0 slice")
 
     Synthesize.cycle(spark, sf, staging, tables, batchId = 1, nBatches = 2)
-    // (batch-0's customer file may still await the async cleaner here,
-    // so assert specifically that no batch-1 customer file was created)
-    val p = Paths.get(s"$staging/customer")
-    val restaged = if (!Files.exists(p)) 0L
-      else Files.walk(p).filter(f => f.getFileName.toString.contains("_b1_")).count()
-    assert(restaged == 0, "static dim must NOT be re-staged once ingested (T5)")
-    Ingest.drainAll(spark, staging, tables, ckpt, schemas)
+    assert(jsonFiles(s"$staging/customer") == 0, "static dim must NOT be re-staged once ingested (T5)")
+    Ingest.drain(spark, staging, tables, PipelineMain.schemas)
+    assert(jsonFiles(staging) == 0, "the second drain left staged files behind")
     assert(table(s"$tables/orders").count() == fixtureOrders)
     assert(table(s"$tables/lineitem").count() == Tables.lineitem(spark, sf).count())
     assert(table(s"$tables/customer").count() == Tables.customer(spark, sf).count())
 
     // idempotent no-op drain: nothing staged, nothing appended
-    Ingest.drainAll(spark, staging, tables, ckpt, schemas)
+    Ingest.drain(spark, staging, tables, PipelineMain.schemas)
     assert(table(s"$tables/orders").count() == fixtureOrders,
       "re-drain with empty staging duplicated rows — exactly-once broken")
+  }
 
-    // K3 retirement: FileStreamSource deletes a batch's files when a
-    // SUBSEQUENT batch commits (and the cleaner is async) — so batch-0
-    // fact files must be gone after the batch-1 drain, while the last
-    // committed batch per table may leave one tail file until the next
-    // cycle. Poll for the async cleaner, then assert exactly that.
-    def b0FactFiles(): Long = {
-      val p = Paths.get(staging)
-      if (!Files.exists(p)) 0L
-      else {
-        val s = Files.walk(p)
-        try s.filter { f =>
-          val n = f.getFileName.toString
-          n.endsWith(".json") && n.contains("_b0_") && !n.startsWith("customer")
-        }.count() finally s.close()
-      }
+  /** The fact tables' row counts under `root/tables`. */
+  private def factCounts(root: String): (Long, Long) =
+    (table(s"$root/tables/orders").count(), table(s"$root/tables/lineitem").count())
+
+  test("a restarted pipeline re-stages batches 0,1 on one workDir: exact fixture counts, no staged file left") {
+    val root = s"$base/restart"
+    wipe(root)
+    for (_ <- 0 until 2)
+      PipelineMain.runCycles(spark, sf, root, Seq(0, 1), nBatches = 2, compactEvery = Int.MaxValue)
+    assert(factCounts(root) ==
+      ((Tables.orders(spark, sf).count(), Tables.lineitem(spark, sf).count())),
+      "re-staged batches lost or doubled rows")
+    assert(table(s"$root/tables/customer").count() == Tables.customer(spark, sf).count())
+    assert(jsonFiles(s"$root/staging") == 0, "re-staged batches were never retired")
+  }
+
+  test("staging crash windows: a .tmp_ batch is never ingested; re-staging a present batch leaves it byte-identical") {
+    val root = s"$base/stage-crash"
+    wipe(root)
+    val staging = s"$root/staging"; val tables = s"$root/tables"
+    // a death mid-write: batch 7's scratch dir holds one part, b7 was never published
+    val ord = Synthesize.stagedOrders(Tables.orders(spark, sf), 8)
+      .filter(col(Synthesize.BatchCol) === 7).drop(Synthesize.BatchCol)
+    ord.coalesce(1).write.option("timestampFormat", Synthesize.TsFmt).json(s"$root/one")
+    val part = new java.io.File(s"$root/one").listFiles().filter(_.getName.endsWith(".json")).head
+    Files.createDirectories(Paths.get(s"$staging/.tmp_orders_7"))
+    Files.copy(part.toPath, Paths.get(s"$staging/.tmp_orders_7/orders_b7_p0000.json"))
+    Files.createDirectories(Paths.get(s"$staging/orders"))
+    Ingest.drain(spark, staging, tables, PipelineMain.schemas)
+    assert(DeltaLog.latestVersion(spark, s"$tables/orders") == -1, "a .tmp_ batch was ingested")
+    assert(jsonFiles(s"$staging/.tmp_orders_7") == 1)
+
+    // re-staging a present batch dir touches none of its files
+    Synthesize.writeStaged(ord, staging, "orders", 3)
+    val b3 = Paths.get(s"$staging/orders/b3")
+    def snapshot(): Map[String, (Seq[Byte], Long)] = {
+      val s = Files.list(b3)
+      try s.toArray.map(_.asInstanceOf[java.nio.file.Path]).map { f =>
+        f.getFileName.toString -> ((Files.readAllBytes(f).toSeq, Files.getLastModifiedTime(f).toMillis))
+      }.toMap finally s.close()
     }
-    val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-    while (b0FactFiles() > 0 && System.nanoTime() < deadline) Thread.sleep(250)
-    assert(b0FactFiles() == 0,
-      "batch-0 staged files were not retired after the batch-1 commit")
+    val before = snapshot()
+    assert(before.keys.exists(_.endsWith(".json")), s"b3 holds no staged file: ${before.keys}")
+    Synthesize.writeStaged(ord.limit(1), staging, "orders", 3)
+    assert(snapshot() == before, "re-staging a present batch rewrote it")
+  }
+
+  test("a committed batch dir that reappears (death between commit and delete) is skipped and removed, counts unchanged") {
+    val root = s"$base/commit-then-die"
+    wipe(root)
+    val staging = s"$root/staging"; val tables = s"$root/tables"
+    Synthesize.cycle(spark, sf, staging, tables, batchId = 0, nBatches = 2)
+    // keep a copy of batch 0's orders dir: what a death after its commit leaves
+    val kept = s"$root/kept-b0"
+    Files.createDirectories(Paths.get(kept))
+    Files.list(Paths.get(s"$staging/orders/b0")).forEach(f => Files.copy(f, Paths.get(kept).resolve(f.getFileName)))
+    Ingest.drain(spark, staging, tables, PipelineMain.schemas)
+    val counts = factCounts(root)
+    val versions = DeltaLog.latestVersion(spark, s"$tables/orders")
+    Files.move(Paths.get(kept), Paths.get(s"$staging/orders/b0"))
+    assert(jsonFiles(s"$staging/orders") > 0)
+    Ingest.drain(spark, staging, tables, PipelineMain.schemas)
+    assert(factCounts(root) == counts, "a committed batch was appended twice")
+    assert(DeltaLog.latestVersion(spark, s"$tables/orders") == versions, "the skip committed")
+    assert(!Files.exists(Paths.get(s"$staging/orders/b0")), "the skipped batch dir was not removed")
   }
 
   test("ingest quarantine: a corrupt JSON line is captured, good rows land (PERMISSIVE)") {
@@ -137,6 +177,8 @@ class PipelineSpec extends SparkSpec {
     // the ingested fact tables hold the full fixture after both cycles
     assert(table(s"$root/tables/orders").count() ==
       graft.sources.Tables.orders(spark, sf).count())
+    assert(jsonFiles(s"$root/staging") == 0, "the pipeline left staged files behind")
+    assert(!Files.exists(Paths.get(s"$root/ckpt")), "the pipeline wrote a streaming checkpoint")
   }
 
   private val segments = Seq("AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD", "MACHINERY")
@@ -496,11 +538,10 @@ class PipelineSpec extends SparkSpec {
     }
   }
 
-  test("live mode: resident ProcessingTime ingestion + wall-clock generator lands the full fixture exactly once") {
+  test("live mode: the wall-clock generator stages and drains each batch, landing the full fixture exactly once") {
     val root = s"$base/live"
     wipe(root)
-    PipelineMain.runLive(spark, sf, root, nBatches = 2,
-      cadenceMs = 1500L, processingTimeMs = 300L)
+    PipelineMain.runLive(spark, sf, root, nBatches = 2, cadenceMs = 1500L)
     Seq("AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD", "MACHINERY").foreach { seg =>
       assert(spark.read.parquet(s"$root/results/$seg").count() == 50)
     }
@@ -510,6 +551,8 @@ class PipelineSpec extends SparkSpec {
       assert(DeltaLog.latestVersion(spark, s"$root/tables/$t") >= 0, s"$t is not a Delta table")
       assert(table(s"$root/tables/$t").count() == fixture.count(), s"$t lost or doubled rows")
     }
+    assert(jsonFiles(s"$root/staging") == 0, "live mode left staged files behind")
+    assert(!Files.exists(Paths.get(s"$root/ckpt")), "live mode wrote a streaming checkpoint")
   }
 
   test("live + serve: service is up during ingestion, flips healthy on the mid-run republish, and serves the final generation without restart") {
@@ -519,7 +562,7 @@ class PipelineSpec extends SparkSpec {
     @volatile var failure: Option[Throwable] = None
     val runner = new Thread(() => {
       try PipelineMain.runLive(spark, sf, root, nBatches = 2,
-        cadenceMs = 1500L, processingTimeMs = 300L, serve = true, publishEvery = 1,
+        cadenceMs = 1500L, serve = true, publishEvery = 1,
         onServe = s => srvOpt = Some(s))
       catch { case e: Throwable => failure = Some(e) }
     })
@@ -541,7 +584,7 @@ class PipelineSpec extends SparkSpec {
       try {
         // DURING the run: waiting before the first publish, healthy after
         // the mid-run republish (publishEvery=1 → after batch 0), both
-        // observed while ingestion is still streaming
+        // observed while ingestion is still running
         var sawWaiting = false
         var healthyWhileRunning = false
         while (runner.isAlive && !healthyWhileRunning) {
@@ -566,14 +609,14 @@ class PipelineSpec extends SparkSpec {
     } finally if (runner.isAlive) runner.join(120000)
   }
 
-  test("live + serve: watchdog redeploys a killed server mid-run while streams continue") {
+  test("live + serve: watchdog redeploys a killed server mid-run while ingestion continues") {
     val root = s"$base/live-watchdog"
     wipe(root)
     @volatile var srvOpt: Option[Serve] = None
     @volatile var failure: Option[Throwable] = None
     val runner = new Thread(() => {
       try PipelineMain.runLive(spark, sf, root, nBatches = 2,
-        cadenceMs = 1500L, processingTimeMs = 300L, serve = true, publishEvery = 1,
+        cadenceMs = 1500L, serve = true, publishEvery = 1,
         onServe = s => srvOpt = Some(s))
       catch { case e: Throwable => failure = Some(e) }
     })
@@ -610,7 +653,7 @@ class PipelineSpec extends SparkSpec {
         runner.join(120000)
         assert(!runner.isAlive, "runLive did not complete")
         failure.foreach(throw _)
-        // streams continued through the kill: the full fixture landed
+        // ingestion continued through the kill: the full fixture landed
         // exactly once and the REDEPLOYED server serves the final rows
         assert(table(s"$root/tables/orders").count() ==
           Tables.orders(spark, sf).count(), "kill+redeploy disturbed ingestion")
@@ -743,7 +786,7 @@ class PipelineSpec extends SparkSpec {
       assert(table(s"$tables/$t").count() == fixture.count(), s"$t lost or doubled rows")
     }
     def actions(t: String, v: Long) = DeltaLog.readCommit(spark, t, v).map(DeltaLog.parseJson)
-    // every drained micro-batch is one commit carrying its txn {query id, batch id}
+    // every drained staged batch is one commit carrying its txn {staged-b<id>, 0}
     for (t <- Seq("orders", "lineitem")) {
       val dir = s"$tables/$t"
       val txns = (0L to DeltaLog.latestVersion(spark, dir)).map { v =>
@@ -751,10 +794,10 @@ class PipelineSpec extends SparkSpec {
         assert(tx.size == 1, s"$t v$v: expected one txn action, got $tx")
         (tx.head.get("appId").asText(), tx.head.get("version").asLong())
       }
-      assert(txns.map(_._1).distinct.size == 1 && txns.map(_._2) == txns.indices.map(_.toLong),
-        s"$t: micro-batch commits are not one query's consecutive batches: $txns")
+      assert(txns == Seq("staged-b0" -> 0L, "staged-b1" -> 0L),
+        s"$t: commits are not one per staged batch: $txns")
     }
-    // customer: its one micro-batch, then the healed optimize as the one
+    // customer: its one staged batch, then the healed optimize as the one
     // dataChange=false commit — the dead attempt committed nothing
     val hist = DeltaLog.history(spark, cust)
     assert(hist.map(_._5) == Seq(true, false), s"customer history: $hist")

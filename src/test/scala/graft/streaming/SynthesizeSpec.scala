@@ -13,17 +13,18 @@ import graft.sources.Tables
 /** [[Synthesize.cycle]] stages each batch out of one memoized relation
   * per table ([[Synthesize.staged]]): every batch must hold the rows the
   * per-batch frames (filter the source to the batch, then transform)
-  * hold, in no more files than one micro-batch drains, and the memo must
+  * hold, in one `b<id>` dir of at most `defaultParallelism` files, and the memo must
   * follow its fixture and stay one entry however many cycles run. */
 class SynthesizeSpec extends SparkSpec {
 
   private val base = targetDir("test-synth")
 
-  /** The staged JSON files of batch `b` of one table. */
+  /** The staged JSON files of batch `b` of one table, all in its one
+    * published dir `<table>/b<b>`. */
   private def files(staging: String, table: String, b: Int): Seq[String] =
-    Option(new java.io.File(s"$staging/$table").list()).toSeq.flatten
+    Option(new java.io.File(s"$staging/$table/b$b").list()).toSeq.flatten
       .filter(n => n.startsWith(s"${table}_b${b}_") && n.endsWith(".json"))
-      .map(n => s"$staging/$table/$n")
+      .map(n => s"$staging/$table/b$b/$n")
 
   /** Batch `b` of one staged table, read back the way [[Ingest]] reads it. */
   private def stagedBatch(staging: String, table: String, schema: StructType, b: Int): DataFrame =
@@ -38,7 +39,7 @@ class SynthesizeSpec extends SparkSpec {
   }
 
   for (fidelity <- Seq(false, true))
-    test(s"every staged batch equals its per-batch frame, in at most appetite files (fidelity=$fidelity)") {
+    test(s"every staged batch equals its per-batch frame, in one b<id> dir of at most defaultParallelism files (fidelity=$fidelity)") {
       val root = s"$base/batches-$fidelity"
       Fs.deleteRec(spark, root)
       val staging = s"$root/staging"
@@ -62,8 +63,11 @@ class SynthesizeSpec extends SparkSpec {
           digest(wantLi, Schemas.stagedLineitem), s"batch $b lineitem")
         total += gotOrd._1
         for (t <- Seq("orders", "lineitem")) {
+          val dirs = Fs.listFiles(spark, s"$staging/$t", n => n.contains(s"_b${b}_") && n.endsWith(".json"))
+            .map(f => new org.apache.hadoop.fs.Path(f._1).getParent.getName).distinct
+          assert(dirs == Seq(s"b$b"), s"batch $b of $t staged in $dirs")
           val k = files(staging, t, b).size
-          assert(k >= 1 && k <= Ingest.appetite(spark), s"batch $b staged $k $t files")
+          assert(k >= 1 && k <= spark.sparkContext.defaultParallelism, s"batch $b staged $k $t files")
         }
       }
       assert(total == srcOrd.count(), "the batches do not partition the source orders")

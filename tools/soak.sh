@@ -4,21 +4,22 @@
 # injected at RANDOM wall-clock points — not the crash matrix's chosen
 # windows — then let one clean invocation finish, and compare the final
 # published results and table row counts against an UNINTERRUPTED control
-# run. Every table is a Delta table (txn-idempotent micro-batch appends,
-# OPTIMIZE + VACUUM(0) on finish), so the chaos end-state must be
-# row-identical to the control; any drift (lost rows, duplicated rows,
-# diverging top-50s) fails loud here. The clean finish must also leave
-# each table dir holding exactly its log's live files: no orphan from a
-# killed writer, no `.scratch_*` dir and no `.tmp_*` commit temp.
+# run. Every table is a Delta table (one txn-idempotent commit per
+# staged batch, OPTIMIZE + VACUUM(0) on finish), so the chaos end-state
+# must be row-identical to the control; any drift (lost rows, duplicated
+# rows, diverging top-50s) fails loud here. The clean finish must also
+# leave each table dir holding exactly its log's live files: no orphan
+# from a killed writer, no `.scratch_*` dir and no `.tmp_*` commit temp;
+# and nothing staged: no `.json` under `staging/` and no `staging/.tmp_*`
+# batch a killed generator left half-written.
 #
 # Usage: tools/soak.sh [sfDir] [nBatches] [nKills] [seed] [--live]
 # With --live every run (control, chaos, final) uses PipelineMain's
-# long-lived mode: resident Trigger.ProcessingTime ingestion streams +
-# a 2 s generator cadence, so SIGKILLs land INSIDE micro-batch commits
-# of the resident streams (the r10 crash matrix's windows, hit at
-# random wall-clock points under load) rather than between batch-mode
-# drains. All runs share the mode so end states are compared
-# like-for-like.
+# long-lived mode: one batch staged and drained every 2 s, the reduce
+# republished every 2 batches and Serve up throughout, so SIGKILLs land
+# at random wall-clock points of a paced run (inside a staging, a commit
+# or a republish) rather than of back-to-back batch-mode cycles. All
+# runs share the mode so end states are compared like-for-like.
 # Writes /tmp/soak_report.txt and exits nonzero on any mismatch.
 set -e
 cd "$(dirname "$0")/.."
@@ -140,6 +141,16 @@ for t in ("orders", "lineitem", "customer"):
 for base in (work, ctrl):
     for p in glob.glob(f"{base}/results/.stage*"):
         fails.append(f"{p}: staging dir survived the clean finish")
+
+# every drain deletes the batches it commits or skips, and the final run
+# stages every batch id again (overwriting and publishing any batch a
+# killed run left half-written), so nothing staged survives the finish
+for base in (work, ctrl):
+    staged = glob.glob(f"{base}/staging/**/*.json", recursive=True)
+    if staged:
+        fails.append(f"{base}/staging: {len(staged)} staged .json files survived the clean finish")
+    for p in glob.glob(f"{base}/staging/.tmp_*"):
+        fails.append(f"{p}: half-written batch survived the clean finish")
 
 segs = sorted(os.path.basename(p) for p in glob.glob(f"{ctrl}/results/*"))
 if not segs:
